@@ -4,13 +4,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+/** `snapshot` is the snapshot the epoch committed (None for an
+  * idempotent replay skip). */
 final case class ApplyStats(
     epochId: Long,
     inputRows: Long,
     appliedKeys: Long,
     batchSchemaVersion: Int,
     committed: Boolean,
-    wallMs: Long)
+    wallMs: Long,
+    snapshot: Option[Snapshot] = None)
 
 /** Key-skew controller for the apply reduce: observes each committed
   * epoch's rows-per-key ratio — rows_in_batch from the envelope
@@ -122,17 +125,22 @@ object Apply {
     * `max_by(lsn)` reconstruction, so no per-key lsn guard join is
     * needed at write time.
     *
-    * Job structure per epoch (hot path = ONE full pass over the batch):
-    *  1. max-version probe: `agg(max(schemaVersion))` — column-pruned to
+    * Job structure per epoch (hot path = ONE data pipeline over the
+    * batch, no cache):
+    *  1. era probe: the caller's hint (parquet footer statistics, no
+    *     job); without one, `agg(max(schemaVersion))` — column-pruned to
     *     a single cheap envelope column (needed up front to pick the
     *     era-physical write schema);
-    *  2. reduce -> normalize (JSON parse only on the one-row-per-key
-    *     survivors) -> bucketed delta write, one pipeline with an
-    *     `observe()` side-channel collecting the global source LSN
-    *     range + row count at zero extra passes;
-    *  3. per-bucket lineage: a column-pruned scan of the just-written
-    *     delta files (lsn + bucket partition column only, ~keys rows)
-    *     — records exactly what was applied where. */
+    *  2. scan -> reduce -> DLQ classify -> normalize (JSON parse only on
+    *     the one-row-per-key survivors) -> bucketed delta write, one
+    *     pipeline whose `observe()` side-channels collect the global
+    *     source LSN range + row count, the poison-row count and the
+    *     applied key count / max LSN at zero extra passes;
+    *  3. only when the poison count is above zero: the quarantine write,
+    *     recomputed from the same reduced frame, after the data write
+    *     and before the manifest commit (the upsert's `beforeCommit`);
+    *  4. per-bucket lineage on the audit thread, from the new group's
+    *     parquet footers (see [[Audit]]). */
   def applyEpoch(
       spark: SparkSession,
       table: LakeTable,
@@ -150,8 +158,6 @@ object Apply {
       writer: String = LakeTable.DefaultWriter): ApplyStats = {
     val t0 = System.nanoTime()
 
-    def t() = System.nanoTime()
-    val t1 = t()
     // era probe: prefer the caller-provided hint (parquet footer stats —
     // see ParquetStats.maxInt, zero data scanned); fall back to a
     // column-pruned scan for sources without footer metadata
@@ -159,15 +165,13 @@ object Apply {
       scanProbeCounts.merge(table.root, 1L, (a, b) => a + b)
       rawEvents.agg(coalesce(max(col("schemaVersion")), lit(1))).collect()(0).getInt(0)
     }
-    val tProbe = t()
 
     // high-water mark BEFORE this batch: events at or below it arrived
     // after something newer was already applied — the late-arrival
     // count the reference logs as out-of-range/fallback diagnostics
     // (TimeMultiPoint.py:312-315); LWW neutralizes them, the metric
     // makes them visible
-    val snap0 = table.latest()
-    val prevMaxLsn = snap0.map(_.maxLsn).getOrElse(-1L)
+    val prevMaxLsn = table.latest().map(_.maxLsn).getOrElse(-1L)
     val obs = org.apache.spark.sql.Observation(s"graft-epoch-$epochId-${System.nanoTime()}")
     // per-row schemaVersion is dead weight past this point (the batch
     // normalizes at the scalar batchVersion) — drop it BEFORE the
@@ -182,26 +186,34 @@ object Apply {
       .observe(obs, baseMetrics.head, baseMetrics.tail: _*)
     val useSalt = salted || adaptive.exists(_.engaged)
     val reducedAll = if (useSalt) saltedReduce(envelope) else reduce(envelope)
-    // poison-pill quarantine (opt-in): classify POST-reduce — O(keys),
-    // one extra cached scan; an already-committed epoch (idempotent
-    // replay) skips both the quarantine write and the reduce job, same
-    // fast path as without a DLQ
-    val alreadyCommitted =
-      dlq.isDefined && snap0.exists(_.watermark(writer) >= epochId)
-    val (reduced, dlqCache) = dlq match {
-      case Some(q) if !alreadyCommitted =>
+    // poison-pill quarantine (opt-in): classify POST-reduce — O(keys) —
+    // inside the write pipeline. The poison rows are counted by an
+    // observe() on the write job itself; only when that count is above
+    // zero is the quarantine set written, recomputed from the same
+    // reduced frame, before the manifest commit. A clean epoch (the
+    // common case) pays no extra job and grows no `epoch=` dir, and an
+    // already-committed replay returns from upsert before either write.
+    val (reduced, quarantine) = dlq match {
+      case Some(q) =>
         val typed = rawEvents.schema("after").dataType.isInstanceOf[StructType]
-        val withReason = reducedAll.withColumn("_dlq_reason", q.reasonCol(typed))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // quarantine lands BEFORE the manifest commit: a crash replays
-        // the epoch and overwrites the same deterministic set. Written
-        // ONLY when poison exists — a clean 10^5-epoch stream must not
-        // grow 10^5 empty epoch dirs (the existence probe is a LIMIT 1
-        // on the already-persisted keys-sized frame)
-        val bad = withReason.filter(col("_dlq_reason").isNotNull)
-        if (bad.head(1).nonEmpty) q.write(epochId, bad, batchVersion)
-        (withReason.filter(col("_dlq_reason").isNull).drop("_dlq_reason"), Some(withReason))
-      case _ => (reducedAll, None)
+        val classified = reducedAll.withColumn("_dlq_reason", q.reasonCol(typed))
+        val poisonObs = org.apache.spark.sql.Observation(s"graft-dlq-$epochId-${System.nanoTime()}")
+        val clean = classified
+          .observe(poisonObs, count(col("_dlq_reason")).as("poison_rows"))
+          .filter(col("_dlq_reason").isNull).drop("_dlq_reason")
+        val writePoison = () => {
+          val bad = classified.filter(col("_dlq_reason").isNotNull)
+          // the count is absent when no row survived the filter (an
+          // all-poison or empty epoch): adaptive execution then prunes
+          // the observed subtree from the final plan — probe instead
+          val poisoned = poisonObs.get.get("poison_rows") match {
+            case Some(n: Long) => n > 0L
+            case _ => !bad.isEmpty
+          }
+          if (poisoned) q.write(epochId, bad, batchVersion)
+        }
+        (clean, writePoison)
+      case None => (reducedAll, () => ())
     }
     // exact applied-key count as a second observation on the POST-reduce
     // frame — keys-sized, a bare count, so it is genuinely free. (The
@@ -220,13 +232,10 @@ object Apply {
     val normalized = normalize(reduced, batchVersion)
       .observe(keysObs, count(lit(1)).as("keys_in_batch"),
         max(col("lsn")).as("max_applied_lsn"))
-    val commit =
-      try table.upsert(normalized, epochId, batchVersion,
-        batchMaxLsn =
-          keysObs.get.get("max_applied_lsn").collect { case l: Long => l }.getOrElse(-1L),
-        writer = writer)
-      finally dlqCache.foreach(_.unpersist(blocking = false))
-    val tUpsert = t()
+    val commit = table.upsert(normalized, epochId, batchVersion,
+      batchMaxLsn =
+        keysObs.get.get("max_applied_lsn").collect { case l: Long => l }.getOrElse(-1L),
+      writer = writer, beforeCommit = quarantine)
 
     val inputRows =
       if (commit.committed) obs.get.get("rows_in_batch").map(_.asInstanceOf[Long]).getOrElse(0L)
@@ -245,13 +254,9 @@ object Apply {
     }
 
     val wallMs = (System.nanoTime() - t0) / 1000000L
-    val stats = ApplyStats(epochId, inputRows, appliedKeys, batchVersion, commit.committed, wallMs)
+    val stats = ApplyStats(epochId, inputRows, appliedKeys, batchVersion, commit.committed,
+      wallMs, commit.snapshot)
     if (commit.committed) audit.foreach(_.recordAsync(spark, table, commit.group, obs.get, stats))
-    if (sys.env.contains("GRAFT_APPLY_TIMING"))
-      System.err.println(f"[apply] epoch=$epochId probe=${(tProbe - t1) / 1e9}%.2fs " +
-        f"upsert=${(tUpsert - tProbe) / 1e9}%.2fs audit=${(t() - tUpsert) / 1e9}%.2fs " +
-        s"salted=$useSalt" +
-        adaptive.map(a => f" ratio=${a.lastRatio}%.1f engagedNext=${a.engaged}").getOrElse(""))
     stats
   }
 

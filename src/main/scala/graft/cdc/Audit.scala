@@ -1,7 +1,9 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Per-epoch, per-partition lineage + metrics side table.
   *
@@ -15,13 +17,17 @@ import org.apache.spark.sql.functions._
   * the committed snapshot version — enough to trace any state row back
   * to its log range.
   *
-  * Cost model: the per-bucket breakdown is a column-pruned scan (lsn +
-  * bucket partition column) of the delta files the epoch just wrote —
-  * O(applied keys), NOT a second pass over the raw batch.
+  * Cost model: the per-bucket breakdown comes from the parquet footers
+  * of the delta group the epoch just wrote — each file's row count and
+  * its `lsn` min/max statistics, O(files) metadata and no Spark job —
+  * and the epoch's rows are appended as one local-relation write. A
+  * group whose footers lack `lsn` statistics falls back to a
+  * column-pruned scan (lsn + bucket partition column) of that group:
+  * O(applied keys), never a second pass over the raw batch.
   */
 final class Audit(val dir: String) {
 
-  // Lineage jobs are side-channel writes over already-committed,
+  // Lineage writes are side-channel writes over already-committed,
   // immutable delta files — they run on a single background thread so
   // the apply loop's next epoch overlaps them (Spark schedules
   // concurrent jobs fine). `flush()` joins before the caller declares
@@ -31,16 +37,16 @@ final class Audit(val dir: String) {
   })
   private val pending = new java.util.concurrent.atomic.AtomicReference[Throwable](null)
 
+  /** Queue [[record]] on the audit thread. */
   def recordAsync(
       spark: SparkSession,
       table: LakeTable,
       group: Option[FileGroup],
       rawStats: Map[String, Any],
       stats: ApplyStats): Unit = {
-    val snap = table.latest() // resolve the snapshot NOW, not at run time
     worker.submit(new Runnable {
       def run(): Unit =
-        try record(spark, table.root, snap, group, rawStats, stats)
+        try record(spark, table, group, rawStats, stats)
         catch { case t: Throwable => pending.compareAndSet(null, t) }
     })
     ()
@@ -54,44 +60,39 @@ final class Audit(val dir: String) {
     Option(pending.get()).foreach(t => throw t)
   }
 
+  /** Append the lineage rows of one epoch: one per bucket `group`
+    * wrote, stamped with the epoch's source range (`rawStats`, the
+    * apply pass's observe() metrics) and the snapshot it committed
+    * (`stats.snapshot`). */
   def record(
       spark: SparkSession,
       table: LakeTable,
       group: Option[FileGroup],
       rawStats: Map[String, Any],
-      stats: ApplyStats): Unit =
-    record(spark, table.root, table.latest(), group, rawStats, stats)
-
-  private def record(
-      spark: SparkSession,
-      tableRoot: String,
-      snap: Option[Snapshot],
-      group: Option[FileGroup],
-      rawStats: Map[String, Any],
       stats: ApplyStats): Unit = {
-    val snapshotVersion = snap.map(_.version).getOrElse(-1L)
+    val snapshotVersion = stats.snapshot.map(_.version).getOrElse(-1L)
     def stat(k: String): Long =
       rawStats.get(k).collect { case l: Long => l }.getOrElse(-1L)
     // only the group THIS epoch appended: an empty epoch (commit with no
     // files) must not re-record the previous group's rows under its id
     group.foreach { g =>
-      spark.read.parquet(s"$tableRoot/${g.dir}")
-        .groupBy(col("bucket"))
-        .agg(
-          min(col("lsn")).as("min_lsn"),
-          max(col("lsn")).as("max_lsn"),
-          count(lit(1)).as("rows_applied"))
-        .withColumn("epoch_id", lit(stats.epochId))
-        .withColumn("source_min_lsn", lit(stat("min_lsn")))
-        .withColumn("source_max_lsn", lit(stat("max_lsn")))
-        .withColumn("source_rows", lit(stat("rows_in_batch")))
-        .withColumn("late_events", lit(stat("late_events")))
-        .withColumn("snapshot_version", lit(snapshotVersion))
-        .withColumn("schema_version", lit(stats.batchSchemaVersion))
-        .withColumn("wall_ms", lit(stats.wallMs))
-        // one file per epoch IS the minimal append (O(buckets) rows);
-        // the file-count growth over a long replay is bounded by
-        // compactAsync below, not by fanning the append out
+      val groupDir = s"${table.root}/${g.dir}"
+      val perBucket: Seq[Row] = ParquetStats.bucketRanges(spark, groupDir, "lsn") match {
+        case Some(ranges) => ranges.map { case (b, lo, hi, n) => Row(b, lo, hi, n) }
+        case None =>
+          spark.read.parquet(groupDir)
+            .groupBy(col("bucket"))
+            .agg(min(col("lsn")), max(col("lsn")), count(lit(1)))
+            .collect().toSeq
+      }
+      val epochCols = Seq[Any](stats.epochId, stat("min_lsn"), stat("max_lsn"),
+        stat("rows_in_batch"), stat("late_events"), snapshotVersion,
+        stats.batchSchemaVersion, stats.wallMs)
+      // one file per epoch IS the minimal append (O(buckets) rows);
+      // the file-count growth over a long replay is bounded by
+      // compactAsync below, not by fanning the append out
+      spark.createDataFrame(perBucket.map(r => Row.fromSeq(r.toSeq ++ epochCols)).asJava,
+          Audit.schema)
         .coalesce(1)
         .write.mode("append").parquet(dir)
     }
@@ -257,4 +258,16 @@ final class Audit(val dir: String) {
     if (snapshot.isEmpty) spark.read.option("mergeSchema", "true").parquet(dir)
     else spark.read.option("mergeSchema", "true").parquet(snapshot: _*)
   }
+}
+
+object Audit {
+  /** The lineage table's columns, in order: per-bucket applied range,
+    * then the epoch's source range and commit. */
+  private val schema: StructType = StructType(Seq(
+    StructField("bucket", IntegerType), StructField("min_lsn", LongType),
+    StructField("max_lsn", LongType), StructField("rows_applied", LongType),
+    StructField("epoch_id", LongType), StructField("source_min_lsn", LongType),
+    StructField("source_max_lsn", LongType), StructField("source_rows", LongType),
+    StructField("late_events", LongType), StructField("snapshot_version", LongType),
+    StructField("schema_version", IntegerType), StructField("wall_ms", LongType)))
 }

@@ -74,11 +74,14 @@ final class CommitConflictException(version: Long)
   extends RuntimeException(s"snapshot v$version was committed concurrently")
 
 /** Result of an upsert: whether the epoch committed (false = idempotent
-  * replay skip) and the file group it appended (None for an empty
-  * epoch that only advanced the high-water mark). Auditing MUST use
-  * `group` rather than "the last group of the snapshot" — an empty
-  * epoch's snapshot still ends with the previous epoch's group. */
-final case class CommitResult(committed: Boolean, group: Option[FileGroup])
+  * replay skip), the file group it appended (None for an empty epoch
+  * that only advanced the high-water mark) and the snapshot it
+  * committed (None on a skip) — callers read the new head from here
+  * instead of parsing the manifest again. Auditing MUST use `group`
+  * rather than "the last group of the snapshot" — an empty epoch's
+  * snapshot still ends with the previous epoch's group. */
+final case class CommitResult(committed: Boolean, group: Option[FileGroup],
+    snapshot: Option[Snapshot])
 
 /** Self-managed snapshot/manifest lake table with MERGE-upsert semantics
   * (merge-on-read + background compaction), built because no Iceberg
@@ -133,7 +136,8 @@ object LakeTable {
     * exactly that stage boundary (CrashSweepSpec drives every point and
     * asserts resume reaches the oracle state). Production default is a
     * no-op — one megamorphic-free function call per commit. Points:
-    * `upsert.after-write` (data group durable, nothing referenced),
+    * `upsert.after-write` (data group and the epoch's quarantine set
+    * durable, nothing referenced),
     * `commit.after-tmp` (manifest tmp durable, not published),
     * `commit.after-publish` (published; HEAD hint + tmp cleanup lost),
     * `compact.after-write` / `rebucket.after-write` (rewritten group
@@ -145,7 +149,7 @@ object LakeTable {
     * (the stream / segment replay — every pre-existing caller). */
   val DefaultWriter = "default"
 
-  /** Proxy keys for deterministic one-bucket-per-partition placement:
+  /** Proxy keys for deterministic bucket-to-partition placement:
     * entry p is an integer whose Spark hash-partition id over `parts`
     * partitions is exactly p (same Murmur3+pmod the planner's
     * HashPartitioning.partitionIdExpression uses). `repartition(parts,
@@ -208,11 +212,6 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
         .toSeq.sorted
     }
   }
-
-  private def hasParquet(dir: Path): Boolean =
-    Using.resource(Files.walk(dir)) { st =>
-      st.iterator().asScala.exists(_.getFileName.toString.endsWith(".parquet"))
-    }
 
   /** Best-effort head-pointer write (a HINT: `latest()` probes forward
     * from it, so a stale, torn or lost HEAD costs extra probes, never
@@ -373,11 +372,13 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
     * a power loss leaves a durable snapshot pointing at torn/absent
     * parquet (worse than losing both together). O(bucket files) per
     * epoch; on a real cluster the object store's PUT gives the same
-    * barrier. */
-  private def fsyncTree(dir: Path): Unit =
-    if (Files.isDirectory(dir)) {
-      Using.resource(Files.walk(dir))(_.iterator().asScala.toSeq)
-        .foreach(fsync)
+    * barrier. Returns whether the tree holds any parquet file, from the
+    * same walk. */
+  private def fsyncTree(dir: Path): Boolean =
+    Files.isDirectory(dir) && {
+      val paths = Using.resource(Files.walk(dir))(_.iterator().asScala.toSeq)
+      paths.foreach(fsync)
+      paths.exists(_.getFileName.toString.endsWith(".parquet"))
     }
 
   // ---- columns ------------------------------------------------------
@@ -402,7 +403,7 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
     * truncated-prefix collision with a live referenced group would
     * silently destroy committed data.
     *
-    * Partitioned one bucket value per write task via a DETERMINISTIC
+    * Each bucket goes to exactly one write task via a DETERMINISTIC
     * proxy key (round-7, guide §2.4): bucket values are the known
     * integers 0..nb-1, so the range partitioner's boundary-sampling job
     * (and the MEMORY_AND_DISK persist of the whole normalized batch it
@@ -410,24 +411,32 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
     * measured when unpersisted) buys nothing; [[LakeTable.partitionProxy]]
     * precomputes, per target partition, an integer whose murmur3 hash
     * lands there, so a plain hash repartition places bucket b exactly
-    * in partition b%parts — no sampling pass, no cache, ONE pass over
-    * the batch, same one-bucket-per-task/file layout (plain hash
-    * repartition of the raw bucket value balls-in-bins idles ~1/e of
-    * the write cores). Returns None for a file-less (empty) group,
-    * which must never be referenced (unreadable schema). */
+    * in partition b%tasks — no sampling pass, no cache, ONE pass over
+    * the batch (plain hash repartition of the raw bucket value
+    * balls-in-bins idles ~1/e of the write cores).
+    *
+    * The task count is `parts` capped at the cluster's
+    * defaultParallelism: one task per bucket would run nb/cores waves
+    * of tiny tasks, each paying task launch, its sort and its file
+    * commit. A task owning several buckets still writes one file per
+    * bucket (the partitioned writer sorts by bucket and rolls a file at
+    * each new value), so the on-disk layout — one file per
+    * `bucket=N` directory — does not depend on the cap. Returns None
+    * for a file-less (empty) group, which must never be referenced
+    * (unreadable schema). */
   private def writeBucketedGroup(src: DataFrame, cols: Seq[String], nb: Int,
       parts: Int, groupSchemaVersion: Int, kind: String): Option[FileGroup] = {
     val suffix = if (kind == "base") "-base" else ""
     val groupDir = s"data/${UUID.randomUUID().toString}$suffix"
+    val tasks = math.max(1, math.min(parts, src.sparkSession.sparkContext.defaultParallelism))
     val proxy = element_at(
-      lit(LakeTable.partitionProxy(parts)), (pmod(col("bucket"), lit(parts)) + 1).cast("int"))
+      lit(LakeTable.partitionProxy(tasks)), (pmod(col("bucket"), lit(tasks)) + 1).cast("int"))
     src.select((cols.map(col) :+ bucketColFor(nb)): _*)
-      .repartition(parts, proxy)
+      .repartition(tasks, proxy)
       .write.partitionBy("bucket").mode("overwrite")
       .parquet(s"$root/$groupDir")
-    fsyncTree(Paths.get(root, groupDir)) // data durable BEFORE the manifest
-    if (hasParquet(Paths.get(root, groupDir)))
-      Some(FileGroup(groupDir, groupSchemaVersion, kind))
+    // data durable BEFORE the manifest
+    if (fsyncTree(Paths.get(root, groupDir))) Some(FileGroup(groupDir, groupSchemaVersion, kind))
     else None
   }
 
@@ -446,15 +455,21 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
     * (last-writer-wins already reduced, tombstones as op='D').
     * Returns committed=false iff the epoch was already committed
     * (idempotent replay after restart — the written files of the
-    * aborted attempt stay unreferenced). */
-  /** `batchMaxLsn` is by-name: it is only evaluated AFTER the data
-    * write (callers read it from the write job's observe() metrics). */
+    * aborted attempt stay unreferenced).
+    *
+    * `batchMaxLsn` is by-name: it is only evaluated AFTER the data
+    * write (callers read it from the write job's observe() metrics).
+    * `beforeCommit` runs once, after the data write and before the
+    * manifest commit, and never on an already-committed epoch — the
+    * slot for side outputs that must be durable before the epoch
+    * counts as applied (the apply stage's quarantine write). */
   def upsert(batch: DataFrame, epochId: Long, batchSchemaVersion: Int,
       batchMaxLsn: => Long = -1L,
-      writer: String = LakeTable.DefaultWriter): CommitResult = {
+      writer: String = LakeTable.DefaultWriter,
+      beforeCommit: () => Unit = () => ()): CommitResult = {
     init()
     val prev = latest()
-    if (prev.exists(_.watermark(writer) >= epochId)) return CommitResult(committed = false, None)
+    if (prev.exists(_.watermark(writer) >= epochId)) return CommitResult(committed = false, None, None)
 
     val cols = stateCols(batchSchemaVersion)
     // The delta-group write is re-runnable so a mid-flight bucket-count
@@ -470,8 +485,9 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
     // scatter keys across a second bucketing scheme
     var nb = prev.map(_.numBuckets).getOrElse(numBuckets)
     var written = writeGroup(nb)
-    LakeTable.failpoint("upsert.after-write")
     val maxLsn = batchMaxLsn // evaluate the by-name once, after the write
+    beforeCommit()
+    LakeTable.failpoint("upsert.after-write")
 
     // optimistic commit: if another writer won the version CAS, re-read
     // the new head and re-commit THIS epoch's already-written group on
@@ -482,7 +498,7 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
     // our files stay unreferenced (vacuum candidates).
     var base = prev
     while (true) {
-      if (base.exists(_.watermark(writer) >= epochId)) return CommitResult(committed = false, None)
+      if (base.exists(_.watermark(writer) >= epochId)) return CommitResult(committed = false, None, None)
       val newSchemaVersion = math.max(base.map(_.schemaVersion).getOrElse(1), batchSchemaVersion)
       val groups = base.map(_.groups).getOrElse(Nil) ++ written.toSeq
       // a non-default writer advances ONLY its own watermark — the
@@ -495,12 +511,13 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
         else
           (base.map(_.epochId).getOrElse(-1L),
             base.map(_.writerEpochs).getOrElse(Map.empty[String, Long]) + (writer -> epochId))
+      val next = Snapshot(
+        base.map(_.version).getOrElse(0L) + 1L, newEpochId, newSchemaVersion, groups,
+        groups.count(_.kind == "delta"),
+        math.max(base.map(_.maxLsn).getOrElse(-1L), maxLsn), nb, newWriterEpochs)
       try {
-        commitManifest(Snapshot(
-          base.map(_.version).getOrElse(0L) + 1L, newEpochId, newSchemaVersion, groups,
-          groups.count(_.kind == "delta"),
-          math.max(base.map(_.maxLsn).getOrElse(-1L), maxLsn), nb, newWriterEpochs))
-        return CommitResult(committed = true, written)
+        commitManifest(next)
+        return CommitResult(committed = true, written, Some(next))
       } catch {
         case _: CommitConflictException =>
           base = latest()
@@ -518,7 +535,7 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
           }
       }
     }
-    CommitResult(committed = false, None) // unreachable
+    CommitResult(committed = false, None, None) // unreachable
   }
 
   // ---- read (merge-on-read reconstruction) -------------------------

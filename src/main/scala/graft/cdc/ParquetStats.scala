@@ -41,25 +41,58 @@ object ParquetStats {
     * None on an empty list or any missing per-column stats. */
   def maxIntOfFiles(spark: SparkSession, files: Seq[String], column: String): Option[Int] = {
     val conf = spark.sessionState.newHadoopConf()
-    var sawAll = true
-    val maxes = files.iterator.filter(_.endsWith(".parquet")).flatMap { f =>
-      // an unreadable/truncated file must not turn this optimization
-      // into a hard failure — fall back to the scan probe instead
-      scala.util.Try {
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(f), conf))
-        try {
-          reader.getFooter.getBlocks.asScala.flatMap { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == column) match {
-              case Some(c) if c.getStatistics != null && c.getStatistics.hasNonNullValue =>
-                Some(c.getStatistics.genericGetMax.asInstanceOf[Number].intValue)
-              case _ =>
-                sawAll = false; None
-            }
-          }.toList
-        } finally reader.close()
-      }.getOrElse { sawAll = false; Nil }
-    }.toList
-    if (maxes.nonEmpty && sawAll) Some(maxes.max) else None
+    val footers = files.filter(_.endsWith(".parquet")).map(f => footerRange(conf, f, column))
+    if (footers.isEmpty || footers.exists(_.isEmpty)) None
+    else union(footers.flatMap(_.get._2)).map(_._2.toInt)
   }
+
+  /** Per `bucket=N` partition of the group directory `dir`: (bucket,
+    * min, max, rows) of the INT64 `column`, from footer row counts and
+    * statistics only — O(files) metadata, no Spark job. Buckets with no
+    * rows are left out, as a group-by over the data would leave them.
+    * None when any footer is unreadable or lacks non-null stats for the
+    * column in a row group that has rows (caller falls back to a scan). */
+  def bucketRanges(spark: SparkSession, dir: String,
+      column: String): Option[Seq[(Int, Long, Long, Long)]] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(dir)
+    val fs = p.getFileSystem(conf)
+    val perBucket = fs.listStatus(p).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
+      .map { b =>
+        val files = fs.listStatus(b.getPath).toSeq.map(_.getPath.toString)
+          .filter(_.endsWith(".parquet"))
+        (b.getPath.getName.stripPrefix("bucket=").toIntOption,
+          files.map(f => footerRange(conf, f, column)))
+      }
+    if (perBucket.exists { case (id, footers) => id.isEmpty || footers.exists(_.isEmpty) }) None
+    else Some(perBucket.flatMap { case (id, footers) =>
+      union(footers.flatMap(_.get._2)).map { case (lo, hi) =>
+        (id.get, lo, hi, footers.map(_.get._1).sum)
+      }
+    })
+  }
+
+  private def union(ranges: Seq[(Long, Long)]): Option[(Long, Long)] =
+    ranges.reduceOption((a, b) => (math.min(a._1, b._1), math.max(a._2, b._2)))
+
+  /** One file's row count and the (min, max) of `column` over its row
+    * groups (None for a file without rows). None when the file is
+    * unreadable or a row group with rows lacks non-null stats for the
+    * column — an unreadable/truncated file must not turn a footer probe
+    * into a hard failure, the caller scans instead. */
+  private def footerRange(conf: org.apache.hadoop.conf.Configuration, file: String,
+      column: String): Option[(Long, Option[(Long, Long)])] =
+    scala.util.Try {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
+      try reader.getFooter.getBlocks.asScala.toSeq.filter(_.getRowCount > 0)
+      finally reader.close()
+    }.toOption.flatMap { blocks =>
+      val stats = blocks.map(_.getColumns.asScala.find(_.getPath.toDotString == column)
+        .map(_.getStatistics).filter(st => st != null && st.hasNonNullValue))
+      if (stats.exists(_.isEmpty)) None
+      else Some((blocks.map(_.getRowCount).sum, union(stats.flatten.map(st =>
+        (st.genericGetMin.asInstanceOf[Number].longValue,
+          st.genericGetMax.asInstanceOf[Number].longValue)))))
+    }
 }

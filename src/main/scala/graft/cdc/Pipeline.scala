@@ -95,21 +95,27 @@ object Pipeline {
         val batch = window.filter(col("epoch") === e.toLong).drop("delivery", "epoch")
         val stats = Apply.applyEpoch(spark, table, batch, e.toLong, audit, salted,
           adaptive = adaptive, dlq = dlq)
-        // incremental: only buckets with >= compactEvery live delta groups
-        // rewrite (deltaGroupCount >= threshold is a cheap necessary
-        // condition — per-bucket counts never exceed the group count)
-        if (compactEvery > 0 && table.deltaGroupCount >= compactEvery) {
-          table.compactBuckets(spark, compactEvery)
-          // same cadence for the lineage side table: audit file count
-          // stays O(compactions), not O(epochs), over a long replay
-          audit.foreach(_.compactAsync(spark))
-        }
+        compactOnCadence(spark, table, stats, compactEvery, audit)
         stats
       }
     } finally audit.foreach(_.flush())
     // flush in a finally (like runStream): a failing later epoch must
     // not drop the buffered async lineage of already-committed ones
   }
+
+  /** Compaction cadence after each epoch (`compactEvery` = 0: off).
+    * Only buckets with >= compactEvery live delta groups rewrite; the
+    * committed snapshot's delta-group count is a cheap necessary
+    * condition (per-bucket counts never exceed it), taken from `st`
+    * rather than a second manifest read. The audit side table follows
+    * the same cadence, so its file count stays O(compactions). */
+  private def compactOnCadence(spark: SparkSession, table: LakeTable, st: ApplyStats,
+      compactEvery: Int, audit: Option[Audit]): Unit =
+    if (compactEvery > 0 &&
+        st.snapshot.orElse(table.latest()).exists(_.totalDeltaGroups >= compactEvery)) {
+      table.compactBuckets(spark, compactEvery)
+      audit.foreach(_.compactAsync(spark))
+    }
 
   /** Materialize the synthetic log as `segments` parquet directories in
     * delivery order — the on-disk binlog the streaming source tails.
@@ -165,10 +171,7 @@ object Pipeline {
         val hint = ParquetStats.maxInt(spark, segDir, "schemaVersion")
         val st = Apply.applyEpoch(spark, table, batch, s.toLong, audit, versionHint = hint,
           adaptive = adaptive, dlq = dlq)
-        if (compactEvery > 0 && table.deltaGroupCount >= compactEvery) {
-          table.compactBuckets(spark, compactEvery)
-          audit.foreach(_.compactAsync(spark))
-        }
+        compactOnCadence(spark, table, st, compactEvery, audit)
         st
       }
     } finally audit.foreach(_.flush())
@@ -294,12 +297,9 @@ object Pipeline {
         // without stats.
         val hint = ParquetStats.maxIntOfFiles(batch.sparkSession,
           sourceBatchFiles(batch.sparkSession, checkpointDir, epochId), "schemaVersion")
-        Apply.applyEpoch(batch.sparkSession, table, batch, epochId, audit,
+        val st = Apply.applyEpoch(batch.sparkSession, table, batch, epochId, audit,
           versionHint = hint, adaptive = adaptive, dlq = dlq, writer = writer)
-        if (compactEvery > 0 && table.deltaGroupCount >= compactEvery) {
-          table.compactBuckets(batch.sparkSession, compactEvery)
-          audit.foreach(_.compactAsync(batch.sparkSession))
-        }
+        compactOnCadence(batch.sparkSession, table, st, compactEvery, audit)
         failAfterEpoch.foreach { f =>
           if (epochId == f) throw new RuntimeException(s"injected failure after epoch $f commit")
         }

@@ -198,6 +198,45 @@ class CdcApplySpec extends AnyFunSuite {
     assert(r.getLong(2) > 0 && r.getLong(2) <= ChangeLogGen.physicalRows(cfg))
   }
 
+  test("footer-derived audit lineage equals a scan of each epoch's group, empty epoch included") {
+    val dir = TestSpark.tmpDir("cdc-audit-footer")
+    val table = new LakeTable(s"$dir/t")
+    val audit = new Audit(s"$dir/audit")
+    val all = Pipeline.withEpoch(ChangeLogGen.events(spark, cfg), cfg, 3)
+    val bs = (0 until 3).map(e => all.filter(col("epoch") === e.toLong).drop("delivery", "epoch"))
+    // epoch 1 is empty: it commits, writes no group and records nothing
+    Seq(bs(0), bs(0).limit(0), bs(1), bs(2)).zipWithIndex.foreach { case (b, e) =>
+      assert(Apply.applyEpoch(spark, table, b, e.toLong, Some(audit)).committed)
+    }
+    audit.flush()
+    val rows = audit.read(spark)
+    assert(rows.schema.map(f => f.name -> f.dataType.simpleString) == Seq(
+      "bucket" -> "int", "min_lsn" -> "bigint", "max_lsn" -> "bigint",
+      "rows_applied" -> "bigint", "epoch_id" -> "bigint", "source_min_lsn" -> "bigint",
+      "source_max_lsn" -> "bigint", "source_rows" -> "bigint", "late_events" -> "bigint",
+      "snapshot_version" -> "bigint", "schema_version" -> "int", "wall_ms" -> "bigint"))
+    def audited(e: Long) = rows.filter(col("epoch_id") === e)
+      .select("bucket", "min_lsn", "max_lsn", "rows_applied").collect().map(_.toSeq).toSet
+    (1L to 4L).foreach { v =>
+      val snap = table.snapshotAt(v).get
+      val prevDirs = table.snapshotAt(v - 1).map(_.groups.map(_.dir)).getOrElse(Nil)
+      snap.groups.map(_.dir).filterNot(prevDirs.contains) match {
+        case Seq(g) =>
+          val groupDir = s"${table.root}/$g"
+          assert(ParquetStats.bucketRanges(spark, groupDir, "lsn").isDefined,
+            "delta footers carry lsn statistics")
+          val scanned = spark.read.parquet(groupDir).groupBy(col("bucket"))
+            .agg(min(col("lsn")), max(col("lsn")), count(lit(1)))
+            .collect().map(_.toSeq).toSet
+          assert(audited(snap.epochId) == scanned, s"epoch ${snap.epochId}")
+        case Seq() =>
+          assert(snap.epochId == 1L)
+          assert(audited(snap.epochId).isEmpty, "an empty epoch must record no lineage")
+        case more => fail(s"one epoch appended ${more.size} groups")
+      }
+    }
+  }
+
   test("late arrivals are counted per epoch (and absent when in order)") {
     // disordered source chunked into epochs -> some events land in a
     // later epoch than their LSN: late_events > 0 somewhere

@@ -160,4 +160,49 @@ class CompactionSpec extends AnyFunSuite {
     assert(t4.read(spark).filter(col("path") === "k").count() == 1,
       "purged horizon means the late row wins — the documented trade")
   }
+
+  test("bucket writes run at cluster width: one file per bucket dir, readKey scans one bucket") {
+    val nb = 16
+    assert(nb > spark.sparkContext.defaultParallelism, "need more buckets than write tasks")
+    val dir = TestSpark.tmpDir("cdc-width")
+    val table = new LakeTable(s"$dir/t", numBuckets = nb)
+    val keys = (0 until 200).map(i => (s"repo$i", "src/a"))
+    // parquet files in each bucket=N directory of one group
+    def filesPerBucket(groupDir: String): Map[String, Int] =
+      scala.util.Using.resource(Files.list(Paths.get(table.root, groupDir))) { st =>
+        st.iterator().asScala.filter(_.getFileName.toString.startsWith("bucket=")).map { b =>
+          b.getFileName.toString -> scala.util.Using.resource(Files.list(b))(
+            _.iterator().asScala.count(_.toString.endsWith(".parquet")))
+        }.toMap
+      }
+    def assertOneFilePerBucket(groupDir: String): Unit = {
+      val files = filesPerBucket(groupDir)
+      assert(files.size == nb, s"expected all $nb buckets written, got ${files.keySet}")
+      assert(files.values.forall(_ == 1), s"a bucket holds more than one file: $files")
+    }
+
+    (0 until 3).foreach { e =>
+      val c = table.upsert(mkBatch(keys, 1000L * e), e.toLong, 1)
+      assert(c.snapshot.map(_.epochId).contains(e.toLong))
+      assertOneFilePerBucket(c.group.get.dir)
+    }
+    assert(table.compactBuckets(spark, minDeltas = 3).size == nb)
+    assertOneFilePerBucket(table.latest().get.groups.find(_.kind == "base").get.dir)
+
+    // one delta group on top of the base: a point read touches the
+    // key's bucket in each of the two groups, one file apiece
+    table.upsert(mkBatch(keys.take(50), 9000L), 3L, 1)
+    val (r, p) = keys.head
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val (rows, scanned) =
+      try {
+        val df = table.readKey(spark, r, p)
+        val rows = df.collect().map(_.getAs[Long]("lsn")).toSeq
+        (rows, df.queryExecution.executedPlan.collect {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metrics("numFiles").value
+        }.sum)
+      } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert(rows == Seq(9000L))
+    assert(scanned == 2L, s"readKey scanned $scanned files, expected 2")
+  }
 }

@@ -121,9 +121,10 @@ class CrashSweepSpec extends AnyFunSuite {
       ("U", 2L, ts(2), 1, "r1", "pB", null: String, "{not json"),
       ("X", 3L, ts(3), 1, "r1", "pC", null: String, json(3)))
       .toDF("op", "lsn", "ts", "schemaVersion", "repo", "path", "before", "after")
-    // the quarantine set lands BEFORE the delta write; a crash after
-    // either leaves an uncommitted epoch whose resume re-runs the
-    // quarantine as an overwrite of the same epoch directory
+    // the quarantine set lands after the delta write and before the
+    // commit; a crash at upsert.after-write leaves both durable in an
+    // uncommitted epoch whose resume re-runs the quarantine as an
+    // overwrite of the same epoch directory
     arm("upsert.after-write")
     try intercept[Injected] {
       Apply.applyEpoch(spark, t, env, 0L, versionHint = Some(1), dlq = Some(dlq))
@@ -136,6 +137,41 @@ class CrashSweepSpec extends AnyFunSuite {
       s"resume duplicated or lost quarantine rows: ${q.toSeq}")
     val state = t.read(spark).select("path").as[String].collect().toSeq
     assert(state == Seq("pA"), s"lake state wrong after DLQ crash resume: $state")
+  }
+
+  test("crash at upsert.after-write in a poison epoch: resume matches the uncrashed run") {
+    import spark.implicits._
+    val bs = batches()
+    val ts = new java.sql.Timestamp(1700000000000L)
+    // poison on keys the log never touches, at LSNs above the log's
+    val poison = Seq(
+      ("X", 1000001L, ts, 1, "poison", "p1", null: String, """{"content":"x"}"""),
+      ("U", 1000002L, ts, 1, "poison", "p2", null: String, "{not json"))
+      .toDF("op", "lsn", "ts", "schemaVersion", "repo", "path", "before", "after")
+    def replay(crash: Boolean): (LakeTable, DeadLetterQueue) = {
+      val dir = TestSpark.tmpDir(s"crash-poison-$crash")
+      val (t, q) = (new LakeTable(s"$dir/t"), new DeadLetterQueue(s"$dir/dlq"))
+      def apply(e: Int) = Apply.applyEpoch(spark, t,
+        if (e == crashEpoch) bs(e).unionByName(poison) else bs(e), e.toLong, dlq = Some(q))
+      (0 until crashEpoch).foreach(apply)
+      if (crash) {
+        arm("upsert.after-write")
+        try intercept[Injected](apply(crashEpoch)) finally disarm()
+      }
+      (crashEpoch until epochs).foreach(apply)
+      (t, q)
+    }
+    def quarantine(q: DeadLetterQueue) =
+      q.read(spark).select("repo", "path", "op", "lsn", "after", "reason", "epoch")
+        .collect().map(_.toSeq).toSet
+    val (crashed, crashedQ) = replay(crash = true)
+    val (clean, cleanQ) = replay(crash = false)
+    assert(quarantine(crashedQ) == quarantine(cleanQ))
+    assert(quarantine(cleanQ).map(r => (r(1), r(5), r(6))) ==
+      Set(("p1", "unknown_op", crashEpoch.toLong), ("p2", "malformed_payload", crashEpoch.toLong)))
+    assert(Oracle.digest(crashed.read(spark), stateCols) == oracleDigest)
+    assert(Oracle.digest(clean.read(spark), stateCols) == oracleDigest)
+    assert(crashed.latest().get.maxLsn == clean.latest().get.maxLsn)
   }
 
   test("crash at compact.after-write: head state untouched, retry compacts, vacuum reclaims") {

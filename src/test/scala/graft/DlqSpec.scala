@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc.{Apply, DeadLetterQueue, LakeTable}
@@ -87,6 +88,36 @@ class DlqSpec extends AnyFunSuite {
     assert(q.length == 1 && q(0).getString(2) == "unknown_op")
     // canonical JSON string whatever the envelope layout
     assert(q(0).getString(1).contains(""""content":"body2""""))
+  }
+
+  test("clean epochs with a DLQ: nothing cached, no epoch= directory") {
+    val base = TestSpark.tmpDir("graft-dlq-clean")
+    val table = new LakeTable(s"$base/table")
+    val dlq = new DeadLetterQueue(s"$base/dlq")
+    val env = (1 to 20).map(i => ("U", i.toLong, ts(i), 1, s"r${i % 3}", s"p$i", null: String, json(i)))
+      .toDF("op", "lsn", "ts", "schemaVersion", "repo", "path", "before", "after")
+    def persisted() = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted()
+    // sampled between the data write and the commit, where a cached
+    // classification frame would still be alive
+    var duringWrite = Set.empty[Int]
+    LakeTable.failpoint = name => if (name == "upsert.after-write") duringWrite = persisted().toSet
+    val (st, empty) =
+      try (Apply.applyEpoch(spark, table, env, 0L, versionHint = Some(1), dlq = Some(dlq)),
+        Apply.applyEpoch(spark, table, env.limit(0), 1L, versionHint = Some(1), dlq = Some(dlq)))
+      finally LakeTable.failpoint = _ => ()
+    assert(st.committed && st.appliedKeys == 20L)
+    assert(empty.committed && empty.appliedKeys == 0L)
+    assert(duringWrite == before.toSet && persisted() == before,
+      s"apply cached a frame: before=$before during=$duringWrite after=${persisted()}")
+    val dlqRoot = java.nio.file.Paths.get(s"$base/dlq")
+    val epochDirs =
+      if (!java.nio.file.Files.isDirectory(dlqRoot)) Nil
+      else scala.util.Using.resource(java.nio.file.Files.list(dlqRoot)) { st =>
+        st.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("epoch=")).toList
+      }
+    assert(epochDirs.isEmpty, s"clean epochs created quarantine dirs: $epochDirs")
+    assert(table.read(spark).count() == 20L)
   }
 
   test("no DLQ configured: behavior unchanged, nothing written anywhere") {
