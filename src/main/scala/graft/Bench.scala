@@ -267,6 +267,59 @@ object Bench {
     (runs, grab("HW_OPS_PER_SEC="), grab("HW_MEM_BYTES_PER_SEC="))
   }
 
+  /** `Bench queries [--repeats N] [--plans TAG] [query...]`: times each
+    * selected SparkEntry query (default: all, by name) N times (default
+    * 3) on the noop sink, in the same session, sf dir and core count as
+    * the full bench. `--plans TAG` first writes each query's
+    * `explain("formatted")` to plans/r07/<query>_<TAG>.txt. Prints one
+    * `BENCHX` line per query and a closing `BENCHX_TOTAL`; no JSON. */
+  private def timeQueries(args: Seq[String], sfDir: String, cpus: Int): Unit = {
+    var repeats = 3
+    var plansTag: Option[String] = None
+    val names = scala.collection.mutable.ArrayBuffer[String]()
+    var i = 0
+    while (i < args.length) {
+      args(i) match {
+        case "--repeats" => repeats = args(i + 1).toInt; i += 2
+        case "--plans"   => plansTag = Some(args(i + 1)); i += 2
+        case q           => names += q; i += 1
+      }
+    }
+    val spark = session(cpus, cpus)
+    spark.read.parquet(s"$sfDir/nation.parquet").count() // warm I/O + JVM
+
+    val selected =
+      if (names.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
+      else names.toSeq.map(n => n -> SparkEntry.queries(n))
+
+    val results = selected.map { case (name, fn) =>
+      plansTag.foreach { tag =>
+        val dir = java.nio.file.Paths.get("plans/r07")
+        java.nio.file.Files.createDirectories(dir)
+        val plan = fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        java.nio.file.Files.writeString(dir.resolve(s"${name}_$tag.txt"), plan)
+        spark.catalog.clearCache()
+      }
+      spark.sparkContext.setJobDescription(name)
+      val times = (1 to repeats).map { _ =>
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val dt = (System.nanoTime() - t0) / 1e9
+        spark.catalog.clearCache()
+        dt
+      }
+      spark.sparkContext.setJobDescription(null)
+      val (lo, med) = (times.min, median(times))
+      println(f"BENCHX $name%-28s min=$lo%.3f med=$med%.3f " +
+        s"all=[${times.map(t => f"$t%.3f").mkString(",")}]")
+      (lo, med)
+    }
+    println(f"BENCHX_TOTAL min_sum=${results.map(_._1).sum}%.3f " +
+      f"med_sum=${results.map(_._2).sum}%.3f queries=${results.size}")
+    spark.stop()
+  }
+
   def main(args: Array[String]): Unit = {
     if (args.length == 5 && args(0) == "cdc-only") {
       val cores = args(1).toInt
@@ -281,6 +334,10 @@ object Bench {
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    if (args.headOption.contains("queries")) {
+      timeQueries(args.toSeq.tail, sfDir, cpus)
+      return
+    }
     // 16M events in 2 epochs (round-2 ran 8M/4): per-epoch fixed costs
     // (job planning, manifest commit, footer probe) are SERIAL and tax
     // the fast parallelism level disproportionately — Amdahl on the

@@ -403,7 +403,8 @@ object Graft {
       * residual |rx - lx| <= delta — candidates are bounded to a
       * 3-bin neighborhood instead of the key's whole range (lossless:
       * any row within ±delta of lx lies in bins floor(lx/delta) ± 1).
-      * The one shared implementation behind q18/q45/q47. Column names
+      * Only q18 calls it: q45 and q47 inline a LEFT variant of the same
+      * expansion, and q68 gets it from BandedRangeJoinRule. Column names
       * other than keyCols must be disjoint across the two sides. */
     def bandedToleranceJoin(right: DataFrame, keyCols: Seq[String],
         leftX: String, rightX: String, delta: Double): DataFrame = {
@@ -587,7 +588,6 @@ object Graft {
       var changed = 1L
       var iter = 0
       while (changed > 0 && iter < maxIter) {
-        val trStart = System.nanoTime() // GRAFT_CC_TIMING per-round stamp
         // (1) propagate the min label across edges. The previous label
         // rides along (as `_old`: present exactly once per node, on the
         // self row of the union) so convergence is observable in pass
@@ -618,9 +618,6 @@ object Graft {
             .as("changed"))
           .drop("_old"))
         changed = obs.get.get("changed").collect { case l: Long => l }.getOrElse(0L)
-        if (sys.env.contains("GRAFT_CC_TIMING"))
-          System.err.println(f"[cc] round=$iter changed=$changed " +
-            f"wall=${(System.nanoTime() - trStart) / 1e9}%.2fs")
         labels.unpersist()
         prop.unpersist()
         labels = next

@@ -188,9 +188,9 @@ object SimilarityOps {
     * rejected struct aggs here predates fanOut: single-threaded, the
     * sort-based partial agg lost to two hash-agg passes; 32-way, one
     * product pass + per-task sort beats two product passes AND drops
-    * one O(n) join of the embeddings table (Lab "q52asg" interleaved
-    * A/B: 30-45% warm, 3x cold). Only corner vs the old `=== max`
-    * filter: a max-cosine tie between bitwise 0.0 and -0.0 (struct
+    * one O(n) join of the embeddings table (interleaved A/B in
+    * OPTIMIZATION_r07.md: 30-45% warm, 3x cold). Only corner vs the
+    * old `=== max` filter: a max-cosine tie between bitwise 0.0 and -0.0 (struct
     * ordering is Double.compare, SQL equality treats them equal) —
     * requires two exactly-zero cosines for the same vector, which the
     * deterministic gate corpora never produce; QueriesSpec still

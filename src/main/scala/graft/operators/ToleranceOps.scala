@@ -96,8 +96,8 @@ object ToleranceOps {
     // rows yield a null struct, which min ignores), so unmatched probes
     // ride the same aggregate with _b = null instead of being restored
     // by a second probes join — one SMJ + two exchanges of the probe
-    // grid gone (interleaved Lab "q47u" A/B: fused wins 3/3,
-    // 0.71-0.82 s vs 1.47-1.77 s warm). The shared bandedToleranceJoin
+    // grid gone (interleaved A/B in OPTIMIZATION_r07.md: fused wins
+    // 3/3, 0.71-0.82 s vs 1.47-1.77 s warm). The shared bandedToleranceJoin
     // operator keeps its inner-join contract; this call-site mirrors
     // its lossless ±1-bin expansion (any row within ±delta of _pus
     // lies in bins floor(_pus/delta) ± 1).
@@ -154,7 +154,7 @@ object ToleranceOps {
       // grouping, so no exchange is added. Per-task partial
       // aggregation keeps the shuffle O(query points); the product
       // rows (unchanged in total count: n x (A+B)) are never shuffled.
-      // Interleaved Lab "q48u" A/B: fused wins 5/6 pairs, median
+      // Interleaved A/B (OPTIMIZATION_r07.md): fused wins 5/6 pairs, median
       // 0.88 s vs 2.12 s (the earlier per-axis variant's remaining
       // cost was the two aggregate jobs + the SMJ join-back).
       val axes = latAxis.select(lit(0L).as("_ax"), col("g_lat").as("_g"))

@@ -8,7 +8,7 @@ import graft.Graft._
   * edge list. Ground truth below is a driver-side union-find — the spec
   * checks the distributed answer on shapes that stress the algorithm:
   * long chains (diameter >> a naive round budget), dense cliques,
-  * star graphs, and a seeded random graph.
+  * star graphs, a seeded random graph, and duplicate and reversed edges.
   */
 class ConnectedComponentsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -62,6 +62,19 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val edges = Seq.fill(400)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
       .filter(e => e._1 != e._2)
     assert(cc(edges) == bruteCc(edges))
+  }
+
+  test("duplicate and reversed edges label like the de-duplicated pair list") {
+    // every pair appears verbatim more than once and in both
+    // orientations — the shape a symmetrized union without distinct()
+    // would feed the propagation loop
+    val rnd = new scala.util.Random(7)
+    val unique = Seq.fill(150)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+      .filter(e => e._1 != e._2).distinct
+    val noisy = rnd.shuffle(unique ++ unique ++ unique.map(_.swap))
+    val got = cc(noisy)
+    assert(got == cc(unique))
+    assert(got == bruteCc(unique))
   }
 
   test("empty edge list returns an empty frame") {

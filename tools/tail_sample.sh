@@ -4,8 +4,8 @@
 # graft.ScaleFixture (disjoint-vocabulary replicas -> dup density and
 # candidate-pair counts scale linearly, the representative experiment).
 # Launches only when busy-probe hypervisor steal is <1.5%; each sf runs
-# in its own pinned pretouched JVM. GRAFT_CC_TIMING=1 prints q57's
-# per-round CC split.
+# in its own pinned pretouched JVM at local[nproc], timing each query
+# twice with `graft.Bench queries`.
 # Usage: tools/tail_sample.sh [max_wait_minutes]
 set -e
 cd "$(dirname "$0")/.."
@@ -45,9 +45,11 @@ while :; do
   if [ "$ST" -lt $((NCPU * 500 * 15 / 1000)) ]; then
     echo "[tail] host quiet -> sampling (probe=$ST)"
     echo "== sf0.1 =="
-    GRAFT_CC_TIMING=1 $JAVA graft.QTime /root/testdata/sf0.1 $QUERIES 2> >(grep '\[cc\]' >&2)
+    SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=$NCPU \
+      $JAVA graft.Bench queries --repeats 2 $QUERIES
     echo "== sf1 (10x) =="
-    GRAFT_CC_TIMING=1 $JAVA graft.QTime "$SF1" $QUERIES 2> >(grep '\[cc\]' >&2)
+    SPARK_GRAFT_SF_DIR="$SF1" SPARK_GRAFT_CPUS=$NCPU \
+      $JAVA graft.Bench queries --repeats 2 $QUERIES
     exit 0
   fi
   if [ "$(date +%s)" -gt "$DEADLINE" ]; then
