@@ -397,31 +397,45 @@ object Graft {
     }
 
     /** Banded tolerance (range) join: rows of `right` whose `rightX` is
-      * within ±`delta` of this frame's `leftX`, under equal `keyCols`.
-      * Both sides bucket x into width-`delta` bins and the LEFT side
-      * expands to bins ±1, so the join is EQUI on (keys..., bin) with
-      * residual |rx - lx| <= delta — candidates are bounded to a
-      * 3-bin neighborhood instead of the key's whole range (lossless:
-      * any row within ±delta of lx lies in bins floor(lx/delta) ± 1).
-      * Only q18 calls it: q45 and q47 inline a LEFT variant of the same
-      * expansion, and q68 gets it from BandedRangeJoinRule. Column names
-      * other than keyCols must be disjoint across the two sides. */
+      * within ±`delta` of this frame's `leftX`, under equal `keyCols` —
+      * the [[graft.plans.Band]] join built from columns (q68 gets the
+      * same join from `BandedRangeJoinRule`). `leftX` and `rightX` share
+      * one non-decimal numeric type; other column names must be disjoint
+      * across the sides. Output: the keys once, this frame's other
+      * columns, then `right`'s. `joinType` is "inner" (q18) or "left"
+      * (q45, q47). LEFT contract: each left row appears at least once,
+      * and every row of its band that matched nothing comes out
+      * null-extended — aggregate per left row with null-skipping
+      * conditional aggregates like `count(when(cond, 1))`. */
     def bandedToleranceJoin(right: DataFrame, keyCols: Seq[String],
-        leftX: String, rightX: String, delta: Double): DataFrame = {
-      require(!df.columns.contains("_tbin") && !right.columns.contains("_tbin"),
-        "bandedToleranceJoin reserves the column name _tbin")
+        leftX: String, rightX: String, delta: Double,
+        joinType: String = "inner"): DataFrame = {
+      import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+      import org.apache.spark.sql.catalyst.expressions.EqualTo
+      import org.apache.spark.sql.graft.Bridge.toColumn
+      import org.apache.spark.sql.types.NumericType
+      import graft.plans.Band
+      require(joinType == "inner" || joinType == "left",
+        s"bandedToleranceJoin: joinType must be inner or left, got $joinType")
+      require(!(df.columns ++ right.columns).contains(Band.BinCol),
+        s"bandedToleranceJoin reserves the column name ${Band.BinCol}")
       val shared = (df.columns.toSet & right.columns.toSet) -- keyCols
-      require(shared.isEmpty,
-        "bandedToleranceJoin: columns other than the join keys must be " +
-          s"disjoint across the two sides (rename before joining); shared: " +
-          shared.toSeq.sorted.mkString(", "))
-      def bin(c: Column) = floor(c / lit(delta)).cast("long")
-      val l = df.withColumn("_tbin",
-        explode(array(bin(col(leftX)) - 1, bin(col(leftX)), bin(col(leftX)) + 1)))
-      val r = right.withColumn("_tbin", bin(col(rightX)))
-      l.join(r, keyCols :+ "_tbin")
-        .filter(abs(col(rightX) - col(leftX)) <= lit(delta))
-        .drop("_tbin")
+      require(shared.isEmpty, "bandedToleranceJoin: columns other than the join keys must " +
+        s"be disjoint across the two sides (rename before joining); shared: ${shared.toSeq.sorted.mkString(", ")}")
+      val (t, rt) = (df.schema(leftX).dataType, right.schema(rightX).dataType)
+      val bin = Band.binFn(t, delta).filter(_ => rt == t && t.isInstanceOf[NumericType])
+        .getOrElse(throw new IllegalArgumentException(
+          s"bandedToleranceJoin cannot bin $leftX: $t with $rightX: $rt"))
+      def at(parts: String*) = UnresolvedAttribute(parts)
+      // qualified sides: equal key names, even of one lineage (q45), resolve per side
+      val l = df.withColumn(Band.BinCol, toColumn(Band.expand(bin(at(leftX))))).as("l")
+      val r = right.withColumn(Band.BinCol, toColumn(bin(at(rightX)))).as("r")
+      val cond = Band.condition(keyCols.map(k => EqualTo(at("l", k), at("r", k))) :+
+        Band.residual(t, at("l", leftX), at("r", rightX), delta),
+        at("l", Band.BinCol), at("r", Band.BinCol))
+      l.join(r, toColumn(cond), joinType).select((keyCols.map(at("l", _)) ++
+        df.columns.filterNot(keyCols.contains).map(at("l", _)) ++
+        right.columns.filterNot(keyCols.contains).map(at("r", _))).map(toColumn): _*)
     }
 
     /** Exact n-gram Jaccard near-duplicate pairs with a document-
@@ -575,12 +589,12 @@ object Graft {
       // the symmetrization union references the input pair frame TWICE —
       // without a persist the whole upstream pair pipeline runs twice
       // inside the edges job (round-7; measured on q57, where the pair
-      // generation is the dominant cost)
+      // generation is the dominant cost). No distinct(): min-label
+      // propagation gives the same labels over duplicate edges.
       val pairsOnce = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val edges = Materialize.loopState(
         pairsOnce.select(col(srcCol).as("_ca"), col(dstCol).as("_cb"))
-          .union(pairsOnce.select(col(dstCol).as("_ca"), col(srcCol).as("_cb")))
-          .distinct())
+          .union(pairsOnce.select(col(dstCol).as("_ca"), col(srcCol).as("_cb"))))
       pairsOnce.unpersist(blocking = false)
       // init: label = min(self, neighbors); every node appears as _ca
       var labels = Materialize.loopState(edges.groupBy(col("_ca").as("node"))

@@ -123,7 +123,9 @@ object GeomOps {
     // identical algebra, whole-class sweep (no tiling): x-slabs between
     // consecutive edges, classic gaps-and-islands y-interval union per
     // slab; every coordinate is a dyadic rational so both engines sum
-    // exactly the same doubles
+    // exactly the same doubles. `cover` is DISTINCT so (y1, y2) orders a
+    // slab totally: with tied rows the islands and grp windows may order
+    // them differently and hand a row to the previous island
     "q66_flood_union" ->
       """WITH cells AS (
            SELECT CASE WHEN value > 150.0 THEN 3 WHEN value > 50.0 THEN 2
@@ -142,7 +144,7 @@ object GeomOps {
                   lead(xe) OVER (PARTITION BY flood_class ORDER BY xe) AS sb
            FROM edges),
          cover AS (
-           SELECT s.flood_class, s.sa, s.sb, r.y1, r.y2
+           SELECT DISTINCT s.flood_class, s.sa, s.sb, r.y1, r.y2
            FROM slabs s JOIN rects r
              ON r.flood_class = s.flood_class AND r.x1 <= s.sa AND r.x2 >= s.sb
            WHERE s.sb IS NOT NULL),

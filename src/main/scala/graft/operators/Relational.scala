@@ -240,10 +240,10 @@ object Relational {
     // `abs(l - r) <= d` predicate (which alone would plan as an
     // equi-join whose per-key candidate set is the key's whole
     // history) and graft.plans.BandedRangeJoinRule rewrites it to the
-    // banded equi-join q18 builds by hand. Same oracle as q18, so the
-    // gate proves the rewrite end-to-end: natural predicate in, banded
-    // plan out (plan-asserted in BandedRangeJoinRuleSpec), exact rows
-    // out. Runs in a child session so the injected rule cannot touch
+    // banded equi-join q18 builds through bandedToleranceJoin. Same
+    // oracle as q18, so the gate proves the rewrite end-to-end: natural
+    // predicate in, banded plan out (plan-asserted in
+    // BandedRangeJoinRuleSpec), exact rows out. Runs in a child session so the injected rule cannot touch
     // the other queries' sessions.
     "q68_range_join_rule" -> ((s0, dir) => {
       val s = s0.newSession()

@@ -11,16 +11,16 @@ import graft.functions.ColumnFns._
   *
   *  - q45: vertical level match — per-key candidate layers within
   *    ±DEPTH_DELTA (reference coverage/LevelCoverage.py:180-293,
-  *    DEPTH_DELTA=1.0 at :33), as a BANDED range join: both sides are
-  *    bucketed by floor(depth/delta) and probes expand to bins ±1, so
-  *    candidate generation is an equi-join on (cell, zbin) with bounded
-  *    fan-out — never a full per-cell product.
+  *    DEPTH_DELTA=1.0 at :33), as a LEFT `bandedToleranceJoin` (the one
+  *    banded-join primitive, graft.plans.Band): candidate generation is
+  *    an equi-join on (cell, depth bin ± 1) with bounded fan-out — never
+  *    a full per-cell product.
   *  - q47: nearest-within-TIME_DELTA interpolation with out-of-range
   *    fallback (reference operator/interpolator/InterpolatorCore.py:
   *    48-130 "nearest" + TimeCoverage.py:287-303 match-or-raise; the
   *    engine returns null + a `matched` metric column instead of
-  *    raising, like the reference's logged fallback) — same banded
-  *    range-join shape over time bins.
+  *    raising, like the reference's logged fallback) — the same LEFT
+  *    `bandedToleranceJoin` over time bins.
   *  - q48: the "quick" nearest-grid-point variant — per-axis argmin on
   *    a REGULAR grid (reference coverage/Coverage.py:526-553: nearest
   *    lon index and nearest lat index found independently), re-expressed
@@ -46,7 +46,7 @@ object ToleranceOps {
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.4 vertical level match: candidates within ±DEPTH_DELTA per
-    // cell, banded equi-join on (cell, floor(z/delta) ± 1)
+    // cell, banded equi-join on (cell, depth bin ± 1)
     "q45_level_match" -> ((s, dir) => {
       val levels = t(s, dir, "part")
         .select(
@@ -58,23 +58,16 @@ object ToleranceOps {
         .select(col("cell"),
           explode(array(Seq(5.25, 17.6, 33.8, 49.9, 60.0).map(lit): _*)).as("probe_depth"))
       // out-of-range probes stay, with 0 candidates (the reference logs
-      // a warning and returns an empty candidate set, :284-287) — via a
-      // LEFT banded join with the ±delta residual moved into the
-      // conditional aggregates (the q47 rewrite): count(when(cond, 1))
-      // reads 0 and min_by skips null orderings for unmatched probes,
-      // so no second probes join restores them. min_by is KEPT (same
-      // ordering expression over the same candidate set = identical
-      // tie behavior as the inner-join formulation); the call-site
-      // mirrors bandedToleranceJoin's lossless ±1-bin expansion.
-      def bin(c: org.apache.spark.sql.Column) =
-        floor(c / lit(DepthDelta)).cast("long")
+      // a warning and returns an empty candidate set, :284-287): a LEFT
+      // bandedToleranceJoin keeps every probe, and the conditional
+      // aggregates skip its null-extended rows — count(when(cond, 1))
+      // reads 0 and min_by skips null orderings for unmatched probes, so
+      // no second probes join restores them. min_by is KEPT (same
+      // ordering expression over the same candidate set = identical tie
+      // behavior as the inner-join formulation).
       val cond = abs(col("z") - col("probe_depth")) <= lit(DepthDelta)
       probes
-        .withColumn("_tbin", explode(array(
-          bin(col("probe_depth")) - 1, bin(col("probe_depth")),
-          bin(col("probe_depth")) + 1)))
-        .join(levels.withColumn("_tbin", bin(col("z"))),
-          Seq("cell", "_tbin"), "left")
+        .bandedToleranceJoin(levels, Seq("cell"), "probe_depth", "z", DepthDelta, "left")
         .groupBy(col("cell"), col("probe_depth"))
         .agg(
           count(when(cond, lit(1))).as("n_candidates"),
@@ -83,37 +76,23 @@ object ToleranceOps {
     }),
 
     // §2.9 nearest-within-tolerance time interpolation + fallback flag.
-    // round-7, twice refined: the nearest candidate is picked with
-    // min(struct(|Δt|, ts, event_id, value)) — lexicographically
-    // identical to the old row_number-over-(|Δt|, ts, event_id) pick
-    // (the sort key is unique per candidate, so `value` never decides)
-    // — because the aggregate gets map-side PARTIAL aggregation:
-    // candidates collapse to one row per (user, probe) per task before
-    // the shuffle, where the window shuffled and sorted every candidate
-    // row (guide §2.3). Then the join-back was removed: the banded join
-    // is inlined as a LEFT join on (user, bin) with the ±delta residual
-    // moved INTO the conditional min (out-of-delta and null-extended
-    // rows yield a null struct, which min ignores), so unmatched probes
-    // ride the same aggregate with _b = null instead of being restored
-    // by a second probes join — one SMJ + two exchanges of the probe
-    // grid gone (interleaved A/B in OPTIMIZATION_r07.md: fused wins
-    // 3/3, 0.71-0.82 s vs 1.47-1.77 s warm). The shared bandedToleranceJoin
-    // operator keeps its inner-join contract; this call-site mirrors
-    // its lossless ±1-bin expansion (any row within ±delta of _pus
-    // lies in bins floor(_pus/delta) ± 1).
+    // The nearest candidate is min(struct(|Δt|, ts, event_id, value)):
+    // the same pick as row_number over (|Δt|, ts, event_id) (that key is
+    // unique per candidate, so `value` never decides), but with map-side
+    // PARTIAL aggregation — candidates collapse per (user, probe) per
+    // task before the shuffle (guide §2.3). A LEFT bandedToleranceJoin
+    // keeps unmatched probes: the ±delta condition inside the min turns
+    // their null-extended rows into a null struct, which min ignores, so
+    // _b = null flags the fallback with no second probes join
+    // (OPTIMIZATION_r07.md: 0.71-0.82 s vs 1.47-1.77 s warm).
     "q47_interp_nearest" -> ((s, dir) => {
       val probes = Relational.probeGrid(s, dir)
         .withColumn("_pus", unix_micros(col("probe_ts").cast("timestamp")))
       val ev = t(s, dir, "events")
         .select(col("user_id"), col("ts"), col("value"), col("event_id"))
         .withColumn("_eus", unix_micros(col("ts").cast("timestamp")))
-      def bin(c: org.apache.spark.sql.Column) =
-        floor(c / lit(TimeDeltaUs.toDouble)).cast("long")
       probes
-        .withColumn("_tbin", explode(array(
-          bin(col("_pus")) - 1, bin(col("_pus")), bin(col("_pus")) + 1)))
-        .join(ev.withColumn("_tbin", bin(col("_eus"))),
-          Seq("user_id", "_tbin"), "left")
+        .bandedToleranceJoin(ev, Seq("user_id"), "_pus", "_eus", TimeDeltaUs.toDouble, "left")
         .groupBy(col("user_id"), col("probe_ts"))
         .agg(min(when(abs(col("_eus") - col("_pus")) <= lit(TimeDeltaUs.toDouble),
           struct(abs(col("_eus") - col("_pus")).as("_ad"),

@@ -7,46 +7,103 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
 
-/** Optimizer rule: rewrite tolerance range joins into banded equi-joins.
+/** The banded tolerance join, decided once for its two entry points,
+  * `BandedRangeJoinRule` (Catalyst) and `Graft.bandedToleranceJoin`
+  * (DataFrames): both sides are cut into width-d bins, each left row is
+  * copied to its bins -1, 0 and +1, and the join is EQUI on (keys...,
+  * bin) with `|r - l| <= d` as a residual INSIDE the join condition.
+  * Lossless: intervals of width >= d put two points within d into the
+  * same or adjacent intervals. This is the bucket-then-residual
+  * candidate generation of approximate geospatial joins (ICDE 2018) and
+  * the range-join binning of Databricks SQL and Flink interval joins,
+  * for the engine's tolerance matches (SURVEY.md §2.4: time
+  * ±TIME_DELTA, depth ±DEPTH_DELTA).
+  *
+  * Bins are computed in the OPERANDS' OWN type, so bin and residual
+  * never disagree: integral operands with integral division (a
+  * double-cast bin misplaces values beyond 2^53 and drops rows),
+  * float/double in double (their residual evaluates in double),
+  * timestamps on exact epoch micros. DecimalType has no bin (a double
+  * bin could misplace high-precision values).
+  */
+object Band {
+
+  /** The one reserved name of the bin column, on both sides. */
+  val BinCol = "_graft_bin"
+
+  /** Bin function in the operand's own type space (None = unsupported
+    * type). Integral/timestamp bins use truncating integral division:
+    * its intervals all have width >= ceil(d) (the one around zero is
+    * wider), which keeps the ±1 expansion lossless. */
+  def binFn(t: DataType, d: Double): Option[Expression => Expression] = {
+    val w = Literal(math.max(math.ceil(d).toLong, 1L))
+    t match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        Some(x => new IntegralDivide(Cast(x, LongType), w))
+      case DoubleType | FloatType => Some(x => Floor(Divide(Cast(x, DoubleType), Literal(d))))
+      case TimestampType => Some(x => new IntegralDivide(UnixMicros(x), w)) // d in micros
+      case TimestampNTZType =>
+        // fixed UTC zone, NOT the session zone: NTZ residuals evaluate in
+        // wall-clock space, and a DST-observing session zone folds an
+        // hour at fall-back — two rows within tolerance straddling the
+        // transition would land >1 bin apart and be silently dropped.
+        Some(x => new IntegralDivide(UnixMicros(Cast(x, TimestampType, Some("UTC"))), w))
+      case _ => None
+    }
+  }
+
+  /** `|r - l| <= d` for numeric operands of type `t`, with d in that
+    * type when integral: an integral difference is within d exactly when
+    * it is within floor(d), and no double cast rounds it. */
+  def residual(t: DataType, l: Expression, r: Expression, d: Double): Expression =
+    LessThanOrEqual(Abs(Subtract(r, l)), t match {
+      case ByteType | ShortType | IntegerType | LongType => Literal(math.floor(d).toLong)
+      case _ => Literal(d)
+    })
+
+  /** The ±1 expansion of a left row's bin. */
+  def expand(bin: Expression): Generator =
+    Explode(CreateArray(Seq(Subtract(bin, Literal(1L)), bin, Add(bin, Literal(1L)))))
+
+  /** Whether `g` is an [[expand]] of a bin. */
+  def isExpansion(g: Generator): Boolean = g match {
+    case Explode(CreateArray(Seq(
+        Subtract(b1, Literal(1L, LongType), _), b2, Add(b3, Literal(1L, LongType), _)), _)) =>
+      (b2 match {
+        case Floor(Divide(_, _: Literal, _)) => true
+        case d: IntegralDivide => d.right.isInstanceOf[Literal]
+        case _ => false
+      }) && b1.semanticEquals(b2) && b3.semanticEquals(b2)
+    case _ => false
+  }
+
+  /** The join condition: the caller's conjuncts (residual included) AND
+    * bin equality. Keeping the residual in the condition is what makes a
+    * LEFT join null-extend an unmatched band row instead of dropping it,
+    * and keeps the rule's join away from predicate pushdown. */
+  def condition(conjuncts: Seq[Expression], lBin: Expression, rBin: Expression): Expression =
+    (conjuncts :+ EqualTo(lBin, rBin)).reduce(And)
+}
+
+/** Optimizer rule: rewrite tolerance range joins into the [[Band]] join.
   *
   * A join whose condition contains `abs(l - r) <= d` (l from the left
   * side, r from the right, d a positive literal) would plan as a
   * cartesian/nested-loop product, or — with extra equi keys — as an
   * equi-join whose per-key candidate set is the key's WHOLE range. The
-  * rewrite buckets both sides into width-d bins, explodes the left side
-  * to bins ±1, joins EQUI on (existing equi keys..., bin), and keeps the
-  * original range predicate as a residual inside the join condition —
-  * the same lossless transformation `Graft.bandedToleranceJoin` applies
-  * by hand (any partition into intervals of width >= d puts two points
-  * within d into the same or adjacent intervals), but driven from the
-  * natural user-written predicate. This is the banded/bucketed
-  * range-join optimization Databricks SQL and Flink interval joins
-  * apply; re-derived here for the engine's tolerance-match operators
-  * (SURVEY.md §2.4: time ±TIME_DELTA, depth ±DEPTH_DELTA).
+  * rule bands it from that natural predicate, which stays the residual
+  * (so null semantics are preserved); `Graft.bandedToleranceJoin` builds
+  * the same join from DataFrame columns.
   *
   * Enable with `spark.sql.extensions=graft.plans.GraftExtensions`.
   *
-  * Binning is computed in the OPERANDS' OWN post-coercion type so the
-  * bin and the residual predicate can never disagree:
-  *  - integral operands bin with integral division (exact at any
-  *    magnitude — a double-cast bin would misplace values beyond 2^53,
-  *    e.g. nanosecond epochs, and silently drop rows);
-  *  - float/double operands bin in double (their residual already
-  *    evaluates in double, so bin-space == residual-space);
-  *  - timestamp operands (`abs(ts_l - ts_r) <= INTERVAL`) bin on exact
-  *    epoch micros;
-  *  - DecimalType operands are NOT rewritten (a double bin could
-  *    misplace high-precision values; binning exactly in decimal space
-  *    is possible but not needed by the engine's operators).
-  *
-  * Scope guards: inner joins; `d > 0`; fires once (guarded by a
-  * STRUCTURAL check for a band-Generate feeding the join — a user
-  * column that merely shares the generated name cannot disable it).
-  * Null semantics are preserved by keeping the original predicate as
-  * the residual. Supported value domain: `l - r` must not overflow
-  * long for integral operands with ANSI off (a wrapped subtraction
-  * satisfies the residual but lands in distant bins; operands within a
-  * 2^63 span of each other are exact).
+  * Scope guards: inner joins; operands of one type [[Band.binFn]] bins;
+  * `d > 0`; fires once (guarded by a STRUCTURAL check for a band
+  * Generate feeding the join, whoever built it — a user column that
+  * merely shares the bin name cannot disable it). Supported value
+  * domain: `l - r` must not overflow long for integral operands with
+  * ANSI off (a wrapped subtraction satisfies the residual but lands in
+  * distant bins).
   */
 object BandedRangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -74,68 +131,27 @@ object BandedRangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
       case Abs(SubtractTimestamps(a, b, _, _), _) => Some((a, b))
       case _                                  => None
     }
-    c match {
-      case LessThanOrEqual(absE, d) =>
-        for (dd <- tolLit(d); (a, b) <- operands(absE); (l, r) <- sides(a, b))
-          yield (l, r, dd)
-      case GreaterThanOrEqual(d, absE) =>
-        for (dd <- tolLit(d); (a, b) <- operands(absE); (l, r) <- sides(a, b))
-          yield (l, r, dd)
-      case _ => None
+    val bound = c match {
+      case LessThanOrEqual(absE, d)    => Some((absE, d))
+      case GreaterThanOrEqual(d, absE) => Some((absE, d))
+      case _                           => None
     }
+    for ((absE, d) <- bound; dd <- tolLit(d); (a, b) <- operands(absE); (l, r) <- sides(a, b))
+      yield (l, r, dd)
   }
 
-  /** Bin function in the operand's own type space (None = unsupported
-    * type, skip the rewrite). Integral/timestamp bins use truncating
-    * integral division: its intervals all have width >= ceil(d) (the
-    * one around zero is wider), which keeps the ±1 expansion lossless. */
-  private def binFn(t: DataType, d: Double): Option[Expression => Expression] = t match {
-    case ByteType | ShortType | IntegerType | LongType =>
-      val w = Literal(math.max(math.ceil(d).toLong, 1L))
-      Some(x => new IntegralDivide(Cast(x, LongType), w))
-    case DoubleType | FloatType =>
-      Some(x => Floor(Divide(Cast(x, DoubleType), Literal(d))))
-    case TimestampType =>
-      val w = Literal(math.max(math.ceil(d).toLong, 1L)) // d already micros
-      Some(x => new IntegralDivide(UnixMicros(x), w))
-    case TimestampNTZType =>
-      val w = Literal(math.max(math.ceil(d).toLong, 1L))
-      // fixed UTC zone, NOT the session zone: NTZ residuals evaluate in
-      // wall-clock space, and a DST-observing session zone folds an hour
-      // at fall-back — two rows within tolerance straddling the
-      // transition would land >1 bin apart and be silently dropped. UTC
-      // keeps the bin affine to the wall-clock residual at all times.
-      Some(x => new IntegralDivide(
-        UnixMicros(Cast(x, TimestampType, Some("UTC"))), w))
-    case _ => None // DecimalType etc. — see scaladoc
-  }
-
-  private def isBinExpr(e: Expression): Boolean = e match {
-    case Floor(Divide(_, _: Literal, _))       => true
-    case d: IntegralDivide                     => d.right.isInstanceOf[Literal]
-    case _                                     => false
-  }
-
-  /** Attributes produced by a band Generate (explode of [bin-1, bin,
-    * bin+1]) anywhere under `plan`. A join whose condition references
-    * one was already rewritten — the STRUCTURAL form of the guard, so a
-    * user column named like the generated attribute cannot suppress the
-    * rule, and other rules renaming attributes cannot re-trigger it.
-    * The guard matters because `injectOptimizerRule` places user rules
-    * in FIXED-POINT batches that also run predicate pushdown — without
-    * it, the rule and PushDownPredicates ping-pong (each iteration
-    * re-banding the same join) until max-iterations, stacking
-    * Generates. */
+  /** Attributes produced by a band Generate anywhere under `plan`. A
+    * join whose condition references one was already banded — the
+    * STRUCTURAL form of the guard, so a user column named like the
+    * generated attribute cannot suppress the rule, and other rules
+    * renaming attributes cannot re-trigger it. The guard matters because
+    * `injectOptimizerRule` places user rules in FIXED-POINT batches that
+    * also run predicate pushdown — without it, the rule and
+    * PushDownPredicates ping-pong (each iteration re-banding the same
+    * join) until max-iterations, stacking Generates. */
   private def bandGeneratedAttrs(plan: LogicalPlan): AttributeSet = AttributeSet(
-    plan.collect {
-      case g: Generate => g.generator match {
-        case Explode(CreateArray(Seq(
-            Subtract(b1, Literal(1L, LongType), _), b2, Add(b3, Literal(1L, LongType), _)), _))
-            if isBinExpr(b2) && b1.semanticEquals(b2) && b3.semanticEquals(b2) =>
-          g.generatorOutput
-        case _ => Nil
-      }
-    }.flatten)
+    plan.collect { case g: Generate if Band.isExpansion(g.generator) => g.generatorOutput }
+      .flatten)
 
   private def alreadyBanded(j: Join): Boolean =
     j.condition.exists(_.references.intersect(bandGeneratedAttrs(j.left)).nonEmpty)
@@ -143,31 +159,19 @@ object BandedRangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case j @ Join(left, right, Inner, Some(cond), hint) if !alreadyBanded(j) =>
       val conjuncts = splitConjunctivePredicates(cond)
-      val tol = conjuncts.iterator
-        .map(c => (c, toleranceConjunct(c, left, right)))
-        .collectFirst { case (c, Some(t)) => (c, t) }
-      tol match {
-        case Some((_, (l, r, d))) if l.dataType == r.dataType =>
-          binFn(l.dataType, d) match {
-            case Some(bin) =>
-              val lBin = bin(l)
-              val binAttr = AttributeReference("_graft_bin", LongType, nullable = true)()
-              val gen = Generate(
-                Explode(CreateArray(Seq(
-                  Subtract(lBin, Literal(1L)), lBin, Add(lBin, Literal(1L))))),
-                unrequiredChildIndex = Nil, outer = false, qualifier = None,
-                generatorOutput = Seq(binAttr), child = left)
-              val rBinAlias = Alias(bin(r), "_graft_bin_r")()
-              val proj = Project(right.output :+ rBinAlias, right)
-              // the residual range predicate stays INSIDE the join
-              // condition: hoisting it as a Filter would hand it straight
-              // back to predicate pushdown (see bandGeneratedAttrs)
-              val newCond = (conjuncts :+ EqualTo(binAttr, rBinAlias.toAttribute)).reduce(And)
-              Project(j.output, Join(gen, proj, Inner, Some(newCond), hint))
-            case None => j
-          }
-        case _ => j
+      val banded = for {
+        (l, r, d) <- conjuncts.iterator.flatMap(toleranceConjunct(_, left, right)).nextOption()
+        if l.dataType == r.dataType
+        bin <- Band.binFn(l.dataType, d)
+      } yield {
+        val binAttr = AttributeReference(Band.BinCol, LongType, nullable = true)()
+        val gen = Generate(Band.expand(bin(l)), unrequiredChildIndex = Nil, outer = false,
+          qualifier = None, generatorOutput = Seq(binAttr), child = left)
+        val rBin = Alias(bin(r), Band.BinCol)()
+        val newCond = Band.condition(conjuncts, binAttr, rBin.toAttribute)
+        Project(j.output, Join(gen, Project(right.output :+ rBin, right), Inner, Some(newCond), hint))
       }
+      banded.getOrElse(j)
   }
 }
 

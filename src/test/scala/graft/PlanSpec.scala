@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.Generate
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc._
@@ -141,10 +143,36 @@ class PlanSpec extends AnyFunSuite {
     // nodes — pin the counts
     def joins(p: String): Int =
       "HashJoin|SortMergeJoin|NestedLoopJoin|CartesianProduct".r.findAllIn(p).size
-    val p45 = planOf(SparkEntry.queries("q45_level_match")(spark, sf))
-    assert(joins(p45) == 1, s"q45 must be one banded LEFT join, got ${joins(p45)}:\n${p45.take(2000)}")
-    val p47 = planOf(SparkEntry.queries("q47_interp_nearest")(spark, sf))
-    assert(joins(p47) == 1, s"q47 must be one banded LEFT join, got ${joins(p47)}:\n${p47.take(2000)}")
+    // q18/q45/q47 (bandedToleranceJoin) and q68 (BandedRangeJoinRule)
+    // share one banded shape: one band Generate, one join, no product
+    def bands(df: org.apache.spark.sql.DataFrame): Int = df.queryExecution.optimizedPlan
+      .collect { case g: Generate if graft.plans.Band.isExpansion(g.generator) => g }.size
+    for (q <- Seq("q18_range_join_time", "q45_level_match", "q47_interp_nearest",
+        "q68_range_join_rule")) {
+      val df = SparkEntry.queries(q)(spark, sf)
+      val p = planOf(df)
+      assert(bands(df) == 1, s"$q must have one band Generate:\n${p.take(2000)}")
+      assert(joins(p) == 1, s"$q must be one banded join, got ${joins(p)}:\n${p.take(2000)}")
+      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+        s"$q planned a product join:\n${p.take(2000)}")
+    }
+    // the rule recognizes a band the primitive built: q18 in a session
+    // with GraftExtensions installed is not banded a second time
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val s2 = SparkSession.builder().master("local[4]")
+        .withExtensions(new graft.plans.GraftExtensions()).getOrCreate()
+      import s2.implicits._
+      val natural = Seq((1L, 1.0)).toDF("k", "lx").join(Seq((1L, 1.5)).toDF("rk", "rx"),
+        col("k") === col("rk") && abs(col("lx") - col("rx")) <= lit(1.0))
+      assert(bands(natural) == 1, "the extension's rule is not installed")
+      val q18 = SparkEntry.queries("q18_range_join_time")(s2, sf)
+      assert(bands(q18) == 1, s"q18 banded twice:\n${planOf(q18).take(2000)}")
+    } finally {
+      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(spark)
+    }
     val p48 = planOf(SparkEntry.queries("q48_quick_nn")(spark, sf))
     assert("BroadcastNestedLoopJoin".r.findAllIn(p48).size == 1,
       s"q48 must cross ONE tagged-union axis product:\n${p48.take(2000)}")

@@ -144,15 +144,52 @@ class ToleranceSpec extends AnyFunSuite {
 
   test("bandedToleranceJoin enforces the non-key column-disjointness contract") {
     import spark.implicits._
-    val l = Seq((1L, 10.0, "a")).toDF("k", "x", "tag")
+    val l = Seq((1L, 10.0, "a"), (2L, 50.0, "z")).toDF("k", "x", "tag")
     val r = Seq((1L, 10.5, "b")).toDF("k", "y", "tag") // `tag` collides
-    val e = intercept[IllegalArgumentException] {
-      l.bandedToleranceJoin(r, Seq("k"), "x", "y", 1.0)
+    Seq("inner", "left").foreach { jt =>
+      val e = intercept[IllegalArgumentException] {
+        l.bandedToleranceJoin(r, Seq("k"), "x", "y", 1.0, jt)
+      }
+      assert(e.getMessage.contains("tag"), s"message should name the clash: ${e.getMessage}")
+      // disjoint sides still work; LEFT keeps every left row, with the
+      // band rows that matched nothing null-extended
+      val ok = l.bandedToleranceJoin(r.withColumnRenamed("tag", "rtag"),
+        Seq("k"), "x", "y", 1.0, jt)
+      val matched = ok.filter(col("rtag").isNotNull).select("tag", "rtag").collect()
+        .map(x => (x.getString(0), x.getString(1))).toSeq
+      assert(matched == Seq(("a", "b")), s"$jt")
+      val tags = ok.select("tag").distinct().collect().map(_.getString(0)).toSet
+      assert(tags == (if (jt == "left") Set("a", "z") else Set("a")), s"$jt")
     }
-    assert(e.getMessage.contains("tag"), s"message should name the clash: ${e.getMessage}")
-    // disjoint sides still work
-    val ok = l.bandedToleranceJoin(r.withColumnRenamed("tag", "rtag"),
-      Seq("k"), "x", "y", 1.0)
-    assert(ok.count() == 1)
+    val r2 = r.withColumnRenamed("tag", "rtag")
+    val e = intercept[IllegalArgumentException] {
+      l.bandedToleranceJoin(r2, Seq("k"), "x", "y", 1.0, "right")
+    }
+    assert(e.getMessage.contains("joinType"), e.getMessage)
+    // operands without one numeric bin type are rejected, not mis-binned
+    for (y <- Seq(col("y").cast("decimal(10,2)"), col("y").cast("float")))
+      intercept[IllegalArgumentException] {
+        l.bandedToleranceJoin(r2.withColumn("y", y), Seq("k"), "x", "y", 1.0)
+      }
+  }
+
+  test("bandedToleranceJoin bins longs beyond 2^53 exactly (no double-cast row loss)") {
+    import spark.implicits._
+    // adjacent doubles near 2^60 are 256 apart: a double bin moves longs
+    // within the tolerance of each other into bins far apart
+    val base = 1L << 60
+    val rnd = new scala.util.Random(53L)
+    def side(x: String, y: String) = Seq.fill(2000)((rnd.nextInt(4).toLong,
+      base + rnd.nextInt(4000), rnd.nextInt(1000))).toDF("k", x, y)
+    val l = side("lx", "lp")
+    val r = side("rx", "rp")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("k", "lx", "rx", "lp", "rp")
+      .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getInt(3), x.getInt(4)))
+      .sorted.toSeq
+    val exact = rows(l.join(r, Seq("k")).filter(abs(col("rx") - col("lx")) <= 3))
+    val banded = rows(l.bandedToleranceJoin(r, Seq("k"), "lx", "rx", 3.0))
+    assert(exact.size > 1000)
+    val same = banded == exact // a Boolean, so a failure prints the counts only
+    assert(same, s"banded ${banded.size} vs exact ${exact.size}")
   }
 }

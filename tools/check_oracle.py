@@ -4,6 +4,10 @@
 each <outDir>/<name> parquet result against the DuckDB oracle SQL in
 <outDir>/oracle_sql.json over the same sf tables.
 
+A query named in oracle_sql.json with no output dir (Verify logs
+`[verify] <name> failed` and writes nothing) is reported as MISSING and
+counts against the total. Exits 1 unless every oracle-backed query is OK.
+
 Usage: python3 tools/check_oracle.py <sfDir> <outDir>
 """
 import sys, os, json, glob
@@ -21,7 +25,9 @@ def main(sf_dir, out_dir):
         name = os.path.basename(p).replace(".parquet", "")
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
     oracles = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
-    results = {}
+    results = {name: "MISSING (no output dir: the query threw in Verify)"
+               for name in oracles
+               if not os.path.isdir(os.path.join(out_dir, name))}
     for name in sorted(os.listdir(out_dir)):
         d = os.path.join(out_dir, name)
         if not os.path.isdir(d):
@@ -60,10 +66,11 @@ def main(sf_dir, out_dir):
         else:
             results[name] = f"OK rows={len(g)}"
     width = max(len(k) for k in results) if results else 0
-    n_ok = sum(1 for v in results.values() if v.startswith("OK"))
     for k, v in sorted(results.items()):
         print(f"{k:<{width}}  {v}")
-    print(f"\n{n_ok}/{len(results)} exact-match OK")
+    n_ok = sum(1 for k in oracles if results[k].startswith("OK"))
+    print(f"\n{n_ok}/{len(oracles)} exact-match OK")
+    return 0 if n_ok == len(oracles) else 1
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    sys.exit(main(sys.argv[1], sys.argv[2]))
