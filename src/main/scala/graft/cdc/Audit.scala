@@ -204,8 +204,7 @@ final class Audit(val dir: String) {
     * mergeSchema: an audit dir may span engine versions that added
     * metric columns (e.g. late_events); a single-footer schema would
     * read such a dir nondeterministically. */
-  def read(spark: SparkSession, pinTimeoutMs: Long = 30000L,
-      unpinnedFallback: Boolean = false): DataFrame = {
+  def read(spark: SparkSession): DataFrame = {
     val root = java.nio.file.Paths.get(dir)
     val files = new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
     val err = new java.util.concurrent.atomic.AtomicReference[Throwable](null)
@@ -229,30 +228,16 @@ final class Audit(val dir: String) {
     })
     // BOUNDED await: behind a deep recordAsync/compactAsync backlog the
     // serialized listing may not get its turn for a long time, and a
-    // monitoring read must not hang indefinitely. On timeout the
-    // DEFAULT is to FAIL with an actionable error — the pinned
-    // snapshot is the coherence guarantee callers rely on, and
-    // silently downgrading to an unpinned directory read could
-    // double-count a compaction's inputs+output or scan files it is
-    // deleting. Callers that prefer availability over coherence (a
-    // dashboard) opt in with `unpinnedFallback = true` (stderr-warned).
-    // Interrupts propagate so a stuck reader can be cancelled.
-    val pinned =
-      latch.await(pinTimeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS)
-    if (!pinned) {
-      if (!unpinnedFallback)
-        throw new java.util.concurrent.TimeoutException(
-          s"audit read: pinned-snapshot listing did not complete within " +
-            s"${pinTimeoutMs}ms (deep recordAsync/compactAsync backlog?) — " +
-            "retry with a larger pinTimeoutMs, call flush() first for a " +
-            "quiescent read, or pass unpinnedFallback=true to accept an " +
-            "UNPINNED directory read (may race an in-flight compaction)")
-      System.err.println(
-        s"[audit] WARN: pinned-snapshot listing did not complete within " +
-          s"${pinTimeoutMs}ms; returning an UNPINNED directory read " +
-          "(opt-in) — call flush() first for a coherent snapshot")
-      return spark.read.option("mergeSchema", "true").parquet(dir)
-    }
+    // monitoring read must not hang indefinitely. On timeout it FAILS —
+    // the pinned snapshot is the coherence guarantee callers rely on,
+    // and an unpinned directory read could double-count a compaction's
+    // inputs+output or scan files it is deleting. Interrupts propagate
+    // so a stuck reader can be cancelled.
+    if (!latch.await(Audit.PinTimeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS))
+      throw new java.util.concurrent.TimeoutException(
+        s"audit read: pinned-snapshot listing did not complete within " +
+          s"${Audit.PinTimeoutMs}ms (deep recordAsync/compactAsync backlog?) — " +
+          "retry, or call flush() first for a quiescent read")
     Option(err.get()).foreach(t => throw t)
     val snapshot = files.get()
     if (snapshot.isEmpty) spark.read.option("mergeSchema", "true").parquet(dir)
@@ -261,6 +246,9 @@ final class Audit(val dir: String) {
 }
 
 object Audit {
+  /** How long a read waits for its pinned listing on the audit worker. */
+  private val PinTimeoutMs = 30000L
+
   /** The lineage table's columns, in order: per-bucket applied range,
     * then the epoch's source range and commit. */
   private val schema: StructType = StructType(Seq(

@@ -30,7 +30,6 @@ final case class Snapshot(
     epochId: Long,
     schemaVersion: Int,
     groups: Seq[FileGroup],
-    totalDeltaGroups: Int,
     // high-water mark of applied event LSNs — lets the next epoch count
     // late arrivals (events at or below it) without scanning the table
     maxLsn: Long = -1L,
@@ -53,6 +52,8 @@ final case class Snapshot(
   def watermark(writer: String): Long =
     if (writer == LakeTable.DefaultWriter) epochId
     else writerEpochs.getOrElse(writer, -1L)
+  /** Delta groups still referenced — the compaction cadence's trigger. */
+  def totalDeltaGroups: Int = groups.count(_.kind == "delta")
 }
 
 /** Result of a chunked incremental read ([[LakeTable.readChangesChunked]]):
@@ -69,7 +70,8 @@ final case class ChunkedChanges(
     changes: DataFrame, ranges: Seq[(Long, Long)], resyncVersions: Seq[Long])
 
 /** Thrown when another writer committed a snapshot version first (the
-  * manifest CAS lost). upsert retries internally; compactions abort. */
+  * manifest CAS lost). upsert and rewrites retry internally, each under
+  * its own rule. */
 final class CommitConflictException(version: Long)
   extends RuntimeException(s"snapshot v$version was committed concurrently")
 
@@ -140,8 +142,9 @@ object LakeTable {
     * durable, nothing referenced),
     * `commit.after-tmp` (manifest tmp durable, not published),
     * `commit.after-publish` (published; HEAD hint + tmp cleanup lost),
-    * `compact.after-write` / `rebucket.after-write` (rewritten group
-    * durable, old manifest still current),
+    * `compact.after-write` (compact and compactBuckets) /
+    * `rebucket.after-write` (rewritten group durable, old manifest
+    * still current),
     * `vacuum.after-manifest-expire` (old manifests gone, orphan data
     * sweep not yet run). */
   private[graft] var failpoint: String => Unit = _ => ()
@@ -270,7 +273,6 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
       node.get("epochId").asLong(),
       node.get("schemaVersion").asInt(),
       groups,
-      groups.count(_.kind == "delta"),
       if (node.has("maxLsn")) node.get("maxLsn").asLong() else -1L,
       // legacy manifests (pre-persistence) trust the constructor default
       if (node.has("numBuckets")) node.get("numBuckets").asInt() else numBuckets,
@@ -288,8 +290,9 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
     * is the compare-and-swap Iceberg's metadata commit does against the
     * catalog). A crash before the link leaves only unreferenced tmp/data
     * files, never a partially visible snapshot. The manifest directory
-    * is fsync'd after publishing so the commit survives power loss. */
-  private def commitManifest(s: Snapshot): Unit = {
+    * is fsync'd after publishing so the commit survives power loss.
+    * Returns `s`, now the head. */
+  private def commitManifest(s: Snapshot): Snapshot = {
     val obj: ObjectNode = mapper.createObjectNode()
     obj.put("version", s.version)
     obj.put("epochId", s.epochId)
@@ -357,6 +360,7 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
     Files.deleteIfExists(tmp)
     fsync(manifestDir)
     writeHead(s.version)
+    s
   }
 
   /** Best-effort fsync of a file or directory (a directory fsync makes
@@ -397,8 +401,8 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
   def bucketCol: org.apache.spark.sql.Column = bucketColFor(bucketCount)
 
   /** Write `src` (already carrying a group's state columns) as one
-    * bucketed parquet group; shared by the four group writers (epoch
-    * upsert, full compact, rebucket, per-bucket compact). The dir name
+    * bucketed parquet group; shared by the epoch upsert and the rewrite
+    * behind compact, compactBuckets and rebucket. The dir name
     * is a FULL UUID: these dirs are written with mode(Overwrite), so a
     * truncated-prefix collision with a live referenced group would
     * silently destroy committed data.
@@ -443,9 +447,22 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
   private def bucketColFor(nb: Int) =
     pmod(xxhash64(col("repo"), col("path")), lit(nb.toLong)).as("bucket")
 
-  private def stateCols(schemaVersion: Int): Seq[String] = {
-    val payload = SchemaRegistry.physicalSchema(schemaVersion).fieldNames.toSeq
-    Seq("repo", "path", "op", "lsn", "ts") ++ payload
+  /** A group's columns: key, op, lsn, ts, then the payload as written
+    * at `schemaVersion` — by default the current schema, which every
+    * rewrite and the change feed use. */
+  private def stateCols(schemaVersion: Int = SchemaRegistry.maxVersion): Seq[String] =
+    Seq("repo", "path", "op", "lsn", "ts") ++
+      SchemaRegistry.physicalSchema(schemaVersion).fieldNames
+
+  /** Empty frame with the state / change-feed schema — a read must not
+    * change schema with table emptiness. */
+  private def emptyChangeFrame(spark: SparkSession): DataFrame = {
+    val fields = Seq(
+      StructField("repo", StringType), StructField("path", StringType),
+      StructField("op", StringType), StructField("lsn", LongType),
+      StructField("ts", TimestampType)) ++
+      SchemaRegistry.fields.map(f => StructField(f.current.name, f.current.dataType))
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StructType(fields))
   }
 
   // ---- upsert (merge-on-read) --------------------------------------
@@ -511,12 +528,10 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
         else
           (base.map(_.epochId).getOrElse(-1L),
             base.map(_.writerEpochs).getOrElse(Map.empty[String, Long]) + (writer -> epochId))
-      val next = Snapshot(
-        base.map(_.version).getOrElse(0L) + 1L, newEpochId, newSchemaVersion, groups,
-        groups.count(_.kind == "delta"),
-        math.max(base.map(_.maxLsn).getOrElse(-1L), maxLsn), nb, newWriterEpochs)
       try {
-        commitManifest(next)
+        val next = commitManifest(Snapshot(
+          base.map(_.version).getOrElse(0L) + 1L, newEpochId, newSchemaVersion, groups,
+          math.max(base.map(_.maxLsn).getOrElse(-1L), maxLsn), nb, newWriterEpochs))
         return CommitResult(committed = true, written, Some(next))
       } catch {
         case _: CommitConflictException =>
@@ -612,18 +627,9 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
     * tombstones at the end (readAt). */
   private def reconstructAt(spark: SparkSession, snapshot: Option[Snapshot],
       onlyBuckets: Option[Set[Int]] = None): DataFrame = {
-    val payload = SchemaRegistry.currentPayloadNames
-    val valueCols = Seq("op", "lsn", "ts") ++ payload
+    val valueCols = stateCols().filterNot(SchemaRegistry.keyFields.contains)
     rawRows(spark, snapshot, onlyBuckets) match {
-      case None =>
-        // same shape as the non-empty branch — a read must not change
-        // schema with table emptiness
-        val fields = Seq(
-          StructField("repo", StringType), StructField("path", StringType),
-          StructField("op", StringType), StructField("lsn", LongType),
-          StructField("ts", TimestampType)) ++
-          SchemaRegistry.fields.map(f => StructField(f.current.name, f.current.dataType))
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StructType(fields))
+      case None => emptyChangeFrame(spark)
       case Some(df) =>
         df.groupBy(col("repo"), col("path"))
           .agg(max_by(struct(valueCols.map(col): _*), col("lsn")).as("s"))
@@ -639,57 +645,47 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
     * CDC stages. O(changed rows): reads only the delta groups those
     * snapshots appended, never the base.
     *
-    * Fails if the range crosses a compaction (a rewrite replaces
-    * groups, so per-epoch deltas are no longer reconstructible —
-    * same contract as Iceberg's incremental read); callers then fall
-    * back to a full `read`. */
+    * Fails unless `toVersion` evolved from `sinceVersion` by appends
+    * only ([[appendOnlySince]]; version 0 is the empty table): a
+    * compaction or rebucket replaces or re-excludes groups, so per-epoch
+    * deltas are no longer reconstructible — same contract as Iceberg's
+    * incremental read. Callers then fall back to [[readChangesChunked]]
+    * or a full `read`. */
   def readChanges(spark: SparkSession, sinceVersion: Long, toVersion: Long): DataFrame = {
-    // sinceVersion = 0 means "from table creation"; any other missing
-    // version (expired or never existed) must fail loudly — treating it
-    // as 'beginning' would silently re-deliver the whole history
-    val from =
-      if (sinceVersion == 0L) Set.empty[String]
-      else snapshotAt(sinceVersion).map(_.groups.map(_.dir).toSet).getOrElse(
-        throw new IllegalArgumentException(
-          s"no snapshot at sinceVersion $sinceVersion (expired?); use 0 for from-start"))
     val to = snapshotAt(toVersion).getOrElse(
       throw new IllegalArgumentException(s"no snapshot at version $toVersion"))
-    if (!from.subsetOf(to.groups.map(_.dir).toSet))
+    // any missing sinceVersion but 0 (expired or never existed) must
+    // fail loudly — treating it as 'beginning' would silently
+    // re-deliver the whole history
+    val from =
+      if (sinceVersion == 0L) emptySnapshot(to.numBuckets)
+      else snapshotAt(sinceVersion).getOrElse(
+        throw new IllegalArgumentException(
+          s"no snapshot at sinceVersion $sinceVersion (expired?); use 0 for from-start"))
+    if (!appendOnlySince(from, to))
       throw new IllegalStateException(
-        s"snapshot range ($sinceVersion, $toVersion] crosses a compaction; use read()")
-    val appended = to.groups.filterNot(g => from.contains(g.dir))
-    if (appended.exists(_.kind == "base"))
-      throw new IllegalStateException(
-        s"snapshot range ($sinceVersion, $toVersion] contains a compacted base; use read()")
-    if (appended.exists(_.excludedBuckets.nonEmpty))
-      throw new IllegalStateException(
-        s"snapshot range ($sinceVersion, $toVersion] crosses a per-bucket compaction; use read()")
-    val payload = SchemaRegistry.currentPayloadNames
-    val cols = Seq("repo", "path", "op", "lsn", "ts") ++ payload
-    appended
+        s"snapshot range ($sinceVersion, $toVersion] crosses a compaction or rebucket; " +
+          "use readChangesChunked() or read()")
+    to.groups.filterNot(g => from.groups.exists(_.dir == g.dir))
       .map(g => SchemaRegistry.alignToCurrent(spark.read.parquet(s"$root/${g.dir}")))
       .reduceOption((a, b) => a.unionByName(b, allowMissingColumns = true))
-      .map(_.select(cols.map(col): _*))
+      .map(_.select(stateCols().map(col): _*))
       .getOrElse(emptyChangeFrame(spark))
   }
 
-  /** Empty frame with the change-feed schema (op + key + payload). */
-  private def emptyChangeFrame(spark: SparkSession): DataFrame = {
-    val fields = Seq(
-      StructField("repo", StringType), StructField("path", StringType),
-      StructField("op", StringType), StructField("lsn", LongType),
-      StructField("ts", TimestampType)) ++
-      SchemaRegistry.fields.map(f => StructField(f.current.name, f.current.dataType))
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StructType(fields))
-  }
+  /** The table before its first commit, as the start of a change range:
+    * no group, and `nb` buckets — no bucket count can change before
+    * the first commit. */
+  private def emptySnapshot(nb: Int): Snapshot = Snapshot(0L, -1L, 1, Nil, numBuckets = nb)
 
   /** Chunked fallback for a [[readChanges]] range that crosses
-    * compactions: split (sinceVersion, toVersion] at every
-    * non-append-only commit (full or per-bucket compaction) and union
-    * the readable sub-ranges, so a consumer resumes an incremental
-    * tail without falling back to a full table read. See
-    * [[ChunkedChanges]] for the resync-at-the-boundary contract.
-    * O(manifests in range) metadata + O(changed rows) data. */
+    * compactions: split (sinceVersion, toVersion] at every commit that
+    * is not [[appendOnlySince]] its predecessor (full or per-bucket
+    * compaction, rebucket) and union the readable sub-ranges, so a
+    * consumer resumes an incremental tail without falling back to a
+    * full table read. See [[ChunkedChanges]] for the
+    * resync-at-the-boundary contract. O(manifests in range) metadata +
+    * O(changed rows) data. */
   def readChangesChunked(spark: SparkSession, sinceVersion: Long,
       toVersion: Long): ChunkedChanges = {
     def snap(v: Long): Snapshot = snapshotAt(v).getOrElse(
@@ -710,16 +706,7 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
     var lastRetained = sinceVersion
     vs.foreach { v =>
       val cur = snap(v)
-      val prevGroups = prev.map(_.groups).getOrElse(Nil)
-      val curByDir = cur.groups.map(g => g.dir -> g).toMap
-      // append-only = every prior group survives with identical bucket
-      // exclusions and only plain delta groups were added; anything
-      // else is a rewrite boundary
-      val appendOnly =
-        prevGroups.forall(g => curByDir.get(g.dir).exists(_.excludedBuckets == g.excludedBuckets)) &&
-          cur.groups.filterNot(g => prevGroups.exists(_.dir == g.dir))
-            .forall(g => g.kind == "delta" && g.excludedBuckets.isEmpty)
-      if (!appendOnly) {
+      if (!appendOnlySince(prev.getOrElse(emptySnapshot(cur.numBuckets)), cur)) {
         if (lastRetained > runStart) ranges += ((runStart, lastRetained))
         resync += v
         runStart = v
@@ -738,9 +725,9 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
   }
 
   /** Rewrite all groups into a single compacted base group at the
-    * current schema version, committed as a new snapshot with the same
-    * epoch high-water mark. The per-batch hot path never pays this; it
-    * runs when delta groups exceed a threshold (Pipeline) or
+    * current schema version, committed through [[rewrite]] with the
+    * same epoch high-water mark. The per-batch hot path never pays
+    * this; it runs when delta groups exceed a threshold (Pipeline) or
     * explicitly.
     *
     * TOMBSTONES ARE RETAINED (with their op='D' and LSN): dropping one
@@ -754,43 +741,9 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
     * delivery contract guarantees nothing older can arrive. Default
     * Long.MinValue = purge nothing (always sound). */
   def compact(spark: SparkSession,
-      purgeTombstonesBelowLsn: Long = Long.MinValue): Unit = {
-    latest().foreach { s =>
-      // the rewrite state is PINNED to s (reconstructAt, not read): a
-      // delta committed between here and the commit below must appear
-      // ONCE — as an appended group the validated retry stacks on top —
-      // not also be absorbed into the base (duplicate rows at equal LSN)
-      val state = reconstructAt(spark, Some(s))
-        .filter(!(col("op") === "D" && col("lsn") <= purgeTombstonesBelowLsn))
-      // compaction rewrites at the current registry schema regardless of
-      // the eras the deltas were written under
-      val cols = Seq("repo", "path", "op", "lsn", "ts") ++ SchemaRegistry.currentPayloadNames
-      val newBase = writeBucketedGroup(state, cols, s.numBuckets, s.numBuckets,
-        SchemaRegistry.maxVersion, "base").toSeq
-      // validated commit retry — same RewriteFiles semantics as
-      // compactBuckets: delta groups appended after `s` stack on top of
-      // the new base (higher LSNs win); any other interleaving aborts
-      var head = s
-      var done = false
-      while (!done) {
-        val appended = head.groups.filterNot(h => s.groups.exists(_.dir == h.dir))
-        val groups = appended ++ newBase
-        try {
-          commitManifest(Snapshot(
-            head.version + 1L, head.epochId, head.schemaVersion, groups,
-            groups.count(_.kind == "delta"), head.maxLsn, head.numBuckets,
-            head.writerEpochs))
-          done = true
-        } catch {
-          case _: CommitConflictException =>
-            latest() match {
-              case Some(h) if h.version > head.version && appendOnlySince(s, h) => head = h
-              case _ => return
-            }
-        }
-      }
-    }
-  }
+      purgeTombstonesBelowLsn: Long = Long.MinValue): Unit =
+    latest().foreach(s =>
+      rewrite(spark, s, None, s.numBuckets, purgeTombstonesBelowLsn, "compact.after-write"))
 
   /** Online bucket-count migration — the Iceberg partition-spec
     * evolution analogue for the bucket transform. A bucket count is
@@ -798,44 +751,33 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
     * right count GROWS with the table (point lookups and per-bucket
     * compaction both scan 1/numBuckets of the data), so a long-lived
     * table needs a way to change it without downtime. Rewrites the
-    * current state into `newBuckets` buckets and commits a snapshot
-    * carrying the new count; every subsequent writer, reader,
-    * point-lookup and compaction derives its hashing from the manifest
-    * (bucketCount), so the switch is atomic at the commit.
+    * current state into `newBuckets` buckets (tombstones included, as
+    * in compact) and commits a snapshot carrying the new count; every
+    * subsequent writer, reader, point-lookup and compaction derives its
+    * hashing from the manifest (bucketCount), so the switch is atomic
+    * at the commit.
     *
-    * Contracts, all inherited from the existing commit discipline:
-    *  - CAS: a rebucket racing an epoch upsert loses and returns false
-    *    (its state was computed against a superseded snapshot); the
-    *    written files become vacuum candidates. Retry re-reads. In the
-    *    other ordering — the rebucket commits while an epoch's files
-    *    are in flight — the UPSERT's conflict retry detects the new
-    *    bucket count and rewrites its batch under it, so a streaming
-    *    writer stays alive across the migration (no downtime either
-    *    way).
+    *  - Races: the commit follows [[rewrite]]'s rule — it lands on top
+    *    of epochs that appended nothing (empty epochs) and returns false
+    *    if any delta group was appended since its read (those deltas
+    *    are hashed with the old count); the written files become
+    *    vacuum candidates and a retry re-reads. In the other ordering —
+    *    the rebucket commits while an epoch's files are in flight — the
+    *    UPSERT's conflict retry detects the new bucket count and
+    *    rewrites its batch under it, so a streaming writer stays alive
+    *    across the migration (no downtime either way).
     *  - Time travel: pre-rebucket snapshots read exactly as before
     *    (readers never assume a global bucket count; only readKey
     *    derives one, from the manifest it reads).
-    *  - Incremental reads: the commit is a base rewrite, so a range
-    *    crossing it is refused by readChanges and surfaced as a
-    *    resync boundary by readChangesChunked — same as compaction. */
+    *  - Incremental reads: the commit is not append-only, so a range
+    *    crossing it is refused by readChanges and surfaced as a resync
+    *    boundary by readChangesChunked — same as compaction. */
   def rebucket(spark: SparkSession, newBuckets: Int): Boolean = {
     require(newBuckets > 0, s"rebucket: newBuckets must be positive, got $newBuckets")
     val s = latest().getOrElse(
       throw new IllegalStateException("rebucket: table has no committed snapshot"))
-    if (s.numBuckets == newBuckets) return true
-    // tombstones ride the migration (same soundness rule as compact:
-    // a dropped tombstone + a late lower-LSN row = a resurrected key)
-    val state = reconstructAt(spark, Some(s))
-    val cols = Seq("repo", "path", "op", "lsn", "ts") ++ SchemaRegistry.currentPayloadNames
-    val newBase = writeBucketedGroup(state, cols, newBuckets, newBuckets,
-      SchemaRegistry.maxVersion, "base").toSeq
-    LakeTable.failpoint("rebucket.after-write")
-    try {
-      commitManifest(Snapshot(
-        s.version + 1L, s.epochId, s.schemaVersion, newBase, 0,
-        s.maxLsn, newBuckets, s.writerEpochs))
-      true
-    } catch { case _: CommitConflictException => false }
+    s.numBuckets == newBuckets ||
+      rewrite(spark, s, None, newBuckets, Long.MinValue, "rebucket.after-write").isDefined
   }
 
   /** Bucket partitions a group actually wrote (directory listing —
@@ -859,92 +801,105 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
     * table to absorb a handful of hot buckets' deltas; this rewrites
     * O(hot-bucket data). Groups whose live buckets are all superseded
     * drop out of the manifest (their files become vacuum candidates for
-    * expireSnapshots). Returns the compacted bucket ids (empty = no-op,
-    * no new snapshot committed). */
+    * expireSnapshots). Tombstones follow compact's rule, but the purge
+    * horizon reaches only the hot buckets this sweep rewrites; a
+    * retention pass over tombstones already folded into base groups
+    * (which never reach `minDeltas`) is compact()'s job — the CLI's
+    * --purge-tombstones-below routes there. Returns the compacted
+    * bucket ids (empty = no-op or an aborted [[rewrite]], no new
+    * snapshot committed). */
   def compactBuckets(spark: SparkSession, minDeltas: Int,
-      purgeTombstonesBelowLsn: Long = Long.MinValue): Set[Int] = {
+      purgeTombstonesBelowLsn: Long = Long.MinValue): Set[Int] =
     latest() match {
       case None => Set.empty
       case Some(s) =>
-        val live: Seq[(FileGroup, Set[Int])] =
-          s.groups.map(g => g -> (groupBuckets(g.dir) -- g.excludedBuckets))
-        val deltaCounts = live.filter(_._1.kind == "delta")
-          .flatMap(_._2).groupBy(identity).view.mapValues(_.size).toMap
-        val hot = deltaCounts.filter(_._2 >= minDeltas).keySet
-        if (hot.isEmpty) return Set.empty
-
-        // merged state of the hot buckets only: partition pruning keeps
-        // the scan O(hot-bucket data); re-deriving bucketCol lands every
-        // row back in its (hot) bucket. Tombstones are RETAINED (op='D'
-        // + LSN) unless at/below the explicit purge horizon — see
-        // compact()'s scaladoc for the late-arrival soundness argument.
-        // NB: the horizon here reaches only the HOT buckets this sweep
-        // rewrites; a RETENTION pass over tombstones already folded into
-        // base groups (which never reach minDeltas) is compact()'s job —
-        // the CLI's --purge-tombstones-below routes there.
-        val state = reconstructAt(spark, Some(s), onlyBuckets = Some(hot))
-          .filter(!(col("op") === "D" && col("lsn") <= purgeTombstonesBelowLsn))
-        val cols = Seq("repo", "path", "op", "lsn", "ts") ++ SchemaRegistry.currentPayloadNames
-        val newBase = writeBucketedGroup(state, cols, s.numBuckets,
-          math.max(hot.size, 1), SchemaRegistry.maxVersion, "base").toSeq
-        LakeTable.failpoint("compact.after-write")
-
-        val kept = live.flatMap { case (g, liveBuckets) =>
-          if ((liveBuckets -- hot).isEmpty) None // fully superseded
-          else Some(g.copy(excludedBuckets = g.excludedBuckets ++ (hot & liveBuckets)))
-        }
-
-        // Commit with Iceberg-style VALIDATED RETRY (RewriteFiles
-        // semantics) rather than abort-on-any-conflict: at the 10^10
-        // design point a sweep takes minutes while epoch upserts commit
-        // every few seconds, so a sweep whose read->commit window must
-        // not span any upsert would never land. The rewrite stays valid
-        // against a newer head iff the head only APPENDED delta groups
-        // since `s` (no interleaved compaction/rebucket touched s's
-        // groups): the new base is exactly state(s) for the hot buckets,
-        // and deltas appended after s carry higher LSNs, so stacking
-        // them on top of the base reconstructs the same LWW state. On
-        // that condition the sweep re-commits METADATA-ONLY (data files
-        // are immutable); otherwise it aborts and its files become
-        // vacuum candidates.
-        var head = s
-        while (true) {
-          val appended = head.groups.filterNot(h => s.groups.exists(_.dir == h.dir))
-          val groups = kept ++ appended ++ newBase
-          try {
-            commitManifest(Snapshot(
-              head.version + 1L, head.epochId, head.schemaVersion, groups,
-              groups.count(_.kind == "delta"), head.maxLsn, head.numBuckets,
-              head.writerEpochs))
-            return hot
-          } catch {
-            case _: CommitConflictException =>
-              val h = latest().getOrElse(return Set.empty)
-              // no forward progress (a manifest file exists at a version
-              // the head does not acknowledge — doctored or torn
-              // metadata) or a non-append interleaving: abort
-              if (h.version <= head.version || !appendOnlySince(s, h)) return Set.empty
-              head = h
-          }
-        }
-        hot // unreachable
+        val hot = s.groups.filter(_.kind == "delta")
+          .flatMap(g => groupBuckets(g.dir) -- g.excludedBuckets)
+          .groupBy(identity).collect { case (b, n) if n.size >= minDeltas => b }.toSet
+        if (hot.nonEmpty && rewrite(spark, s, Some(hot), s.numBuckets, purgeTombstonesBelowLsn,
+            "compact.after-write").isDefined) hot
+        else Set.empty
     }
+
+  /** The one rewrite behind compact, compactBuckets and rebucket, with
+    * Iceberg's RewriteFiles commit validation. It reconstructs the
+    * state PINNED to `s` (only `buckets` when given), drops tombstones
+    * at or below `purgeBelow`, writes it as one base group of `nb`
+    * buckets at the current schema, fires `failpoint`, and commits.
+    * Pinning matters: a delta committed after `s` must appear ONCE —
+    * as an appended group stacked on the new base — not also inside
+    * the base (duplicate rows at equal LSN).
+    *
+    * The commit holds `kept` (the groups of `s` with the rewritten
+    * buckets excluded, a group whose live buckets are all rewritten
+    * dropped; empty on a full rewrite), then the deltas appended since
+    * `s`, then the new base, under the head's epoch watermarks, schema
+    * version and maxLsn — a rewrite changes layout, never the stream
+    * position.
+    *
+    * On a lost CAS it re-commits METADATA-ONLY (data files are
+    * immutable) on the new head iff the head moved forward and only
+    * appended delta groups since `s` ([[appendOnlySince]]): the base is
+    * exactly state(s) for the rewritten buckets and deltas appended
+    * after `s` carry higher LSNs, so stacking them on top reconstructs
+    * the same last-writer-wins state. At the 10^10 design point a
+    * sweep takes minutes while epochs commit every few seconds, so a
+    * rewrite whose window had to span no commit would never land. A
+    * rebucket (`nb` != s.numBuckets) retries only if nothing was
+    * appended: appended deltas are hashed with the old count. Any
+    * other interleaving — another rewrite, or a manifest at a version
+    * the head does not acknowledge (doctored or torn metadata) —
+    * aborts; the written files become vacuum candidates. Returns the
+    * committed snapshot, or None on abort. */
+  private def rewrite(spark: SparkSession, s: Snapshot, buckets: Option[Set[Int]], nb: Int,
+      purgeBelow: Long, failpoint: String): Option[Snapshot] = {
+    val state = reconstructAt(spark, Some(s), buckets)
+      .filter(!(col("op") === "D" && col("lsn") <= purgeBelow))
+    val newBase = writeBucketedGroup(state, stateCols(), nb, buckets.fold(nb)(_.size),
+      SchemaRegistry.maxVersion, "base").toSeq
+    LakeTable.failpoint(failpoint)
+    val kept = buckets.fold(Seq.empty[FileGroup]) { hot =>
+      s.groups.flatMap { g =>
+        val live = groupBuckets(g.dir) -- g.excludedBuckets
+        if ((live -- hot).isEmpty) None
+        else Some(g.copy(excludedBuckets = g.excludedBuckets ++ (hot & live)))
+      }
+    }
+    def appendedSince(h: Snapshot) = h.groups.filterNot(g => s.groups.exists(_.dir == g.dir))
+    @annotation.tailrec
+    def commitOn(head: Snapshot): Option[Snapshot] = {
+      val committed =
+        try Some(commitManifest(Snapshot(head.version + 1L, head.epochId, head.schemaVersion,
+          kept ++ appendedSince(head) ++ newBase, head.maxLsn, nb, head.writerEpochs)))
+        catch { case _: CommitConflictException => None }
+      if (committed.isDefined) committed
+      else latest() match {
+        case Some(h) if h.version > head.version && appendOnlySince(s, h) &&
+            (nb == s.numBuckets || appendedSince(h).isEmpty) => commitOn(h)
+        case _ => None
+      }
+    }
+    commitOn(s)
   }
 
-  /** True iff `head` evolved from `s` by APPENDING delta groups only:
-    * every group of `s` survives in `head` with identical kind and
-    * exclusions, nothing but deltas was added, and the bucketing is
-    * unchanged. This is the validity condition for re-committing a
-    * compaction computed at `s` on top of `head` (see compactBuckets) —
-    * a missing/re-excluded group means another compaction absorbed
-    * rows the rewrite also holds (duplicate rows at equal LSN), and a
-    * bucket-count change means appended deltas use a different
-    * hashing; both are unreconcilable metadata-only. */
+  /** The one append-only rule: true iff `head` evolved from `s` by
+    * APPENDING delta groups only — every group of `s` survives in
+    * `head` with identical kind and exclusions, every added group is a
+    * delta with no exclusions, and the bucket count is unchanged.
+    * Between two snapshots of a change range it means the range holds
+    * per-epoch deltas only (readChanges, readChangesChunked); after a
+    * lost CAS it means a rewrite of `s` may be re-committed on top of
+    * `head` ([[rewrite]]). A missing or re-excluded group means another
+    * rewrite absorbed rows (for a rewrite: duplicate rows at equal
+    * LSN; for a change read: a group's delete may be gone while its
+    * older upsert still reads), and a bucket-count change means later
+    * deltas use a different hashing. */
   private def appendOnlySince(s: Snapshot, head: Snapshot): Boolean =
     head.numBuckets == s.numBuckets &&
       s.groups.forall(g => head.groups.exists(h =>
         h.dir == g.dir && h.kind == g.kind && h.excludedBuckets == g.excludedBuckets)) &&
-      head.groups.filterNot(h => s.groups.exists(_.dir == h.dir)).forall(_.kind == "delta")
+      head.groups.filterNot(h => s.groups.exists(_.dir == h.dir))
+        .forall(h => h.kind == "delta" && h.excludedBuckets.isEmpty)
 
   def deltaGroupCount: Int = latest().map(_.totalDeltaGroups).getOrElse(0)
 

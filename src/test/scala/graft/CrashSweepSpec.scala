@@ -175,21 +175,29 @@ class CrashSweepSpec extends AnyFunSuite {
   }
 
   test("crash at compact.after-write: head state untouched, retry compacts, vacuum reclaims") {
-    val dir = TestSpark.tmpDir("crash-compact")
-    val t = new LakeTable(s"$dir/t")
-    val bs = batches()
-    (0 until epochs).foreach(e => Apply.applyEpoch(spark, t, bs(e), e.toLong))
-    val headBefore = t.latest().get.version
-    arm("compact.after-write")
-    try intercept[Injected] { t.compactBuckets(spark, minDeltas = 2) }
-    finally disarm()
-    assert(t.latest().get.version == headBefore, "crashed compaction moved the head")
-    assert(Oracle.digest(t.read(spark), stateCols) == oracleDigest,
-      "crashed compaction changed visible state")
-    assert(t.compactBuckets(spark, minDeltas = 2).nonEmpty, "retry compaction was a no-op")
-    assert(Oracle.digest(t.read(spark), stateCols) == oracleDigest,
-      "retried compaction changed visible state")
-    assertVacuumReclaims(s"$dir/t", t)
+    // the per-bucket sweep and the full compact share the crash point
+    val compactions = Seq[(String, LakeTable => Unit)](
+      "compactBuckets" -> (t =>
+        assert(t.compactBuckets(spark, minDeltas = 2).nonEmpty, "retry compaction was a no-op")),
+      "compact" -> (_.compact(spark)))
+    for ((name, compaction) <- compactions) {
+      val dir = TestSpark.tmpDir(s"crash-$name")
+      val t = new LakeTable(s"$dir/t")
+      val bs = batches()
+      (0 until epochs).foreach(e => Apply.applyEpoch(spark, t, bs(e), e.toLong))
+      val headBefore = t.latest().get.version
+      arm("compact.after-write")
+      try intercept[Injected] { compaction(t) }
+      finally disarm()
+      assert(t.latest().get.version == headBefore, s"crashed $name moved the head")
+      assert(Oracle.digest(t.read(spark), stateCols) == oracleDigest,
+        s"crashed $name changed visible state")
+      compaction(t)
+      assert(t.latest().get.version == headBefore + 1, s"retried $name did not commit")
+      assert(Oracle.digest(t.read(spark), stateCols) == oracleDigest,
+        s"retried $name changed visible state")
+      assertVacuumReclaims(s"$dir/t", t)
+    }
   }
 
   test("crash at rebucket.after-write: bucketing untouched, retry migrates, vacuum reclaims") {

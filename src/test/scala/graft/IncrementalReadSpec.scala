@@ -120,6 +120,37 @@ class IncrementalReadSpec extends AnyFunSuite {
     assert(table.readChangesChunked(spark, 3, 5).ranges == Seq((3L, 5L)))
   }
 
+  test("a per-bucket compaction that writes no base is a rewrite boundary") {
+    // every row of the hot bucket is a tombstone at or below the purge
+    // horizon, so the sweep writes no base group and commits only new
+    // exclusions on surviving groups — nothing is appended, yet the
+    // range is not append-only
+    val dir = java.nio.file.Files.createTempDirectory("graft-inc-nobase").toString
+    val table = new LakeTable(dir, numBuckets = 4)
+    val ts = new java.sql.Timestamp(1700000000000L)
+    // one path per bucket, the table's own bucket hash
+    val Seq(a, b, c) = (0 until 64).map(i => ("r", s"k$i")).toDF("repo", "path")
+      .select(col("path"), pmod(xxhash64(col("repo"), col("path")), lit(4L)))
+      .collect().groupBy(_.getLong(1)).values.map(_.head.getString(0)).toSeq.sorted.take(3)
+    def batch(rows: (String, String, Long)*) = rows.map { case (p, op, lsn) =>
+      ("r", p, op, lsn, ts, if (op == "D") null else s"c$lsn", "scala",
+        if (op == "D") null else s"body$lsn")
+    }.toDF("repo", "path", "op", "lsn", "ts", "commit", "lang", "content")
+    table.upsert(batch((a, "U", 1L), (b, "U", 2L)), 0L, 1) // v1
+    table.upsert(batch((a, "D", 10L), (c, "U", 11L)), 1L, 1) // v2
+    assert(table.compactBuckets(spark, minDeltas = 2, purgeTombstonesBelowLsn = 10L).size == 1)
+    val v3 = table.latest().get
+    assert(v3.version == 3L && !v3.groups.exists(_.kind == "base"),
+      s"fixture must compact without writing a base: $v3")
+
+    intercept[IllegalStateException] { table.readChanges(spark, 2, 3) }
+    // from the start, both groups read as appended but carry the new
+    // exclusion: still a rewrite
+    intercept[IllegalStateException] { table.readChanges(spark, 0, 3) }
+    assert(table.readChangesChunked(spark, 2, 3).resyncVersions == Seq(3L))
+    assert(table.read(spark).select("path").as[String].collect().toSet == Set(b, c))
+  }
+
   test("polling a table with no committed snapshot yet: empty frame, not a throw") {
     val table = new LakeTable(
       java.nio.file.Files.createTempDirectory("graft-inc-empty").toString)

@@ -185,33 +185,73 @@ class LakeMetadataSpec extends AnyFunSuite {
     assert(stateMap(table.read(spark)) == before)
   }
 
+  /** Publish at the next version exactly what an EMPTY epoch's upsert
+    * would: the head's groups under a bumped version and `epochId`. */
+  private def publishEmptyEpoch(dir: String, epochId: Long): Unit = {
+    val v = new LakeTable(dir).latest().get.version
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = mapper.readTree(Files.readAllBytes(Paths.get(dir, "manifests", f"v$v%09d.json")))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    node.put("version", v + 1L)
+    node.put("epochId", epochId)
+    Files.write(Paths.get(dir, "manifests", f"v${v + 1}%09d.json"),
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
+  }
+
+  /** Run `body` with `contender` committed from the `point` failpoint:
+    * after the rewrite's data write, before its manifest commit. */
+  private def racing[T](point: String)(contender: => Unit)(body: => T): T = {
+    LakeTable.failpoint = name => if (name == point) contender
+    try body finally LakeTable.failpoint = _ => ()
+  }
+
   test("a compaction racing an append-only commit retries metadata-only and lands") {
-    val dir = TestSpark.tmpDir("cdc-casr") + "/t"
+    // every rewrite entry point; the rebucket may land because the
+    // contender appended nothing, so no delta carries the old hashing
+    val rewrites = Seq[(String, String, Int, LakeTable => Unit)](
+      ("compactBuckets", "compact.after-write", 4, t =>
+        assert(t.compactBuckets(spark, minDeltas = 2).nonEmpty,
+          "sweep must retry past an append-only contender, not abort")),
+      ("compact", "compact.after-write", 4, _.compact(spark)),
+      ("rebucket", "rebucket.after-write", 8, t =>
+        assert(t.rebucket(spark, 8), "rebucket must retry past an empty-epoch contender")))
+    for ((name, point, buckets, rewrite) <- rewrites) {
+      val dir = TestSpark.tmpDir(s"cdc-casr-$name") + "/t"
+      val keys = (0 until 20).map(i => (s"r$i", "a"))
+      val table = new LakeTable(dir, numBuckets = 4)
+      (0 until 3).foreach(e => table.upsert(mkBatch(keys, 100L * e), e.toLong, 1))
+      val before = stateMap(table.read(spark))
+      val v = table.latest().get.version
+      // an empty-epoch commit lands at v+1 between the rewrite's write
+      // and its commit: the rewrite targets v+1, hits EEXIST, validates
+      // the head is append-only since its read snapshot, and must
+      // re-commit METADATA-ONLY at v+2 (no data rewrite re-run)
+      racing(point)(publishEmptyEpoch(dir, epochId = 3L))(rewrite(table))
+      val head = table.latest().get
+      assert(head.version == v + 2 && head.epochId == 3L,
+        s"$name: retry must land on top of the contender inheriting its epoch high-water mark, got $head")
+      assert(head.numBuckets == buckets)
+      assert(stateMap(table.read(spark)) == before)
+      assert(head.totalDeltaGroups == 0, s"$name: the rewrite absorbed every delta group")
+    }
+  }
+
+  test("a rebucket racing an appending commit aborts and leaves the head") {
+    val dir = TestSpark.tmpDir("cdc-casra") + "/t"
     val keys = (0 until 20).map(i => (s"r$i", "a"))
     val table = new LakeTable(dir, numBuckets = 4)
     (0 until 3).foreach(e => table.upsert(mkBatch(keys, 100L * e), e.toLong, 1))
-    val before = stateMap(table.read(spark))
-    val v = table.latest().get.version
-    // interleave an epoch-commit-shaped contender at v+1: same groups,
-    // bumped version + epoch — byte-for-byte what an EMPTY epoch's
-    // upsert publishes. The sweep targets v+1, hits EEXIST, validates
-    // the head is append-only since its read snapshot, and must
-    // re-commit METADATA-ONLY at v+2 (no data rewrite re-run).
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val mpath = Paths.get(dir, "manifests", f"v$v%09d.json")
-    val node = mapper.readTree(Files.readAllBytes(mpath))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    node.put("version", v + 1L)
-    node.put("epochId", 3L)
-    Files.write(Paths.get(dir, "manifests", f"v${v + 1}%09d.json"),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
-    assert(table.compactBuckets(spark, minDeltas = 2).nonEmpty,
-      "sweep must retry past an append-only contender, not abort")
-    val head = table.latest().get
-    assert(head.version == v + 2 && head.epochId == 3L,
-      s"retry must land on top of the contender inheriting its epoch high-water mark, got $head")
-    assert(stateMap(table.read(spark)) == before)
-    assert(head.totalDeltaGroups == 0, "the sweep absorbed every delta group")
+    // the contender appends a delta group hashed with 4 buckets: the
+    // 8-bucket rewrite cannot be reconciled with it metadata-only
+    var contender: Option[Snapshot] = None
+    val landed = racing("rebucket.after-write") {
+      contender = new LakeTable(dir).upsert(mkBatch(keys.take(5), 5000L), 3L, 1).snapshot
+    }(table.rebucket(spark, 8))
+    assert(!landed, "rebucket must abort over an appended delta group")
+    assert(contender.isDefined && table.latest() == contender,
+      s"the aborted rebucket moved the head: ${table.latest()}")
+    assert(table.bucketCount == 4)
+    assert(stateMap(table.read(spark))(("r0", "a"))._2 == "content-r0-a-5000")
   }
 
   test("a stray near-miss manifest file cannot brick the table") {

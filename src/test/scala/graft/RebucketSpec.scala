@@ -115,10 +115,11 @@ class RebucketSpec extends AnyFunSuite {
     }, "live-writer")
     writerThread.start()
     // fire the migration mid-replay (after the first commit exists);
-    // retry lost CAS races until it lands. A rewrite-based migration
-    // can starve against a saturated stream (unlike compaction it has
-    // no metadata-only retry — appended deltas carry the OLD hashing),
-    // so if every mid-flight attempt lost, land it after the join: the
+    // retry lost CAS races until it lands. A migration re-commits
+    // metadata-only only past epochs that appended nothing (an
+    // appended delta carries the OLD hashing; compaction has no such
+    // limit), so it can starve against a saturated stream; if every
+    // mid-flight attempt lost, land it after the join: the
     // no-crash/no-lost-epoch asserts still bind for every attempt made.
     val migrator = new LakeTable(dir)
     while (migrator.latest().isEmpty && writerThread.isAlive) Thread.sleep(50L)
