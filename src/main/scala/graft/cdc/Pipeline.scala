@@ -145,10 +145,7 @@ object Pipeline {
       logDir: String,
       tableDir: String,
       segments: Int,
-      audit: Option[Audit] = None,
-      compactEvery: Int = 0,
-      dlq: Option[DeadLetterQueue] = None,
-      adaptive: Option[AdaptiveSalt] = None): Seq[ApplyStats] = {
+      audit: Option[Audit] = None): Seq[ApplyStats] = {
     if (segments <= 0) return Seq.empty
     val table = new LakeTable(tableDir)
     // sniff the layout ONCE from the first segment's footer (the layout
@@ -169,10 +166,7 @@ object Pipeline {
         val batch = spark.read.schema(readSchema).parquet(segDir)
         // era probe from footer stats: O(files) metadata, no data scan
         val hint = ParquetStats.maxInt(spark, segDir, "schemaVersion")
-        val st = Apply.applyEpoch(spark, table, batch, s.toLong, audit, versionHint = hint,
-          adaptive = adaptive, dlq = dlq)
-        compactOnCadence(spark, table, st, compactEvery, audit)
-        st
+        Apply.applyEpoch(spark, table, batch, s.toLong, audit, versionHint = hint)
       }
     } finally audit.foreach(_.flush())
     // flush in a finally (like runStream/runBatchEpochs): a failing

@@ -62,10 +62,23 @@ object StreamingOps {
         })
   }
 
+  /** Fast scratch for `runToBatch`'s staged source and checkpoint:
+    * tmpfs when available (the same scratch policy graft.Bench uses for
+    * spark.local.dir; the default temporary checkpoint lands on the
+    * java.io.tmpdir disk, and its offset/commit/state fsync churn is
+    * pure overhead for a bounded drive-to-completion run). */
+  private[graft] val scratchBase: java.nio.file.Path = {
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    if (java.nio.file.Files.isWritable(shm)) shm
+    else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
+  }
+
   /** Drive a streaming transform of a bounded parquet source to
     * completion and return the collected result (memory sink,
     * Trigger.AvailableNow, `maxFilesPerTrigger` to force multiple
-    * micro-batches). */
+    * micro-batches). The checkpoint and any staged copy of the source
+    * are deleted on return or failure: the memory sink holds the
+    * result, so nothing reads them after the query terminates. */
   def runToBatch(
       spark: SparkSession,
       sourceDir: String,
@@ -74,46 +87,35 @@ object StreamingOps {
       outputMode: String = "append",
       maxFilesPerTrigger: Int = 1): DataFrame = {
     val name = s"graft_stream_${System.nanoTime()}"
-    // fast scratch for the staged source AND the checkpoint: tmpfs when
-    // available (round-7 — the same scratch policy graft.Bench uses for
-    // spark.local.dir; the default temporary checkpoint lands on the
-    // java.io.tmpdir disk and its offset/commit/state fsync churn is
-    // pure overhead for a bounded drive-to-completion run)
-    val scratchBase = {
-      val shm = java.nio.file.Paths.get("/dev/shm")
-      if (java.nio.file.Files.isWritable(shm)) shm
-      else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-    }
+    val source = java.nio.file.Paths.get(sourceDir)
     // the file stream source requires a DIRECTORY base path — stage a
     // single-file source into a temp dir
-    val src = {
-      val p = java.nio.file.Paths.get(sourceDir)
-      if (java.nio.file.Files.isRegularFile(p)) {
-        val d = java.nio.file.Files.createTempDirectory(scratchBase, "graft-stream-src")
-        java.nio.file.Files.copy(p, d.resolve(p.getFileName))
-        d.toString
-      } else sourceDir
-    }
-    val in = spark.readStream.schema(sourceSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(src)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory(scratchBase, "graft-stream-ckpt")
-    val q = transform(in).writeStream
-      .format("memory").queryName(name).outputMode(outputMode)
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // Stateful queries start a JVM-global StateStore maintenance task
-    // that outlives spark.stop() and then throws "SparkEnv not active"
-    // from its scheduler thread (it corrupted round-1's bench stderr).
-    // The bounded query is done — shut the maintenance pool down.
-    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+    val staged =
+      if (java.nio.file.Files.isRegularFile(source))
+        Some(java.nio.file.Files.createTempDirectory(scratchBase, "graft-stream-src"))
+      else None
     // an EXPLICIT checkpoint is not auto-deleted on stop (temporary ones
-    // are) — reclaim it, or repeated bounded runs leak tmpfs
-    rmTree(ckpt)
-    spark.table(name)
+    // are): the finally reclaims it and the staged source, or repeated
+    // bounded runs leak tmpfs
+    val ckpt = java.nio.file.Files.createTempDirectory(scratchBase, "graft-stream-ckpt")
+    try {
+      staged.foreach(d => java.nio.file.Files.copy(source, d.resolve(source.getFileName)))
+      val in = spark.readStream.schema(sourceSchema)
+        .option("maxFilesPerTrigger", maxFilesPerTrigger)
+        .parquet(staged.fold(sourceDir)(_.toString))
+      val q = transform(in).writeStream
+        .format("memory").queryName(name).outputMode(outputMode)
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      // Stateful queries start a JVM-global StateStore maintenance task
+      // that outlives spark.stop() and then throws "SparkEnv not active"
+      // from its scheduler thread (it corrupted round-1's bench stderr).
+      // The bounded query is done — shut the maintenance pool down.
+      org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+      spark.table(name)
+    } finally (staged.toSeq :+ ckpt).foreach(rmTree)
   }
 
   private def rmTree(root: java.nio.file.Path): Unit =

@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc._
 
 /** The compaction sweep does not have to run inline with the stream
-  * (Pipeline's `compactEvery` cadence): BENCH.md's round-5 cadence
-  * measurement argues the sweep "can equally run from a SEPARATE
+  * (Pipeline's `compactEvery` cadence): the round-5 cadence measurement
+  * (bench/history/BENCH_rounds_1-7.md) argues the sweep "can equally run from a SEPARATE
   * maintenance job — the manifest CAS already serializes it". This
   * suite turns that claim into evidence: a second `LakeTable` handle
   * (standing in for a separate spark-submit maintenance job — the CAS

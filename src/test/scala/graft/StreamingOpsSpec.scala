@@ -69,4 +69,28 @@ class StreamingOpsSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 6).as("total"))
     assert(latest.exceptAll(want).count() == 0 && want.exceptAll(latest).count() == 0)
   }
+
+  test("a single-file source is staged and reclaimed: result == batch agg, no scratch left") {
+    def scratch(): Set[String] = {
+      val ls = java.nio.file.Files.list(StreamingOps.scratchBase)
+      try {
+        import scala.jdk.CollectionConverters._
+        ls.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("graft-stream-")).toSet
+      } finally ls.close()
+    }
+    val before = scratch()
+    // events.parquet is one file: runToBatch must stage it into a dir
+    val got = StreamingOps.runToBatch(
+      spark, s"$sf/events.parquet", ExtraOps.eventsSchema,
+      df => StreamingOps.windowedAgg(df, "ts", "1 hour"),
+      outputMode = "complete")
+    val want = spark.read.parquet(s"$sf/events.parquet")
+      .groupBy(date_trunc("hour", col("ts")).cast("timestamp").as("win_start"), col("event_type"))
+      .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 4).as("sum_value"))
+    assert(got.count() > 0)
+    assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0)
+    val leaked = scratch() -- before
+    assert(leaked.isEmpty, s"runToBatch left scratch behind: $leaked")
+  }
 }

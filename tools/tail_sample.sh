@@ -1,11 +1,12 @@
 #!/bin/bash
-# Probe-gated heavy-tail SCALING sample (BENCH.md §Round-6): times
-# q25/q26/q27/q53/q57 at sf0.1 and at the 10x corpus built by
-# graft.ScaleFixture (disjoint-vocabulary replicas -> dup density and
-# candidate-pair counts scale linearly, the representative experiment).
-# Launches only when busy-probe hypervisor steal is <1.5%; each sf runs
-# in its own pinned pretouched JVM at local[nproc], timing each query
-# twice with `graft.Bench queries`.
+# Probe-gated heavy-tail SCALING sample (bench/history/BENCH_rounds_1-7.md
+# §Round-6): times q25/q26/q27/q53/q57 at sf0.1 and at the 10x corpus
+# built by graft.ScaleFixture (disjoint-vocabulary replicas -> dup
+# density and candidate-pair counts scale linearly, the representative
+# experiment). Launches only when busy-probe hypervisor steal is <1.5%;
+# each sf runs in its own JVM at local[nproc], timing each query twice
+# with `graft.Bench queries`. Heap: SPARK_DRIVER_MEM, else half of
+# MemTotal clamped to [2, 8] GB (the rule build.sbt applies).
 # Usage: tools/tail_sample.sh [max_wait_minutes]
 set -e
 cd "$(dirname "$0")/.."
@@ -23,7 +24,9 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-JAVA="java -Xmx16g -Xms16g -XX:+AlwaysPreTouch $ADD_OPENS \
+HEAP="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} \
+  END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
+JAVA="java -Xmx$HEAP $ADD_OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp target/scala-2.13/classes:/opt/spark/jars/*"
 
