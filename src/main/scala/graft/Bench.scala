@@ -15,7 +15,8 @@ import graft.cdc._
   *     SPARK_GRAFT_CDC_EVENTS events (default 16M) in
   *     SPARK_GRAFT_CDC_EPOCHS segments (default 2). It is measured at two
   *     rungs, lo = max(1, cpus/4) and hi = cpus, each the median of 3
-  *     timed replays after one untimed warm-up (min/max alongside), and
+  *     timed replays after an untimed one-segment warm-up (min/max
+  *     alongside), and
   *     `scaling_efficiency` = (thr@hi / thr@lo) / (hi / lo).
   *
   * `cpus` is SPARK_GRAFT_CPUS, default `availableProcessors`. Both rungs
@@ -83,19 +84,21 @@ object Bench {
   private def benchCfg(numEvents: Long): GenConfig =
     GenConfig(numEvents = numEvents, numRepos = 5000L, pathsPerRepo = 100L)
 
-  /** One CDC rung: a fresh local[cores] session replays the binlog
-    * segments at `logDir` (a real binlog arrives as stored bytes, so the
-    * timed path starts at scan) once untimed, then three times timed,
-    * each into a fresh table. Returns the events/sec of the timed
-    * replays so the caller can report median + min/max: a single
-    * measurement (or a silent best-of) hides the host's steal bursts. */
+  /** One CDC rung: a fresh local[cores] session replays the first
+    * binlog segment at `logDir` untimed, then the whole log (a real
+    * binlog arrives as stored bytes, so the timed path starts at scan)
+    * three times timed, each into a fresh table. Returns the events/sec
+    * of the timed replays so the caller can report median + min/max: a
+    * single measurement (or a silent best-of) hides the host's steal
+    * bursts. */
   private def cdcRun(cores: Int, numEvents: Long, epochs: Int, logDir: String): Seq[Double] = {
     val spark = session(cores, math.max(cores, 32))
     val dir = s"$scratchRoot/c$cores"
     try {
       // warm-up: the timed path is parquet scan -> agg codegen -> parquet
-      // write, and a generator-based mini warm-up leaves all of that cold
-      Pipeline.replaySegments(spark, logDir, s"$dir/warm", epochs)
+      // write, and a generator-based mini warm-up leaves all of that
+      // cold; one segment runs all of it
+      Pipeline.replaySegments(spark, logDir, s"$dir/warm", 1)
       (1 to 3).map { run =>
         val t0 = System.nanoTime()
         val stats = Pipeline.replaySegments(spark, logDir, s"$dir/t$run", epochs,
@@ -169,6 +172,7 @@ object Bench {
     println(f"BENCHX_TOTAL min_sum=${results.map(_._1).sum}%.3f " +
       f"med_sum=${results.map(_._2).sum}%.3f queries=${results.size}")
     spark.stop()
+    rmTree(scratchRoot)
   }
 
   def main(args: Array[String]): Unit = {
@@ -212,7 +216,7 @@ object Bench {
     val (lo, hi) = (math.max(1, cpus / 4), cpus)
     val rungs = Seq(lo, hi).distinct
     val runs = rungs.map(c => c -> cdcRun(c, cdcEvents, cdcEpochs, logDir)).toMap
-    rmTree(logDir)
+    rmTree(scratchRoot) // the log and spark.local.dir; every session has stopped
 
     def arr(xs: Seq[Double]) = xs.map(x => f"$x%.0f").mkString("[", ",", "]")
     val rungJson = rungs.map { c =>

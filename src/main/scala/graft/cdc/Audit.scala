@@ -94,7 +94,7 @@ final class Audit(val dir: String) {
       spark.createDataFrame(perBucket.map(r => Row.fromSeq(r.toSeq ++ epochCols)).asJava,
           Audit.schema)
         .coalesce(1)
-        .write.mode("append").parquet(dir)
+        .write.mode("append").parquet(LakeFs.path(spark, dir))
     }
   }
 
@@ -168,7 +168,7 @@ final class Audit(val dir: String) {
     // then deleted); mergeSchema spans engine versions, as in read()
     spark.read.option("mergeSchema", "true")
       .parquet(inputs.map(f => root.resolve(f).toString): _*)
-      .coalesce(1).write.parquet(tmp)
+      .coalesce(1).write.parquet(LakeFs.path(spark, tmp))
     val part = scala.util.Using.resource(
       java.nio.file.Files.list(java.nio.file.Paths.get(tmp))) { st =>
       st.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq

@@ -81,7 +81,7 @@ final class DeadLetterQueue(val root: String) {
     bad.select(col("repo"), col("path"), col("op"), col("lsn"), col("ts"),
         sv.as("schemaVersion"), afterJson.as("after"), col("_dlq_reason").as("reason"))
       .coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/epoch=$epochId")
+      .write.mode("overwrite").parquet(LakeFs.path(bad.sparkSession, s"$root/epoch=$epochId"))
   }
 
   val schema: StructType = StructType(Seq(
@@ -196,7 +196,7 @@ final class DeadLetterQueue(val root: String) {
             org.apache.spark.sql.Row.fromSeq(
               schema.fieldNames.toSeq.map(n => r.get(all.columns.indexOf(n))))): _*)
           spark.createDataFrame(rows, schema)
-            .coalesce(1).write.mode("overwrite").parquet(dir.toString)
+            .coalesce(1).write.mode("overwrite").parquet(LakeFs.path(spark, dir.toString))
         }
       }
       DlqReplayStats(applied = requeued, remaining = stillRows.length.toLong, epoch = Some(epochId))

@@ -93,7 +93,8 @@ final case class CommitResult(committed: Boolean, group: Option[FileGroup],
   *
   * Layout:
   *   root/manifests/v<00000000N>.json     (atomic-rename committed)
-  *   root/data/<uuid>/bucket=NNN/ (parquet files)
+  *   root/data/<uuid>/bucket=NNN/ (parquet files, written and read
+  *     through the lake filesystem, [[LakeFs]])
   *
   * Scale design:
   *  - Data files are hash-bucketed on the key `(repo, path)` into
@@ -438,7 +439,7 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
     src.select((cols.map(col) :+ bucketColFor(nb)): _*)
       .repartition(tasks, proxy)
       .write.partitionBy("bucket").mode("overwrite")
-      .parquet(s"$root/$groupDir")
+      .parquet(LakeFs.path(src.sparkSession, s"$root/$groupDir"))
     // data durable BEFORE the manifest
     if (fsyncTree(Paths.get(root, groupDir))) Some(FileGroup(groupDir, groupSchemaVersion, kind))
     else None
@@ -450,20 +451,28 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
   /** A group's columns: key, op, lsn, ts, then the payload as written
     * at `schemaVersion` — by default the current schema, which every
     * rewrite and the change feed use. */
+  private def stateFields(schemaVersion: Int = SchemaRegistry.maxVersion): Seq[StructField] =
+    Seq(StructField("repo", StringType), StructField("path", StringType),
+      StructField("op", StringType), StructField("lsn", LongType),
+      StructField("ts", TimestampType)) ++ SchemaRegistry.physicalSchema(schemaVersion).fields
+
   private def stateCols(schemaVersion: Int = SchemaRegistry.maxVersion): Seq[String] =
-    Seq("repo", "path", "op", "lsn", "ts") ++
-      SchemaRegistry.physicalSchema(schemaVersion).fieldNames
+    stateFields(schemaVersion).map(_.name)
 
   /** Empty frame with the state / change-feed schema — a read must not
     * change schema with table emptiness. */
-  private def emptyChangeFrame(spark: SparkSession): DataFrame = {
-    val fields = Seq(
-      StructField("repo", StringType), StructField("path", StringType),
-      StructField("op", StringType), StructField("lsn", LongType),
-      StructField("ts", TimestampType)) ++
-      SchemaRegistry.fields.map(f => StructField(f.current.name, f.current.dataType))
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StructType(fields))
-  }
+  private def emptyChangeFrame(spark: SparkSession): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(stateFields()))
+
+  /** One group's rows, aligned to the current registry schema. The
+    * schema is the group's own (`stateFields` at its version, plus the
+    * int `bucket` partition column) rather than inferred: inference
+    * runs one Spark job per group read. */
+  private def readGroup(spark: SparkSession, g: FileGroup): DataFrame =
+    SchemaRegistry.alignToCurrent(
+      spark.read.schema(StructType(stateFields(g.schemaVersion) :+ StructField("bucket", IntegerType)))
+        .parquet(LakeFs.path(spark, s"$root/${g.dir}")))
 
   // ---- upsert (merge-on-read) --------------------------------------
 
@@ -556,7 +565,7 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
   // ---- read (merge-on-read reconstruction) -------------------------
 
   /** All live rows incl. tombstones, aligned to the current registry
-    * schema. One scan per schema era, then unionByName. Bucket
+    * schema. One scan per group, then unionByName. Bucket
     * restrictions (per-group compaction exclusions + the optional
     * caller filter) apply on the `bucket` PARTITION column, so they
     * prune directories at planning time — no data from a skipped
@@ -565,15 +574,14 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
       onlyBuckets: Option[Set[Int]] = None): Option[DataFrame] = {
     snapshot.flatMap { s =>
       val dfs = s.groups.map { g =>
-        val base = spark.read.parquet(s"$root/${g.dir}")
+        val base = readGroup(spark, g)
         val afterExcl =
           if (g.excludedBuckets.isEmpty) base
           else base.filter(!col("bucket").isin(g.excludedBuckets.toSeq: _*))
-        val restricted = onlyBuckets match {
+        onlyBuckets match {
           case Some(bs) => afterExcl.filter(col("bucket").isin(bs.toSeq: _*))
           case None     => afterExcl
         }
-        SchemaRegistry.alignToCurrent(restricted)
       }
       dfs.reduceOption((a, b) => a.unionByName(b, allowMissingColumns = true))
     }
@@ -667,7 +675,7 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
         s"snapshot range ($sinceVersion, $toVersion] crosses a compaction or rebucket; " +
           "use readChangesChunked() or read()")
     to.groups.filterNot(g => from.groups.exists(_.dir == g.dir))
-      .map(g => SchemaRegistry.alignToCurrent(spark.read.parquet(s"$root/${g.dir}")))
+      .map(readGroup(spark, _))
       .reduceOption((a, b) => a.unionByName(b, allowMissingColumns = true))
       .map(_.select(stateCols().map(col): _*))
       .getOrElse(emptyChangeFrame(spark))

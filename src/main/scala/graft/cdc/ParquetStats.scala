@@ -2,6 +2,7 @@ package graft.cdc
 
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
@@ -84,7 +85,10 @@ object ParquetStats {
   private def footerRange(conf: org.apache.hadoop.conf.Configuration, file: String,
       column: String): Option[(Long, Option[(Long, Long)])] =
     scala.util.Try {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
+      // options from `conf`: the no-conf overload parses a fresh Hadoop
+      // Configuration (core-default.xml) for every footer
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf),
+        HadoopReadOptions.builder(conf).build())
       try reader.getFooter.getBlocks.asScala.toSeq.filter(_.getRowCount > 0)
       finally reader.close()
     }.toOption.flatMap { blocks =>

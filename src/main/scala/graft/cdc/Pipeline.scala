@@ -268,7 +268,7 @@ object Pipeline {
       .parquet(logDir + "/seg-*")
 
     val query = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
+      .option("checkpointLocation", LakeFs.path(spark, checkpointDir))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         // crash BEFORE the lake commit, first delivery only (marker file

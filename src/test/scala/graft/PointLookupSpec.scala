@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,7 +15,9 @@ class PointLookupSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def mkTable(): (LakeTable, Seq[(String, String)]) = {
+  /** 200 keys, one event each, applied as `groups` epochs (by default
+    * two, so multiple file groups exist). */
+  private def mkTable(groups: Int = 2): (LakeTable, Seq[(String, String)]) = {
     val dir = java.nio.file.Files.createTempDirectory("graft-pls").toString
     val keys = (0 until 200).map(i => (s"r${i % 20}", s"p$i"))
     val rows = keys.zipWithIndex.map { case ((r, p), i) =>
@@ -22,9 +26,10 @@ class PointLookupSpec extends AnyFunSuite {
     }
     val env = rows.toDF("op", "lsn", "ts", "schemaVersion", "repo", "path", "before", "after")
     val table = new LakeTable(dir)
-    // two epochs so multiple file groups exist
-    Apply.applyEpoch(spark, table, env.filter(col("lsn") < 100), 0L, versionHint = Some(1))
-    Apply.applyEpoch(spark, table, env.filter(col("lsn") >= 100), 1L, versionHint = Some(1))
+    (0 until groups).foreach { e =>
+      Apply.applyEpoch(spark, table, env.filter(floor(col("lsn") * groups / 200) === e), e.toLong,
+        versionHint = Some(1))
+    }
     (table, keys)
   }
 
@@ -68,5 +73,27 @@ class PointLookupSpec extends AnyFunSuite {
     assert(scannedFiles > 0, "no file scan found in plan")
     assert(scannedFiles <= allFiles / 8,
       s"scan not pruned: $scannedFiles of $allFiles files")
+  }
+
+  test("readKey runs as many Spark jobs on a 4-group table as on a 1-group table") {
+    // a group read with an inferred schema would add one schema job per group
+    def jobs(table: LakeTable, key: (String, String)): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
+      }
+      TestListenerBus.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        assert(table.readKey(spark, key._1, key._2).collect().length == 1)
+        TestListenerBus.drain(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      n.get
+    }
+    val (one, keys) = mkTable(groups = 1)
+    val (four, _) = mkTable(groups = 4)
+    assert(four.latest().get.groups.size == 4)
+    val (j1, j4) = (jobs(one, keys(42)), jobs(four, keys(42)))
+    assert(j1 > 0 && j4 == j1, s"jobs: 1 group $j1, 4 groups $j4")
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc._
@@ -62,5 +63,46 @@ class SchemaEvolutionSpec extends AnyFunSuite {
       s"${table.root}/${table.latest().get.groups.head.dir}").schema
     assert(baseSchema.fieldNames.contains("stargazers"))
     assert(baseSchema("stargazers").dataType.typeName == "long")
+  }
+
+  test("group reads with the manifest's schema equal schema-inferred reads, row for row") {
+    import spark.implicits._
+    val table = new LakeTable(TestSpark.tmpDir("cdc-group-schema"))
+    def apply(epoch: Long, version: Int, rows: Seq[(String, Long, String)]): Unit = {
+      val env = rows.map { case (op, lsn, after) =>
+        (op, lsn, new java.sql.Timestamp(1700000000000L + lsn), version, "r", s"p${lsn % 10}",
+          null: String, after)
+      }.toDF("op", "lsn", "ts", "schemaVersion", "repo", "path", "before", "after")
+      Apply.applyEpoch(spark, table, env, epoch, versionHint = Some(version))
+    }
+    def v1(lsn: Long) = s"""{"commit":"c$lsn","lang":"en","content":"b$lsn"}"""
+    // a base group (v1 rows compacted at the current schema), then a v1
+    // delta group with a delete and a v4 delta group with longs past 2^31
+    apply(0L, 1, (0L until 10L).map(l => ("I", l, v1(l))))
+    table.compact(spark)
+    apply(1L, 1, (10L until 15L).map(l => ("U", l, v1(l))) :+ (("D", 15L, null: String)))
+    apply(2L, 4, (13L until 18L).map(l =>
+      ("U", l + 10L, s"""{"commit":"c$l","lang":"de","content":"v4","stargazers":${5000000000L + l}}""")))
+    val snap = table.latest().get
+    assert(snap.groups.map(g => (g.kind, g.schemaVersion)) ==
+      Seq(("base", 4), ("delta", 1), ("delta", 4)))
+
+    val inferred = snap.groups.map(g =>
+      SchemaRegistry.alignToCurrent(spark.read.parquet(s"${table.root}/${g.dir}")))
+    val valueCols = Seq("op", "lsn", "ts", "commit", "lang", "content", "stargazers")
+    val inferredState = inferred.reduce(_.unionByName(_))
+      .groupBy("repo", "path").agg(max_by(struct(valueCols.map(col): _*), col("lsn")).as("s"))
+      .filter(col("s.op") =!= "D")
+      .select(col("repo") +: col("path") +: valueCols.tail.map(c => col(s"s.$c").as(c)): _*)
+    val inferredChanges = inferred.tail.reduce(_.unionByName(_))
+    def sameRows(got: DataFrame, want: DataFrame): Unit = {
+      val cols = want.columns.filter(_ != "bucket").toSeq
+      assert(got.select(cols.map(col): _*).schema == want.select(cols.map(col): _*).schema)
+      def rows(df: DataFrame) = df.select(cols.map(col): _*).orderBy("repo", "path", "lsn").collect().toSeq
+      assert(rows(got) == rows(want))
+    }
+    sameRows(table.read(spark), inferredState)
+    sameRows(table.readChanges(spark, snap.version - 2L, snap.version), inferredChanges)
+    assert(table.read(spark).filter(col("stargazers") > Int.MaxValue).count() == 5L)
   }
 }
