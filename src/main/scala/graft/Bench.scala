@@ -140,7 +140,7 @@ object Bench {
       }
     }
     val spark = session(cpus, cpus)
-    spark.read.parquet(s"$sfDir/nation.parquet").count() // warm I/O + JVM
+    Graft.table(spark, s"$sfDir/nation.parquet").count() // warm I/O + JVM
 
     val selected =
       if (names.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
@@ -190,7 +190,7 @@ object Bench {
 
     // ---- query timings at sfDir -----------------------------------
     val spark = session(cpus, cpus)
-    spark.read.parquet(s"$sfDir/nation.parquet").count() // warm I/O + JVM
+    Graft.table(spark, s"$sfDir/nation.parquet").count() // warm I/O + JVM
     // materialize the shared binlog fixture once, reusing this session
     val logDir = s"$scratchRoot/log"
     rmTree(logDir)

@@ -19,6 +19,14 @@ import graft.cdc.{Apply, ApplyStats, Audit, LakeTable, Pipeline}
   */
 object Graft {
 
+  /** `spark.read.parquet(path)` for a file or a flat directory of part
+    * files, under its footer's schema ([[graft.cdc.ParquetStats.schema]]):
+    * same files, schema and rows, but opening it starts no Spark job. */
+  def table(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(graft.cdc.ParquetStats.schema(spark, path).getOrElse(
+      throw new java.io.FileNotFoundException(s"no parquet data file at $path")))
+      .parquet(path)
+
   // ---- CDC engine entry points -------------------------------------
 
   /** Apply one exactly-once epoch of change events (envelope columns

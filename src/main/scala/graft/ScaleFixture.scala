@@ -32,7 +32,7 @@ object ScaleFixture {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val docs = spark.read.parquet(s"$src/documents.parquet")
+    val docs = Graft.table(spark, s"$src/documents.parquet")
     val n = docs.count()
     val scaled = (0 until factor).map { i =>
       docs.select(

@@ -165,9 +165,10 @@ final class Audit(val dir: String) {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
     // read exactly the snapshot of files taken above (not the dir — a
     // concurrent append queued behind this job must not be absorbed
-    // then deleted); mergeSchema spans engine versions, as in read()
-    spark.read.option("mergeSchema", "true")
-      .parquet(inputs.map(f => root.resolve(f).toString): _*)
+    // then deleted), under its footers' merged schema, as in read()
+    val paths = inputs.map(f => root.resolve(f).toString)
+    spark.read.schema(ParquetStats.mergedSchema(spark, paths).getOrElse(Audit.schema))
+      .parquet(paths: _*)
       .coalesce(1).write.parquet(LakeFs.path(spark, tmp))
     val part = scala.util.Using.resource(
       java.nio.file.Files.list(java.nio.file.Paths.get(tmp))) { st =>
@@ -201,9 +202,10 @@ final class Audit(val dir: String) {
     * AFTER this snapshot deletes its absorbed inputs, like any lake
     * vacuuming under a long-held reader.
     *
-    * mergeSchema: an audit dir may span engine versions that added
-    * metric columns (e.g. late_events); a single-footer schema would
-    * read such a dir nondeterministically. */
+    * Under the files' merged schema, read from their footers on the
+    * driver: an audit dir may span engine versions that added metric
+    * columns (e.g. late_events), and a single-footer schema would read
+    * such a dir nondeterministically. */
   def read(spark: SparkSession): DataFrame = {
     val root = java.nio.file.Paths.get(dir)
     val files = new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
@@ -240,8 +242,9 @@ final class Audit(val dir: String) {
           "retry, or call flush() first for a quiescent read")
     Option(err.get()).foreach(t => throw t)
     val snapshot = files.get()
-    if (snapshot.isEmpty) spark.read.option("mergeSchema", "true").parquet(dir)
-    else spark.read.option("mergeSchema", "true").parquet(snapshot: _*)
+    val schema = ParquetStats.mergedSchema(spark, snapshot).getOrElse(Audit.schema)
+    if (snapshot.isEmpty) spark.read.schema(schema).parquet(dir)
+    else spark.read.schema(schema).parquet(snapshot: _*)
   }
 }
 

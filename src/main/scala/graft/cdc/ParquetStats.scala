@@ -3,11 +3,16 @@ package graft.cdc
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.StructType
 
-/** Footer-statistics probes over parquet directories.
+/** Footer probes over parquet files: schemas and statistics, no Spark job.
   *
   * The apply stage needs the batch's max `schemaVersion` BEFORE writing
   * (it picks the era-physical write schema), which naively costs one
@@ -19,6 +24,38 @@ import org.apache.spark.sql.SparkSession
   * `spark.sql.parquet.aggregatePushDown` applies for DSv2 scans.)
   */
 object ParquetStats {
+
+  /** The schema `spark.read.parquet(path)` infers, without its one-task
+    * job: that of the first data file in path order (not `_`/`.`
+    * prefixed). `path` is a file, a flat directory of part files or a
+    * glob of either (not a partitioned directory); None when it names
+    * no file. */
+  def schema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    Option(fs.globStatus(p)).toSeq.flatten
+      .flatMap(s => if (!s.isDirectory) Seq(s) else fs.listStatus(s.getPath).toSeq
+        .filter(c => c.isFile && !c.getPath.getName.startsWith("_") &&
+          !c.getPath.getName.startsWith(".")))
+      .minByOption(_.getPath.toString)
+      .flatMap(f => mergedSchema(spark, Seq(f.getPath.toString)))
+  }
+
+  /** The schema `spark.read.option("mergeSchema", "true")` infers over
+    * `files`, without its job: each footer read on the driver as
+    * inference reads it, converted as inference converts it (the Spark
+    * row-metadata key first, else the parquet types under the session's
+    * conf), and merged as inference merges them. None for no files. */
+  def mergedSchema(spark: SparkSession, files: Seq[String]): Option[StructType] = {
+    val (hadoopConf, conf) = (spark.sessionState.newHadoopConf(), spark.sessionState.conf)
+    val converter = new ParquetToSparkSchemaConverter(conf)
+    files.map { f =>
+      val in = HadoopInputFile.fromPath(new Path(f), hadoopConf)
+      ParquetFileFormat.readSchemaFromFooter(
+        new Footer(in.getPath, ParquetFooterReader.readFooter(in, SKIP_ROW_GROUPS)), converter)
+    }.reduceOption(Bridge.merge(_, _, conf.caseSensitiveAnalysis))
+  }
 
   /** Max value of an INT32 column across all row groups of all parquet
     * files under `dir`, from footer statistics only. None when the

@@ -157,8 +157,9 @@ object Pipeline {
     // as NTZ (Spark 4) and push the whole apply pipeline off its typed
     // plan, and re-sniffing per segment would put O(segments) redundant
     // driver round-trips inside the measured hot loop
-    val typed = spark.read.parquet(f"$logDir/seg-${0}%05d")
-      .schema("after").dataType.isInstanceOf[StructType]
+    val first = f"$logDir/seg-${0}%05d"
+    val typed = typedLayout(spark, first).getOrElse(
+      throw new java.io.FileNotFoundException(s"replaySegments: no segment file in $first"))
     val readSchema = if (typed) typedEnvelopeSchema else envelopeSchema
     try {
       (0 until segments).map { s =>
@@ -172,6 +173,11 @@ object Pipeline {
     // flush in a finally (like runStream/runBatchEpochs): a failing
     // later segment must not drop committed epochs' buffered lineage
   }
+
+  /** Whether the segments under `pattern` carry the typed payload (a
+    * struct `after`), from the first segment file's footer; None if none. */
+  private[graft] def typedLayout(spark: SparkSession, pattern: String): Option[Boolean] =
+    ParquetStats.schema(spark, pattern).map(_("after").dataType.isInstanceOf[StructType])
 
   /** Files the file source admitted for micro-batch `batchId`, from the
     * source's metadata log at `<checkpoint>/sources/0/<batchId>` (one
@@ -249,16 +255,12 @@ object Pipeline {
       case "typed" => true
       case "json"  => false
       case "sniff" =>
-        try spark.read.parquet(logDir + "/seg-*")
-          .schema("after").dataType.isInstanceOf[StructType]
-        catch {
-          case _: org.apache.spark.sql.AnalysisException =>
-            throw new IllegalStateException(
-              s"runStream: no segments under $logDir to sniff the payload " +
-                "layout from (tail started before the producer?) — pass " +
-                "layout=\"json\" or layout=\"typed\" explicitly (Submit: " +
-                "--layout json|typed)")
-        }
+        typedLayout(spark, logDir + "/seg-*").getOrElse(
+          throw new IllegalStateException(
+            s"runStream: no segments under $logDir to sniff the payload " +
+              "layout from (tail started before the producer?) — pass " +
+              "layout=\"json\" or layout=\"typed\" explicitly (Submit: " +
+              "--layout json|typed)"))
       case other => throw new IllegalArgumentException(
         s"layout must be sniff|json|typed, got '$other'")
     }

@@ -12,9 +12,6 @@ import graft.Graft._
   */
 object CdcOps {
 
-  private def ev(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/events.parquet")
-
   /** Deterministically fold the events table into a scratch lake table
     * as three LWW epochs (epoch = lsn % 3, applied in order, footer-
     * stats version hint) — the shared fixture behind the incremental-
@@ -56,7 +53,7 @@ object CdcOps {
     // binlog layout) — the fold is a synthetic source, so serializing it
     // to JSON only to from_json it back in normalize was a pure
     // round-trip tax; identical values either way (strings pass through)
-    val env = ev(s, dir).select(
+    val env = table(s, s"$dir/events.parquet").select(
       lit("U").as("op"), col("event_id").as("lsn"),
       col("ts").cast("timestamp").as("ts"), lit(1).as("schemaVersion"),
       concat(lit("r"), (col("user_id") % 10).cast("string")).as("repo"),
@@ -70,18 +67,18 @@ object CdcOps {
     // sized to data volume (guide §6 file sizing: 32 near-empty bucket
     // dirs × 3 epochs was 3/4 file-and-fsync overhead); reconstruction
     // semantics are bucket-count-independent.
-    val table = new LakeTable(scratch, numBuckets = 8)
+    val lake = new LakeTable(scratch, numBuckets = 8)
     (0 until 3).foreach(e =>
-      Apply.applyEpoch(s, table, env.filter(pmod(col("lsn"), lit(3)) === e),
+      Apply.applyEpoch(s, lake, env.filter(pmod(col("lsn"), lit(3)) === e),
         e.toLong, versionHint = Some(1)))
-    table
+    lake
   }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // sessionization: gap > 30 min starts a new session (lag + cumulative
     // sum over an ordered per-key window — single shuffle on user_id)
     "q31_sessionize" -> ((s, dir) => {
-      ev(s, dir)
+      table(s, s"$dir/events.parquet")
         .sessionize("user_id", "ts", "30 MINUTES")
         .groupBy(col("user_id"), col("session_id").as("sess_id"))
         .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("sess_value"))
@@ -90,7 +87,7 @@ object CdcOps {
     // per-epoch lineage ranges — the audit-table aggregate
     // (epoch = event_id div 100): min/max LSN + row count per epoch
     "q32_lineage_ranges" -> ((s, dir) => {
-      ev(s, dir)
+      table(s, s"$dir/events.parquet")
         .groupBy(floor(col("event_id") / lit(100.0)).as("epoch"))
         .agg(
           min(col("event_id")).as("min_lsn"),
@@ -126,7 +123,7 @@ object CdcOps {
     // from its per-key neighbors (lag/lead arithmetic — the
     // time_1d_interpolation analogue, InterpolatorCore.py:87-130)
     "q33_interp_linear" -> ((s, dir) => {
-      ev(s, dir)
+      table(s, s"$dir/events.parquet")
         .interpolateLinear("user_id", "ts", "value")
         .filter(col("interp_value").isNotNull)
         .select(col("event_id"), round(col("interp_value"), 6).as("interp_value"))

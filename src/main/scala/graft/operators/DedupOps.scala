@@ -13,9 +13,6 @@ import graft.Graft._
   */
 object DedupOps {
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-
   /** Distinct word-level 3-gram shingles per doc (doc_id, shingle) —
     * delegates to the public Graft.ngramShingles operator. */
   private def shingles(d: DataFrame): DataFrame =
@@ -49,7 +46,7 @@ object DedupOps {
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // exact dedup: hash-groupBy on full text
     "q24_dedup_exact" -> ((s, dir) => {
-      docs(s, dir)
+      table(s, s"$dir/documents.parquet")
         .groupBy(md5(col("text")).as("h"))
         .agg(count(lit(1)).as("cnt"), min(col("doc_id")).as("keep_doc_id"))
         .filter(col("cnt") >= 1)
@@ -64,7 +61,7 @@ object DedupOps {
     // cap; at gate scale max df = 7, so the fence is semantics-neutral
     // there while bounding fan-out at 100x data.
     "q25_ngram_jaccard" -> ((s, dir) => {
-      docs(s, dir)
+      table(s, s"$dir/documents.parquet")
         .ngramJaccardPairs("doc_id", "text", n = 3, minJaccard = 0.2, maxShingleDf = MaxShingleDf)
         .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"), col("jaccard"))
     }),
@@ -86,7 +83,7 @@ object DedupOps {
     // filter is unchanged. Two sort-merge joins removed (plan diff in
     // plans/r07/q26_*).
     "q26_dedup_minhash_lsh" -> ((s, dir) => {
-      val sig = graft.Materialize(signatures(docs(s, dir)))
+      val sig = graft.Materialize(signatures(table(s, s"$dir/documents.parquet")))
       val rowsPerBand = MinhashK / Bands
       val banded = sig.select(col("doc_id"), col("sig"),
         posexplode(transform(sequence(lit(0), lit(Bands - 1)), bnd =>
@@ -114,7 +111,7 @@ object DedupOps {
     // between pair generation and "keep one copy" (transitive chains
     // A~B~C collapse to one cluster even when A!~C directly).
     "q57_dup_clusters" -> ((s, dir) => {
-      docs(s, dir)
+      table(s, s"$dir/documents.parquet")
         .ngramJaccardPairs("doc_id", "text", n = 3, minJaccard = 0.2, maxShingleDf = MaxShingleDf)
         .connectedComponents("doc_id_a", "doc_id_b")
         .select(col("node").as("doc_id"), col("component").as("cluster_id"))
@@ -134,7 +131,7 @@ object DedupOps {
           .otherwise(-1)).as(s"v$b"))
       val assembled = (0 until SimhashBits).map(b =>
         when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L))).reduce(_.bitwiseOR(_))
-      val sigd = graft.Materialize(graft.Graft.fanOut(docs(s, dir), col("doc_id"))
+      val sigd = graft.Materialize(graft.Graft.fanOut(table(s, s"$dir/documents.parquet"), col("doc_id"))
         .select(col("doc_id"), explode(split(trim(lower(col("text"))), "\\s+")).as("tok"))
         .select(col("doc_id"),
           conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long").as("h"))

@@ -25,7 +25,7 @@ object ExtraOps {
     // exact-gated (identical double ops in both engines)
     "q65_julian_day" -> ((s, dir) => {
       import graft.functions.ColumnFns._
-      s.read.parquet(s"$dir/events.parquet")
+      table(s, s"$dir/events.parquet")
         .select(col("event_id"), col("ts"))
         .select(col("event_id"),
           julianDay(col("ts")).as("jd"),
@@ -36,14 +36,14 @@ object ExtraOps {
 
     // multi-level aggregation (rollup) — subtotal + grand-total rows
     "q37_rollup" -> ((s, dir) => {
-      s.read.parquet(s"$dir/lineitem.parquet")
+      table(s, s"$dir/lineitem.parquet")
         .rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(round(sum(col("l_quantity")), 4).as("sum_qty"), count(lit(1)).as("cnt"))
     }),
 
     // exact distinct aggregate
     "q38_distinct_agg" -> ((s, dir) => {
-      s.read.parquet(s"$dir/events.parquet")
+      table(s, s"$dir/events.parquet")
         .groupBy(col("event_type"))
         .agg(
           count_distinct(col("user_id")).as("n_users"),
@@ -59,7 +59,7 @@ object ExtraOps {
     // hard-asserted in PlanSpec, so that case cannot pass silently on
     // the tested fixtures.)
     "q39_approx_distinct" -> ((s, dir) => {
-      s.read.parquet(s"$dir/events.parquet")
+      table(s, s"$dir/events.parquet")
         .groupBy(col("event_type"))
         .agg(
           count_distinct(col("user_id")).as("n_users_exact"),
@@ -76,7 +76,7 @@ object ExtraOps {
     "q41_flood_union" -> ((s, dir) => {
       import s.implicits._
       val bboxUnion = udaf(new graft.functions.BBoxUnionAggregator())
-      s.read.parquet(s"$dir/events.parquet")
+      table(s, s"$dir/events.parquet")
         .withColumn("klass",
           when(col("value") < 2.0, "dry").when(col("value") < 6.0, "damp").otherwise("flooded"))
         .withColumn("x", pmod(col("event_id").cast("double") * 3.7, lit(360.0)) - 180.0)
@@ -97,7 +97,7 @@ object ExtraOps {
     // DF2T state (iirOracleSql); golden values in ToleranceSpec too.
     "q42_lowpass" -> ((s, dir) => {
       val (b, a) = graft.functions.IIR.exponential(0.3)
-      s.read.parquet(s"$dir/events.parquet")
+      table(s, s"$dir/events.parquet")
         .select(col("user_id"), col("event_id"), col("ts"), col("value"))
         .iirFilter("user_id", Seq("ts", "event_id"), "value", b, a, "smoothed")
         .select(col("user_id"), col("event_id"),
@@ -112,7 +112,7 @@ object ExtraOps {
     // against the DF2T recursive-CTE oracle (iirOracleSql).
     "q46_iir_butterworth" -> ((s, dir) => {
       val (b, a) = graft.functions.IIR.butterLowpass(order = 2, wn = 0.25)
-      s.read.parquet(s"$dir/events.parquet")
+      table(s, s"$dir/events.parquet")
         .select(col("user_id"), col("event_id"), col("ts"), col("value"))
         .iirFilter("user_id", Seq("ts", "event_id"), "value", b, a, "filtered")
         .select(col("user_id"), col("event_id"),
@@ -144,8 +144,10 @@ object ExtraOps {
     // (partitionBy drops event_type from the files themselves).
     "q43_file_provenance" -> ((s, dir) => {
       val tmp = graft.Scratch.dirFor("prov", dir)
-      s.read.parquet(s"$dir/events.parquet")
+      table(s, s"$dir/events.parquet")
         .write.mode("overwrite").partitionBy("event_type").parquet(tmp)
+      // not Graft.table: the event_type column comes from partition
+      // discovery over the staging dir, which needs inference
       s.read.parquet(tmp)
         .groupBy(regexp_extract(input_file_name(), "event_type=([^/]+)/", 1)
           .as("source_file"))
@@ -163,7 +165,7 @@ object ExtraOps {
       // overwritten each run — a createTempDirectory here leaked one
       // dir per invocation across repeated gate/bench runs
       val tmp = graft.Scratch.dirFor("tsv", dir)
-      s.read.parquet(s"$dir/orders.parquet")
+      table(s, s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         .write.mode("overwrite").option("sep", "\t").option("header", "true").csv(tmp)
       s.read

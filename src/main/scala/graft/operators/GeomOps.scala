@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import graft.Graft.table
 
 /** Exact rectilinear (axis-aligned) polygon union — the pure-Scala
   * re-expression of the reference's flood-polygon pipeline
@@ -108,7 +109,7 @@ object GeomOps {
     // bins, cell centers from event_id on a 97 x 89 grid — neighbors
     // overlap (spacing 1 < 2*half), so the union is a real one
     "q66_flood_union" -> ((s, dir) => {
-      val cells = s.read.parquet(s"$dir/events.parquet")
+      val cells = table(s, s"$dir/events.parquet")
         .filter(col("value") > 1.0)
         .select(
           when(col("value") > 150.0, 3).when(col("value") > 50.0, 2).otherwise(1)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Graft.table
 
 /** Multimodal-column plumbing: media payloads are opaque `binary`
   * columns with typed metadata, decoded/feature-extracted batch-wise
@@ -114,7 +115,7 @@ object MultimodalOps {
     // synthesize the payload from text bytes, compute size / sha256 /
     // chunk count as Column algebra
     "q34_multimodal_bytes" -> ((s, dir) => {
-      s.read.parquet(s"$dir/documents.parquet")
+      table(s, s"$dir/documents.parquet")
         .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"), col("text").as("text_copy"))
         .select(
           col("doc_id"),
@@ -135,7 +136,7 @@ object MultimodalOps {
       // the scan stage — a single-split input would encode+decode every
       // payload on one core (no-op at scale)
       val media = graft.Graft.fanOut(
-        s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text")))
+        table(s, s"$dir/documents.parquet").select(col("doc_id"), col("text")))
         .as[(Long, String)]
         .map { case (id, text) =>
           val mt = Seq("image", "audio", "video")((id % 3).toInt)

@@ -12,14 +12,11 @@ import graft.functions.ColumnFns._
   */
 object Relational {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   /** Fixed 6-hourly probe grid per event key — the reference's
     * fixed-frequency target time axis (`pandas.date_range(freq)`,
     * TimeCoverage.py:94-97) as `sequence()` + explode. */
   private[operators] def probeGrid(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events").select(col("user_id")).distinct()
+    table(s, s"$dir/events.parquet").select(col("user_id")).distinct()
       .select(col("user_id"), explode(expr(
         "sequence(TIMESTAMP_NTZ '2024-01-02 00:00:00', TIMESTAMP_NTZ '2024-01-30 00:00:00', INTERVAL 6 HOURS)"))
         .as("probe_ts"))
@@ -27,7 +24,7 @@ object Relational {
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.5 aggregation: grouped sums/avg/count with map-side partial agg
     "q1_agg" -> ((s, dir) => {
-      t(s, dir, "lineitem")
+      table(s, s"$dir/lineitem.parquet")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
           sum(col("l_quantity")).as("sum_qty"),
@@ -39,7 +36,7 @@ object Relational {
     // §2.3 projection + range predicates (bbox/time-subset analogue,
     // Coverage.py:64-96 / TimeCoverage.py:54-92) — pushed to parquet scan
     "q2_filter_proj" -> ((s, dir) => {
-      t(s, dir, "lineitem")
+      table(s, s"$dir/lineitem.parquet")
         .filter(
           col("l_shipdate") >= lit("1996-01-01").cast("timestamp_ntz") &&
             col("l_shipdate") < lit("1997-01-01").cast("timestamp_ntz") &&
@@ -51,10 +48,10 @@ object Relational {
 
     // §2.4 multi-way join, small dims broadcast (region/nation/customer)
     "q3_join_broadcast" -> ((s, dir) => {
-      val orders = t(s, dir, "orders")
-      val cust = t(s, dir, "customer")
-      val nation = t(s, dir, "nation")
-      val region = t(s, dir, "region")
+      val orders = table(s, s"$dir/orders.parquet")
+      val cust = table(s, s"$dir/customer.parquet")
+      val nation = table(s, s"$dir/nation.parquet")
+      val region = table(s, s"$dir/region.parquet")
       orders
         .join(broadcast(cust), orders("o_custkey") === cust("c_custkey"))
         .join(broadcast(nation), cust("c_nationkey") === nation("n_nationkey"))
@@ -65,8 +62,8 @@ object Relational {
 
     // §2.4 semi join (EXISTS)
     "q4_semi_join" -> ((s, dir) => {
-      val orders = t(s, dir, "orders")
-      val li = t(s, dir, "lineitem").filter(col("l_quantity") >= 45.0)
+      val orders = table(s, s"$dir/orders.parquet")
+      val li = table(s, s"$dir/lineitem.parquet").filter(col("l_quantity") >= 45.0)
       orders
         .join(li, orders("o_orderkey") === li("l_orderkey"), "left_semi")
         .select(col("o_orderkey"), col("o_custkey"), round(col("o_totalprice"), 2).as("o_totalprice"))
@@ -74,8 +71,8 @@ object Relational {
 
     // §2.4 anti join (NOT EXISTS): customers with no large order
     "q5_anti_join" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
-      val big = t(s, dir, "orders").filter(col("o_totalprice") > 400000.0)
+      val cust = table(s, s"$dir/customer.parquet")
+      val big = table(s, s"$dir/orders.parquet").filter(col("o_totalprice") > 400000.0)
       cust
         .join(big, cust("c_custkey") === big("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_name"))
@@ -85,7 +82,7 @@ object Relational {
     "q6_window_topk" -> ((s, dir) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      t(s, dir, "orders")
+      table(s, s"$dir/orders.parquet")
         .withColumn("rk", row_number().over(w).cast("long"))
         .filter(col("rk") <= 3)
         .select(col("o_custkey"), col("o_orderkey"), col("rk"))
@@ -96,7 +93,7 @@ object Relational {
       val w = Window.partitionBy(col("l_suppkey"))
         .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, dir, "lineitem")
+      table(s, s"$dir/lineitem.parquet")
         .select(
           col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
           round(sum(col("l_quantity")).over(w), 4).as("running_qty"))
@@ -104,7 +101,7 @@ object Relational {
 
     // §2.7 global sort + limit (top-k)
     "q8_sort_limit" -> ((s, dir) => {
-      t(s, dir, "orders")
+      table(s, s"$dir/orders.parquet")
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
         .limit(10)
         .select(col("o_orderkey"), round(col("o_totalprice"), 2).as("o_totalprice"))
@@ -113,7 +110,7 @@ object Relational {
     // §2.3 value bucketization (flood-class analogue,
     // FloodingPolygonWriter.py:78-83)
     "q9_bucketize" -> ((s, dir) => {
-      t(s, dir, "orders")
+      table(s, s"$dir/orders.parquet")
         .withColumn("price_class",
           when(col("o_totalprice") < 50000.0, "low")
             .when(col("o_totalprice") < 150000.0, "mid")
@@ -126,7 +123,7 @@ object Relational {
     // §2.9 scalar math: magnitude/direction/haversine as Column algebra
     // (speed/direction TimeCoverage.py:781-809, distance utils/distance.py:21-63)
     "q10_scalar_math" -> ((s, dir) => {
-      val e = t(s, dir, "events")
+      val e = table(s, s"$dir/events.parquet")
       val u = col("value") - 5.0
       val v = sin(col("event_id").cast("double")) * 10.0
       e.select(
@@ -140,7 +137,7 @@ object Relational {
 
     // §2.8 union-all by concatenation (MFDataset analogue)
     "q11_union" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
+      val o = table(s, s"$dir/orders.parquet")
       val hi = o.filter(col("o_totalprice") >= 200000.0)
         .select(col("o_orderkey"), lit("hi").as("band"))
       val lo = o.filter(col("o_totalprice") < 20000.0)
@@ -151,14 +148,15 @@ object Relational {
     // §2.8 except-all (golden-state verification primitive): multiset
     // difference of order custkeys vs their sub-100k subset
     "q12_except" -> ((s, dir) => {
-      val all = t(s, dir, "orders").select(col("o_custkey"))
-      val small = t(s, dir, "orders").filter(col("o_totalprice") < 100000.0).select(col("o_custkey"))
+      val all = table(s, s"$dir/orders.parquet").select(col("o_custkey"))
+      val small = table(s, s"$dir/orders.parquet").filter(col("o_totalprice") < 100000.0)
+        .select(col("o_custkey"))
       all.exceptAll(small)
     }),
 
     // §2.10 tumbling event-time window aggregation
     "q13_time_window" -> ((s, dir) => {
-      t(s, dir, "events")
+      table(s, s"$dir/events.parquet")
         .groupBy(date_trunc("hour", col("ts")).cast("timestamp_ntz").as("hour"), col("event_type"))
         .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 4).as("sum_value"))
     }),
@@ -166,7 +164,7 @@ object Relational {
     // §2.5 verification aggregates (skill stats, utils/stats.py:17-53):
     // corr, bias, RMSE, max abs error between obs and a derived model
     "q14_stats_skill" -> ((s, dir) => {
-      val e = t(s, dir, "events")
+      val e = table(s, s"$dir/events.parquet")
         .withColumn("obs", col("value"))
         .withColumn("model", col("value") * 1.1 + sin(col("event_id").cast("double")))
       e.groupBy(col("event_type")).agg(
@@ -179,7 +177,7 @@ object Relational {
     // the CDC core reduction: last-writer-wins per key (max_by over lsn;
     // DefaultWriter.py:230-240 ordering semantics)
     "q15_cdc_lww" -> ((s, dir) => {
-      t(s, dir, "events")
+      table(s, s"$dir/events.parquet")
         .groupBy(col("user_id"))
         .agg(
           max_by(col("value"), col("event_id")).as("last_value"),
@@ -195,7 +193,7 @@ object Relational {
     // per task crosses the shuffle) instead of shuffling + sorting
     // every event (guide §2.3).
     "q16_dedup_first" -> ((s, dir) => {
-      t(s, dir, "events")
+      table(s, s"$dir/events.parquet")
         .groupBy(col("user_id"), col("event_type"))
         .agg(min(struct(col("ts"), col("event_id"))).as("_f"))
         .select(col("user_id"), col("event_type"), col("_f.event_id").as("event_id"))
@@ -208,7 +206,8 @@ object Relational {
     // shuffle-once via union + ordered window — no range product, the
     // scale path for as-of joins.
     "q17_asof_join" -> ((s, dir) => {
-      val e = t(s, dir, "events").select(col("user_id"), col("ts"), col("value"), col("event_id"))
+      val e = table(s, s"$dir/events.parquet")
+        .select(col("user_id"), col("ts"), col("value"), col("event_id"))
       probeGrid(s, dir)
         .asofJoinLatest(e, "user_id", "probe_ts", "ts", "value", rightTie = Some("event_id"))
         .filter(col("asof_value").isNotNull)
@@ -225,7 +224,7 @@ object Relational {
     // the residual filter) at a fraction of the per-key product.
     "q18_range_join_time" -> ((s, dir) => {
       val deltaUs = 12L * 3600L * 1000000L
-      val e = t(s, dir, "events")
+      val e = table(s, s"$dir/events.parquet")
         .select(col("user_id"), col("value"),
           unix_micros(col("ts").cast("timestamp")).as("_eus"))
       probeGrid(s, dir)
@@ -249,7 +248,7 @@ object Relational {
       val s = s0.newSession()
       s.experimental.extraOptimizations = Seq(graft.plans.BandedRangeJoinRule)
       val deltaUs = 12L * 3600L * 1000000L
-      val e = t(s, dir, "events").select(col("user_id").as("e_uid"), col("value"),
+      val e = table(s, s"$dir/events.parquet").select(col("user_id").as("e_uid"), col("value"),
         unix_micros(col("ts").cast("timestamp")).as("_eus"))
       probeGrid(s, dir)
         .withColumn("_pus", unix_micros(col("probe_ts").cast("timestamp")))
@@ -263,13 +262,13 @@ object Relational {
     // synthesize station coords from nation, customer coords from key,
     // broadcast the small side, min_by(haversine)
     "q19_nn_join" -> ((s, dir) => {
-      val stations = t(s, dir, "nation").select(
+      val stations = table(s, s"$dir/nation.parquet").select(
         col("n_name"),
         (pmod(col("n_nationkey").cast("double") * 37.0, lit(160.0)) - 80.0).as("s_lat"),
         (pmod(col("n_nationkey").cast("double") * 91.0, lit(360.0)) - 180.0).as("s_lon"))
       // fanOut (round-7): the broadcast product + haversine runs in the
       // scan stage — single-split input would evaluate it on one core
-      val cust = graft.Graft.fanOut(t(s, dir, "customer"), col("c_custkey")).select(
+      val cust = graft.Graft.fanOut(table(s, s"$dir/customer.parquet"), col("c_custkey")).select(
         col("c_custkey"),
         (pmod(col("c_custkey").cast("double") * 17.0, lit(160.0)) - 80.0).as("c_lat"),
         (pmod(col("c_custkey").cast("double") * 53.0, lit(360.0)) - 180.0).as("c_lon"))

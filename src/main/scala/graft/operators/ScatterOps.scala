@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Graft.table
 
 /** Scattered 2-D interpolation (scipy `griddata(method="linear",
   * rescale=True)`) — the reference's horizontal regridding kernel
@@ -183,7 +184,7 @@ object ScatterOps {
     * generic path (Bowyer-Watson + cell index + broadcast join). */
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q67_griddata" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = table(s, s"$dir/events.parquet")
       // scatter: slots 0..64 -> bottom row (x=slot, y=0), 65..128 ->
       // top row (x=slot-65+0.5, y=1); integer values from the table
       val pts = ev.groupBy((col("event_id") % 129).as("slot"))

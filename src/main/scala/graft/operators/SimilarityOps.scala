@@ -19,7 +19,7 @@ object SimilarityOps {
   // whole vector per plane/centroid) run in the scan stage — a
   // single-split input would evaluate them on one core (no-op at scale)
   private def emb(s: SparkSession, dir: String): DataFrame =
-    graft.Graft.fanOut(s.read.parquet(s"$dir/embeddings.parquet"), col("vec_id"))
+    graft.Graft.fanOut(table(s, s"$dir/embeddings.parquet"), col("vec_id"))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"), col("label"))
 
   val NumQueries = 10

@@ -27,9 +27,6 @@ import graft.Graft._
   */
 object StencilOps {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   val GridW = 64
 
   /** Synthetic staggered grid over `part`: cell (x, y) with
@@ -38,7 +35,7 @@ object StencilOps {
     * oracles (doubles throughout — DuckDB numeric literals are DECIMAL
     * unless cast). */
   private def staggeredGrid(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    table(s, s"$dir/part.parquet")
       .select(col("p_partkey").as("cell_id"),
         (col("p_partkey") % GridW).as("x"),
         floor(col("p_partkey") / lit(GridW.toDouble)).cast("long").as("y"))
@@ -66,7 +63,7 @@ object StencilOps {
       // window keep-first pick (event_id is unique) — so the reduction
       // gets map-side partial aggregation instead of a full shuffle+sort
       // of every event (guide §2.3).
-      val ev = t(s, dir, "events")
+      val ev = table(s, s"$dir/events.parquet")
         .groupBy(col("user_id"), col("ts"))
         .agg(min(struct(col("event_id"), col("value"))).as("_f"))
         .select(col("user_id"), col("ts"), col("_f.value").as("value"))
@@ -82,7 +79,7 @@ object StencilOps {
     // Exact-gated: both engines evaluate the identical double formula.
     "q64_interp_cubic_axis" -> ((s, dir) => {
       // same agg-based keep-first as q54 (round-7)
-      val ev = t(s, dir, "events")
+      val ev = table(s, s"$dir/events.parquet")
         .groupBy(col("user_id"), col("ts"))
         .agg(min(struct(col("event_id"), col("value"))).as("_f"))
         .select(col("user_id"), col("ts"), col("_f.value").as("value"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Graft.table
 import graft.functions.ColumnFns._
 
 /** Text-analysis operators for a training-data pipeline over the
@@ -10,9 +11,6 @@ import graft.functions.ColumnFns._
   * (codegen'd), no UDFs.
   */
 object TextOps {
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   private def markers(text: Column, words: Seq[String]): Column =
     regexp_count(lower(text), lit("\\b(" + words.mkString("|") + ")\\b"))
@@ -26,7 +24,7 @@ object TextOps {
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // token counting + per-language corpus stats
     "q20_text_tokens" -> ((s, dir) => {
-      docs(s, dir)
+      table(s, s"$dir/documents.parquet")
         .groupBy(col("lang"))
         .agg(
           count(lit(1)).as("n_docs"),
@@ -41,7 +39,7 @@ object TextOps {
       val toks = tokenCount(col("text"))
       val punct = regexp_count(col("text"), lit("[\\p{Punct}]"))
       val stop = markers(col("text"), langMarkers("en"))
-      graft.Graft.fanOut(docs(s, dir))
+      graft.Graft.fanOut(table(s, s"$dir/documents.parquet"))
         .select(
           col("doc_id"),
           toks.cast("long").as("n_tokens"),
@@ -53,7 +51,7 @@ object TextOps {
     // n-gram-heuristic language ID + confusion matrix vs the labeled lang
     // fanOut (round-7): 24 regex alternation scans per row, map-only
     "q22_text_langid" -> ((s, dir) => {
-      val scored = graft.Graft.fanOut(docs(s, dir))
+      val scored = graft.Graft.fanOut(table(s, s"$dir/documents.parquet"))
         .withColumn("s_en", markers(col("text"), langMarkers("en")))
         .withColumn("s_fr", markers(col("text"), langMarkers("fr")))
         .withColumn("s_de", markers(col("text"), langMarkers("de")))
@@ -80,7 +78,7 @@ object TextOps {
       import org.apache.spark.sql.expressions.Window
       // keep-first per content hash as ONE window pass — the semi-join
       // formulation read documents twice (one extra full scan at 100 TB)
-      val uniq = docs(s, dir)
+      val uniq = table(s, s"$dir/documents.parquet")
         .withColumn("_rn", row_number().over(
           Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))))
         .filter(col("_rn") === 1).drop("_rn")
@@ -108,7 +106,7 @@ object TextOps {
     // canonical-form fingerprint dedup groups (rolling-hash analogue;
     // md5 chosen for cross-engine reproducibility)
     "q23_fingerprint" -> ((s, dir) => {
-      docs(s, dir)
+      table(s, s"$dir/documents.parquet")
         .groupBy(fingerprint(col("text")).as("fp"))
         .agg(count(lit(1)).as("cnt"), min(col("doc_id")).as("min_doc_id"))
     }),
@@ -125,7 +123,7 @@ object TextOps {
         (expr("instr('0123456789abcdef', substring(md5(cast(doc_id as string)), 1, 1))") - 1) * 16 +
           (expr("instr('0123456789abcdef', substring(md5(cast(doc_id as string)), 2, 1))") - 1)
         ) % 100
-      docs(s, dir)
+      table(s, s"$dir/documents.parquet")
         .select(col("doc_id"), col("lang"), bucket.cast("long").as("bucket"))
         .withColumn("split",
           when(col("bucket") < 80, "train")
@@ -148,7 +146,7 @@ object TextOps {
         .otherwise(col("text"))
       val urlRe = "https?://[^ ]+"
       val mailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-      graft.Graft.fanOut(docs(s, dir))
+      graft.Graft.fanOut(table(s, s"$dir/documents.parquet"))
         .select(col("doc_id"), planted.as("_t"))
         .select(col("doc_id"),
           regexp_count(col("_t"), lit(urlRe)).cast("long").as("n_urls"),
@@ -164,7 +162,7 @@ object TextOps {
     // so the gate is exact. At 100 TB swap `percentile` for
     // `approx_percentile` (t-digest) — same call shape, bounded memory.
     "q63_token_percentiles" -> ((s, dir) => {
-      docs(s, dir)
+      table(s, s"$dir/documents.parquet")
         .select(col("lang"), tokenCount(col("text")).cast("double").as("_t"))
         .groupBy(col("lang"))
         .agg(
@@ -183,7 +181,7 @@ object TextOps {
     // bigram table) collapses to a shuffle-FREE map stage; docs with
     // fewer than 2 words drop out exactly as the null-lead filter did.
     "q59_repetition" -> ((s, dir) => {
-      graft.Graft.fanOut(docs(s, dir))
+      graft.Graft.fanOut(table(s, s"$dir/documents.parquet"))
         .select(col("doc_id"), split(trim(lower(col("text"))), "\\s+").as("_ws"))
         .filter(size(col("_ws")) >= 2)
         .select(col("doc_id"),

@@ -38,9 +38,6 @@ import graft.functions.ColumnFns._
   */
 object ToleranceOps {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   val DepthDelta = 1.0 // reference LevelCoverage.DEPTH_DELTA (m)
   val TimeDeltaUs = 7200L * 1000000L // ±2 h tolerance in microseconds
 
@@ -48,7 +45,7 @@ object ToleranceOps {
     // §2.4 vertical level match: candidates within ±DEPTH_DELTA per
     // cell, banded equi-join on (cell, depth bin ± 1)
     "q45_level_match" -> ((s, dir) => {
-      val levels = t(s, dir, "part")
+      val levels = table(s, s"$dir/part.parquet")
         .select(
           (col("p_partkey") % 40).as("cell"),
           floor(col("p_partkey") / lit(40.0)).cast("long").as("z_idx"))
@@ -88,7 +85,7 @@ object ToleranceOps {
     "q47_interp_nearest" -> ((s, dir) => {
       val probes = Relational.probeGrid(s, dir)
         .withColumn("_pus", unix_micros(col("probe_ts").cast("timestamp")))
-      val ev = t(s, dir, "events")
+      val ev = table(s, s"$dir/events.parquet")
         .select(col("user_id"), col("ts"), col("value"), col("event_id"))
         .withColumn("_eus", unix_micros(col("ts").cast("timestamp")))
       probes
@@ -104,15 +101,15 @@ object ToleranceOps {
 
     // §2.4 "quick" NN: per-axis argmin on a regular grid
     "q48_quick_nn" -> ((s, dir) => {
-      val latAxis = t(s, dir, "supplier")
+      val latAxis = table(s, s"$dir/supplier.parquet")
         .select((col("s_suppkey").cast("double") * 1.6 - 80.0).as("g_lat")).distinct()
-      val lonAxis = t(s, dir, "part")
+      val lonAxis = table(s, s"$dir/part.parquet")
         .select(((col("p_partkey") % 180).cast("double") * 2.0 - 180.0).as("g_lon")).distinct()
       // fanOut (round-7): the query×axis products below are evaluated in
       // the stage that scans `customer` — a single-split scan would run
       // the whole ~15M-row product on one core (no-op at scale); hash
       // by c_custkey so the argmin aggregates reuse the exchange
-      val cust = graft.Graft.fanOut(t(s, dir, "customer"), col("c_custkey")).select(
+      val cust = graft.Graft.fanOut(table(s, s"$dir/customer.parquet"), col("c_custkey")).select(
         col("c_custkey"),
         (pmod(col("c_custkey").cast("double") * 17.0, lit(160.0)) - 80.0).as("c_lat"),
         (pmod(col("c_custkey").cast("double") * 53.0, lit(360.0)) - 180.0).as("c_lon"))
@@ -153,11 +150,11 @@ object ToleranceOps {
 
     // §2.4 grid-pair positional zip join
     "q49_grid_zip" -> ((s, dir) => {
-      val gridA = t(s, dir, "part").select((col("p_partkey") % 800).as("cell")).distinct()
+      val gridA = table(s, s"$dir/part.parquet").select((col("p_partkey") % 800).as("cell")).distinct()
         .select(col("cell"),
           (pmod(col("cell").cast("double") * 3.1, lit(160.0)) - 80.0).as("lat_a"),
           (pmod(col("cell").cast("double") * 7.9, lit(360.0)) - 180.0).as("lon_a"))
-      val gridB = t(s, dir, "orders").select((col("o_orderkey") % 800).as("cell")).distinct()
+      val gridB = table(s, s"$dir/orders.parquet").select((col("o_orderkey") % 800).as("cell")).distinct()
         .select(col("cell"),
           (pmod(col("cell").cast("double") * 5.3, lit(160.0)) - 80.0).as("lat_b"),
           (pmod(col("cell").cast("double") * 11.7, lit(360.0)) - 180.0).as("lon_b"))
@@ -174,7 +171,7 @@ object ToleranceOps {
     // (coord -> index) must reproduce the source indices.
     "q51_affine_grid" -> ((s, dir) => {
       val (c, a, f, e) = (-180.0, 0.25, 60.0, -0.125) // origin + pixel sizes (b=d=0)
-      t(s, dir, "part")
+      table(s, s"$dir/part.parquet")
         .select(col("p_partkey").as("cell_id"),
           (col("p_partkey") % 64).as("px"),
           floor(col("p_partkey") / lit(64.0)).cast("long").as("py"))
@@ -189,7 +186,7 @@ object ToleranceOps {
     // pre-image, corrupted for every 97th event; count detections
     "q50_before_image_audit" -> ((s, dir) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      t(s, dir, "events")
+      table(s, s"$dir/events.parquet")
         .withColumn("_expected", lag(col("value"), 1).over(w))
         .withColumn("_delivered",
           col("_expected") + when(col("event_id") % 97 === 0, lit(1.0)).otherwise(lit(0.0)))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -78,17 +76,9 @@ class PointLookupSpec extends AnyFunSuite {
   test("readKey runs as many Spark jobs on a 4-group table as on a 1-group table") {
     // a group read with an inferred schema would add one schema job per group
     def jobs(table: LakeTable, key: (String, String)): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger()
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
-      }
-      TestListenerBus.drain(spark.sparkContext)
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        assert(table.readKey(spark, key._1, key._2).collect().length == 1)
-        TestListenerBus.drain(spark.sparkContext)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      n.get
+      val (rows, n) = TestSpark.jobsDuring(table.readKey(spark, key._1, key._2).collect())
+      assert(rows.length == 1)
+      n
     }
     val (one, keys) = mkTable(groups = 1)
     val (four, _) = mkTable(groups = 4)

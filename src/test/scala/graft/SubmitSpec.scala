@@ -97,4 +97,22 @@ class SubmitSpec extends AnyFunSuite {
     assert(new graft.cdc.LakeTable(s"$dir/t").latest().isEmpty,
       "no segments -> no commits")
   }
+
+  test("layout sniff reads the first segment's footer: inference's layout, no Spark job") {
+    import org.apache.spark.sql.types.StructType
+    val base = TestSpark.tmpDir("submit-sniff")
+    val cfg = GenConfig(numEvents = 2000L, numRepos = 10L, pathsPerRepo = 5L)
+    Seq(false, true).foreach { typedPayload =>
+      val log = s"$base/log-$typedPayload"
+      Pipeline.writeLogSegments(spark, cfg, log, segments = 2, typedPayload = typedPayload)
+      // runStream's pattern and replaySegments' first segment
+      Seq(s"$log/seg-*", s"$log/seg-00000").foreach { p =>
+        val inferred = spark.read.parquet(p).schema("after").dataType.isInstanceOf[StructType]
+        val (sniffed, jobs) = TestSpark.jobsDuring(Pipeline.typedLayout(spark, p))
+        assert(inferred == typedPayload && sniffed.contains(inferred), p)
+        assert(jobs == 0, s"$p: $jobs jobs")
+      }
+    }
+    assert(Pipeline.typedLayout(spark, s"$base/none/seg-*").isEmpty)
+  }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (cuts JVM spin-up cost). */
@@ -19,4 +21,21 @@ object TestSpark {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** `body`'s result and the number of Spark jobs started while it ran.
+    * The listener bus is drained before and after, so earlier jobs are
+    * not counted and this body's are not missed. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
+    }
+    TestListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      TestListenerBus.drain(spark.sparkContext)
+      (r, n.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
