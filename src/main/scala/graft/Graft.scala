@@ -3,18 +3,20 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.cdc.{Apply, ApplyStats, Audit, LakeTable, Pipeline}
 
 /** Public API of the engine — the operators a user of the reference
-  * library would reach for, re-expressed Spark-first, plus the CDC
-  * ingest entry points. Everything is Column algebra / single-shuffle
-  * DataFrame plans; nothing collects to the driver.
+  * library would reach for, re-expressed Spark-first. Each is the one
+  * implementation of its idea: the gated queries and the CDC apply
+  * (graft.cdc.Apply, LakeTable) build through these same operators.
+  * Everything is Column algebra / single-shuffle DataFrame plans;
+  * nothing collects to the driver. The CDC engine's entry points are
+  * graft.cdc.Apply, Pipeline and LakeTable themselves.
   *
   * {{{
   * import graft.Graft._
   * events.lastWriterWins(Seq("repo", "path"), col("lsn"))
-  * orders.asofJoinLatest(quotes, "sym", "t", "px")
-  * docs.minhashCandidatePairs("text", k = 16, bands = 4)
+  * orders.asofJoinLatest(quotes, "sym", "o_ts", "q_ts", "px")
+  * docs.minhashCandidatePairs("doc_id", "text", k = 16, bands = 4)
   * }}}
   */
 object Graft {
@@ -26,95 +28,6 @@ object Graft {
     spark.read.schema(graft.cdc.ParquetStats.schema(spark, path).getOrElse(
       throw new java.io.FileNotFoundException(s"no parquet data file at $path")))
       .parquet(path)
-
-  // ---- CDC engine entry points -------------------------------------
-
-  /** Apply one exactly-once epoch of change events (envelope columns
-    * op/lsn/ts/schemaVersion/repo/path/after) to the lake table at
-    * `tableDir`. See graft.cdc.Apply for the job structure. */
-  def applyChangeLog(spark: SparkSession, events: DataFrame, tableDir: String,
-      epochId: Long, auditDir: Option[String] = None, salted: Boolean = false,
-      dlqDir: Option[String] = None): ApplyStats =
-    Apply.applyEpoch(spark, new LakeTable(tableDir), events, epochId,
-      auditDir.map(new Audit(_)), salted,
-      dlq = dlqDir.map(new graft.cdc.DeadLetterQueue(_)))
-
-  /** Current state of a lake table (merge-on-read reconstruction). */
-  def readTable(spark: SparkSession, tableDir: String): DataFrame =
-    new LakeTable(tableDir).read(spark)
-
-  /** Point lookup of one key: partition-prunes to the key's single
-    * hash bucket (1/numBuckets of the files at any table size). */
-  def readTableKey(spark: SparkSession, tableDir: String,
-      repo: String, path: String): DataFrame =
-    new LakeTable(tableDir).readKey(spark, repo, path)
-
-  /** Incremental change read: the reduced change rows (op/lsn/ts +
-    * payload, tombstones included) committed in (sinceVersion,
-    * toVersion] — tail the table itself as a change source and chain
-    * CDC stages. O(changed rows); refuses ranges that cross a
-    * compaction (Iceberg incremental-scan contract). */
-  def readTableChanges(spark: SparkSession, tableDir: String,
-      sinceVersion: Long, toVersion: Long): DataFrame =
-    new LakeTable(tableDir).readChanges(spark, sinceVersion, toVersion)
-
-  /** Chunked fallback when the range crosses a compaction: unions the
-    * readable sub-ranges and names each rewrite boundary (resync-at-
-    * the-boundary contract — see [[graft.cdc.ChunkedChanges]]). */
-  def readTableChangesChunked(spark: SparkSession, tableDir: String,
-      sinceVersion: Long, toVersion: Long): graft.cdc.ChunkedChanges =
-    new LakeTable(tableDir).readChangesChunked(spark, sinceVersion, toVersion)
-
-  /** Time-travel read: table state as of committed snapshot `version`
-    * (Iceberg VERSION AS OF), reconstructed from manifest history. */
-  def readTableVersion(spark: SparkSession, tableDir: String, version: Long): DataFrame =
-    new LakeTable(tableDir).readVersion(spark, version)
-
-  /** Table maintenance: rewrite buckets holding >= `minDeltas` live
-    * delta groups into per-bucket bases (Iceberg binpack analogue);
-    * other buckets' files untouched. Returns the rewritten buckets. */
-  def compactTable(spark: SparkSession, tableDir: String, minDeltas: Int): Set[Int] =
-    new LakeTable(tableDir).compactBuckets(spark, minDeltas)
-
-  /** Table maintenance: migrate the table to `newBuckets` hash buckets
-    * (one state rewrite, atomic at the manifest commit; see
-    * [[graft.cdc.LakeTable.rebucket]]). Returns false iff the commit
-    * lost a CAS race — re-invoke to retry against the new snapshot. */
-  def rebucketTable(spark: SparkSession, tableDir: String, newBuckets: Int): Boolean =
-    new LakeTable(tableDir).rebucket(spark, newBuckets)
-
-  /** Table maintenance: keep the newest `keep` snapshots, delete the
-    * rest plus any data files no kept snapshot references (Iceberg
-    * expire_snapshots + remove_orphan_files; single-writer vacuum). */
-  def expireTableSnapshots(tableDir: String, keep: Int,
-      graceMs: Long = 600000L): Unit =
-    new LakeTable(tableDir).expireSnapshots(keep, graceMs)
-
-  /** Requeue previously dead-lettered events after a fix (edited
-    * quarantine rows or an evolved registry): re-classifies, applies
-    * the now-clean rows as one fresh epoch, prunes drained quarantine
-    * partitions. See [[graft.cdc.DeadLetterQueue.replay]]. */
-  def replayDeadLetters(spark: SparkSession, dlqDir: String, tableDir: String,
-      maxDriverRows: Long = graft.cdc.DeadLetterQueue.DefaultMaxDriverRows)
-      : graft.cdc.DlqReplayStats =
-    new graft.cdc.DeadLetterQueue(dlqDir).replay(spark, new LakeTable(tableDir),
-      maxDriverRows)
-
-  /** Tail a directory of binlog segments as a Structured Stream into
-    * the lake table, checkpointed and exactly-once; resumes from
-    * `checkpointDir` after a crash. */
-  def streamChangeLog(spark: SparkSession, logDir: String, tableDir: String,
-      checkpointDir: String, auditDir: Option[String] = None,
-      // "sniff" | "json" | "typed": pin the segment payload layout when
-      // the tail starts before its producer (empty dir = nothing to
-      // sniff -> runStream fails fast and points here)
-      layout: String = "sniff",
-      // idempotence namespace — REQUIRED distinct per tail when more
-      // than one ingest job feeds the same table (a shared namespace
-      // silently drops the second tail's colliding batch ids)
-      writer: String = graft.cdc.LakeTable.DefaultWriter): Unit =
-    Pipeline.runStream(spark, logDir, tableDir, checkpointDir,
-      auditDir.map(new Audit(_)), layout = layout, writer = writer)
 
   /** Scale-adaptive scan fan-out (guide §2.2/§2.5): CPU-dense per-row
     * stages (tokenize + hash families, regex scans, codec decodes)
@@ -135,6 +48,11 @@ object Graft {
     else df.repartition(target, keys: _*)
   }
 
+  /** SimHash signature width: 60 = 15 hex chars of md5, the widest
+    * hash both engines turn into the SAME integer (DuckDB
+    * CAST('0x…' AS BIGINT), Spark conv(…, 16, 10)). */
+  val SimhashBits = 60
+
   // ---- DataFrame operators ------------------------------------------
 
   implicit class GraftOps(private val df: DataFrame) {
@@ -149,27 +67,18 @@ object Graft {
           clash.toSeq.sorted.mkString(", "))
     }
 
-    /** One row per key: the row with the greatest `orderCol` wins —
-      * the CDC reduction (map-side partial agg collapses hot keys
-      * before the shuffle). */
+    /** One row per key: the row with the greatest `orderCol` wins,
+      * its columns in input order after the keys. The engine's one
+      * last-writer-wins reduce — the CDC apply's per-epoch reduce (both
+      * stages of its salted form) and the lake table's merge-on-read
+      * reconstruction build through it. A single `max_by` hash
+      * aggregate: map-side partial aggregation collapses hot keys
+      * before the shuffle. */
     def lastWriterWins(keyCols: Seq[String], orderCol: Column): DataFrame = {
       val valueCols = df.columns.filterNot(keyCols.contains).toSeq
       df.groupBy(keyCols.map(col): _*)
         .agg(max_by(struct(valueCols.map(col): _*), orderCol).as("_s"))
         .select(keyCols.map(col) ++ valueCols.map(c => col(s"_s.$c").as(c)): _*)
-    }
-
-    /** Keep-first dedup per key in `orderCols` order
-      * (TimeMultiPoint.py:309-318 semantics). */
-    def dedupKeepFirst(keyCols: Seq[String], orderCols: Seq[Column]): DataFrame = {
-      val w = Window.partitionBy(keyCols.map(col): _*).orderBy(orderCols: _*)
-      df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
-    }
-
-    /** Per-group top-k by `orderCols`. */
-    def topKPerGroup(keyCols: Seq[String], orderCols: Seq[Column], k: Int): DataFrame = {
-      val w = Window.partitionBy(keyCols.map(col): _*).orderBy(orderCols: _*)
-      df.withColumn("_rk", row_number().over(w)).filter(col("_rk") <= k).drop("_rk")
     }
 
     /** As-of join: for each left row, the latest `right` row with the
@@ -216,7 +125,7 @@ object Graft {
       * Scale path: ONE shuffle — union both sides, one ordered window
       * per direction (the asofJoinLatest shape run both ways); never a
       * per-probe range join. `right` must be unique per (key, rightTs)
-      * (pre-reduce duplicates, e.g. dedupKeepFirst). Output: left
+      * (pre-reduce duplicates first). Output: left
       * columns + `interp_<rightValue>` (double). */
     def interpolateLinearAt(right: DataFrame, keyCol: String, leftTs: String,
         rightTs: String, rightValue: String): DataFrame = {
@@ -514,52 +423,74 @@ object Graft {
             .otherwise(array().cast("array<string>")))).as("shingle"))
     }
 
-    /** MinHash signatures over n-gram shingles: (keyCol, sig:array<long>).
-      * Explode + k codegen'd `min` aggregates. */
+    /** MinHash signatures over word-n-gram shingles: (keyCol,
+      * sig: array<string>). Component i is the min over the doc's
+      * shingles of `md5(shingle # i)` compared AS A HEX STRING — a
+      * PORTABLE hash family (md5 is bit-identical in every engine and
+      * string min is plain lexicographic order), which is what lets the
+      * DuckDB oracle reproduce q26's banding and estimate exactly.
+      * Explode + one hash aggregate with k codegen'd `min` columns
+      * (nested higher-order functions run interpreted, ~20x slower). */
     def minhashSignatures(keyCol: String, textCol: String, k: Int = 16, n: Int = 3): DataFrame = {
-      val sh = ngramShingles(keyCol, textCol, n)
-      val mins = (0 until k).map(i => min(xxhash64(col("shingle"), lit(i))).as(s"_m$i"))
-      sh.groupBy(col(keyCol)).agg(mins.head, mins.tail: _*)
+      val mins = (0 until k).map(i =>
+        min(md5(concat_ws("#", col("shingle"), lit(i)))).as(s"_m$i"))
+      ngramShingles(keyCol, textCol, n)
+        .groupBy(col(keyCol)).agg(mins.head, mins.tail: _*)
         .select(col(keyCol), array((0 until k).map(i => col(s"_m$i")): _*).as("sig"))
     }
 
     /** MinHash + LSH banding near-duplicate candidate pairs with
-      * estimated similarity — candidate generation is an equi-join on
-      * (band, bucket-hash), NEVER an all-pairs product. Output:
-      * (<key>_a, <key>_b, est_sim). */
+      * estimated similarity: (<key>_a, <key>_b, est_sim) with
+      * <key>_a < <key>_b and est_sim — the fraction of equal signature
+      * components — >= minSim. Candidate generation is ONE equi-join on
+      * (band, md5 of the band's k / bands components), never an
+      * all-pairs product. The signature rides through that join (one
+      * row per doc per band) instead of being joined back onto the pair
+      * list, and the estimate is a codegen'd element_at sum, not an
+      * interpreted zip_with/aggregate. It is evaluated BEFORE the
+      * distinct, so the distinct groups by scalars (an array grouping
+      * key forces an interpreted sort-based aggregate); est_sim is a
+      * pure function of the pair, so distinct-then-filter is unchanged
+      * (plan diff and timings: plans/r07/q26_*, OPTIMIZATION_r07.md). */
     def minhashCandidatePairs(keyCol: String, textCol: String, k: Int = 16,
         bands: Int = 4, minSim: Double = 0.25): DataFrame = {
+      require(k % bands == 0, s"minhashCandidatePairs: bands ($bands) must divide k ($k)")
+      val (ka, kb) = (s"${keyCol}_a", s"${keyCol}_b")
       val rowsPerBand = k / bands
       val sig = Materialize(minhashSignatures(keyCol, textCol, k))
       val banded = sig.select(col(keyCol), col("sig"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
-          xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)), b))))
+          md5(concat_ws("|", slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)))))))
         .withColumnRenamed("pos", "_band").withColumnRenamed("col", "_bucket")
-      val a = banded.select(col("_band"), col("_bucket"), col(keyCol).as(s"${keyCol}_a"))
-      val b = banded.select(col("_band"), col("_bucket"), col(keyCol).as(s"${keyCol}_b"))
-      val candidates = a.join(b, Seq("_band", "_bucket"))
-        .filter(col(s"${keyCol}_a") < col(s"${keyCol}_b"))
-        .select(col(s"${keyCol}_a"), col(s"${keyCol}_b")).distinct()
-      candidates
-        .join(sig.select(col(keyCol).as(s"${keyCol}_a"), col("sig").as("_sa")), s"${keyCol}_a")
-        .join(sig.select(col(keyCol).as(s"${keyCol}_b"), col("sig").as("_sb")), s"${keyCol}_b")
-        .withColumn("est_sim",
-          aggregate(zip_with(col("_sa"), col("_sb"), (x, y) => when(x === y, 1).otherwise(0)),
-            lit(0), (acc, v) => acc + v).cast("double") / k.toDouble)
+      val a = banded.select(col("_band"), col("_bucket"), col(keyCol).as(ka), col("sig").as("_sa"))
+      val b = banded.select(col("_band"), col("_bucket"), col(keyCol).as(kb), col("sig").as("_sb"))
+      val matches = (1 to k).map(i =>
+        when(element_at(col("_sa"), i) === element_at(col("_sb"), i), 1).otherwise(0)).reduce(_ + _)
+      a.join(b, Seq("_band", "_bucket"))
+        .filter(col(ka) < col(kb))
+        .select(col(ka), col(kb), (matches.cast("double") / k.toDouble).as("est_sim"))
+        .distinct()
         .filter(col("est_sim") >= minSim)
-        .select(col(s"${keyCol}_a"), col(s"${keyCol}_b"), col("est_sim"))
     }
 
-    /** 64-bit SimHash signatures: (keyCol, sim:long). Explode + 64
-      * codegen'd sum aggregates. */
+    /** SimHash signatures: (keyCol, sim: long), bit b (b < [[SimhashBits]])
+      * set by majority vote over the doc's whitespace tokens. The token
+      * hash is PORTABLE — the top 60 bits of md5(token) as an integer,
+      * identical in any engine — so the DuckDB oracle reproduces q27's
+      * signatures, chunk buckets and hamming distances exactly. Explode
+      * + 60 codegen'd sum aggregates (the HOF bit-vote loop runs
+      * interpreted, ~10x slower), behind a [[Graft.fanOut]] on the key
+      * that the vote aggregate's exchange reuses. */
     def simhashSignatures(keyCol: String, textCol: String): DataFrame = {
-      val votes = (0 until 64).map(b => sum(
+      val votes = (0 until SimhashBits).map(b => sum(
         when(call_function("shiftright", col("_h"), lit(b)).bitwiseAND(lit(1L)) === 1L, 1)
           .otherwise(-1)).as(s"_v$b"))
-      val assembled = (0 until 64).map(b =>
+      val assembled = (0 until SimhashBits).map(b =>
         when(col(s"_v$b") > 0, lit(1L << b)).otherwise(lit(0L))).reduce(_.bitwiseOR(_))
-      df.select(col(keyCol), explode(split(trim(lower(col(textCol))), "\\s+")).as("_tok"))
-        .select(col(keyCol), xxhash64(col("_tok")).as("_h"))
+      Graft.fanOut(df, col(keyCol))
+        .select(col(keyCol), explode(split(trim(lower(col(textCol))), "\\s+")).as("_tok"))
+        .select(col(keyCol),
+          conv(substring(md5(col("_tok")), 1, 15), 16, 10).cast("long").as("_h"))
         .groupBy(col(keyCol))
         .agg(votes.head, votes.tail: _*)
         .select(col(keyCol), assembled.as("sim"))
@@ -654,7 +585,8 @@ object Graft {
       labels
     }
 
-    /** One-call fuzzy dedup: MinHash-LSH near-dup candidate pairs ->
+    /** One-call fuzzy dedup: MinHash-LSH near-dup candidate pairs (the
+      * q26 operator, [[minhashCandidatePairs]]) ->
       * connected components -> drop every doc that is not its cluster's
       * minimum id. Transitive chains (A~B, B~C, A!~C) collapse to one
       * kept doc; docs in no pair pass through untouched. All input

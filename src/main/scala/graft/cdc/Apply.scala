@@ -3,6 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Graft._
 
 /** `snapshot` is the snapshot the epoch committed (None for an
   * idempotent replay skip). */
@@ -98,26 +99,17 @@ object Apply {
   }
 
   /** One row per key: the event with the highest LSN wins; payload and
-    * op ride along in the struct. */
-  def reduce(events: DataFrame): DataFrame = {
-    val valueCols = events.columns.filterNot(Seq("repo", "path").contains).toSeq
-    events
-      .groupBy(col("repo"), col("path"))
-      .agg(max_by(struct(valueCols.map(col): _*), col("lsn")).as("s"))
-      .select(col("repo") +: col("path") +: valueCols.map(c => col(s"s.$c").as(c)): _*)
-  }
+    * op ride along ([[graft.Graft.GraftOps.lastWriterWins]]). */
+  def reduce(events: DataFrame): DataFrame =
+    events.lastWriterWins(Seq("repo", "path"), col("lsn"))
 
   /** Two-stage salted variant for adversarial key floods: pre-reduce on
     * (key, salt) — salt derived from lsn so it needs no extra column in
     * the data — then final-reduce per key. */
-  def saltedReduce(events: DataFrame, saltBuckets: Int = 64): DataFrame = {
-    val valueCols = events.columns.filterNot(Seq("repo", "path").contains).toSeq
-    val salted = events
-      .groupBy(col("repo"), col("path"), pmod(col("lsn"), lit(saltBuckets.toLong)).as("_salt"))
-      .agg(max_by(struct(valueCols.map(col): _*), col("lsn")).as("s"))
-      .select(col("repo") +: col("path") +: valueCols.map(c => col(s"s.$c").as(c)): _*)
-    reduce(salted)
-  }
+  def saltedReduce(events: DataFrame, saltBuckets: Int = 64): DataFrame =
+    reduce(events.withColumn("_salt", pmod(col("lsn"), lit(saltBuckets.toLong)))
+      .lastWriterWins(Seq("repo", "path", "_salt"), col("lsn"))
+      .drop("_salt"))
 
   /** Apply one epoch of raw envelope events to `table`, exactly-once by
     * epoch id. Late events whose keys were already overwritten by a

@@ -206,8 +206,8 @@ final class DeadLetterQueue(val root: String) {
 
 object DeadLetterQueue {
   /** The ONE definition of the replay driver-materialization bound —
-    * referenced by the facade (Graft.replayDeadLetters) and the CLI
-    * (Submit --max-driver-rows) so the three layers cannot drift. */
+    * the default of [[DeadLetterQueue.replay]] and of the CLI
+    * (Submit --max-driver-rows), so the two layers cannot drift. */
   val DefaultMaxDriverRows = 100000L
 }
 

@@ -9,6 +9,7 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Graft._
 
 /** A file group within a snapshot: parquet files written under one
   * physical payload-schema era. Per-group schema ids emulate Iceberg's
@@ -106,7 +107,7 @@ final case class CommitResult(committed: Boolean, group: Option[FileGroup],
   *    no per-batch rewrite of the base — the batch-size-independent hot
   *    path the 10^10-event design point requires.
   *  - Reads/compaction reconstruct last-writer-wins per key with a
-  *    single hash-aggregate (`max_by(struct(...), lsn)`), which Spark
+  *    single hash-aggregate (Graft's `lastWriterWins` on lsn), which Spark
   *    executes with map-side partial aggregation — hot-repo skew
   *    collapses before the shuffle.
   *  - Reference analogue: the reference writes each rank's slab at
@@ -635,13 +636,12 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
     * tombstones at the end (readAt). */
   private def reconstructAt(spark: SparkSession, snapshot: Option[Snapshot],
       onlyBuckets: Option[Set[Int]] = None): DataFrame = {
-    val valueCols = stateCols().filterNot(SchemaRegistry.keyFields.contains)
+    // the state columns only: the `bucket` partition column stays out
+    // of the winner struct
     rawRows(spark, snapshot, onlyBuckets) match {
       case None => emptyChangeFrame(spark)
       case Some(df) =>
-        df.groupBy(col("repo"), col("path"))
-          .agg(max_by(struct(valueCols.map(col): _*), col("lsn")).as("s"))
-          .select(col("repo") +: col("path") +: valueCols.map(c => col(s"s.$c").as(c)): _*)
+        df.select(stateCols().map(col): _*).lastWriterWins(SchemaRegistry.keyFields, col("lsn"))
     }
   }
 

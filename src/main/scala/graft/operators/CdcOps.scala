@@ -96,7 +96,7 @@ object CdcOps {
     }),
 
     // incremental change read (the Iceberg incremental-scan analogue,
-    // gating Graft.readTableChanges end-to-end): deterministically fold
+    // gating LakeTable.readChanges end-to-end): deterministically fold
     // the events table into a lake table as 3 LWW epochs (epoch =
     // lsn % 3, applied in order), then read ONLY the changes the third
     // epoch committed — per-key LWW survivors of that epoch's slice,

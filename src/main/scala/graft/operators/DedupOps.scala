@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Graft._
 
@@ -13,35 +13,9 @@ import graft.Graft._
   */
 object DedupOps {
 
-  /** Distinct word-level 3-gram shingles per doc (doc_id, shingle) —
-    * delegates to the public Graft.ngramShingles operator. */
-  private def shingles(d: DataFrame): DataFrame =
-    d.ngramShingles("doc_id", "text", 3)
-
   val MinhashK = 16
   val Bands = 4 // 4 rows per band
   val MaxShingleDf = 100 // candidate-generation fence for exact Jaccard
-  // 60 = 15 hex chars of md5: the widest hash both engines turn into
-  // the SAME integer (DuckDB CAST('0x…' AS BIGINT), Spark conv(…,16,10))
-  val SimhashBits = 60
-
-  /** MinHash signature: for each of k hash families, the min over the
-    * doc's shingles of `md5(shingle # k)` compared AS A HEX STRING —
-    * a PORTABLE hash family (md5 is bit-identical in every engine, and
-    * string min is plain lexicographic order), which is what lets the
-    * driver's DuckDB oracle reproduce the banding/bucketing EXACTLY
-    * (round-5 verdict item 1: the only reason q26 was rows-only was an
-    * engine-private xxhash64). Computed as explode + one hash aggregate
-    * with k `min` columns — fully codegen'd (nested higher-order
-    * functions would run interpreted and were ~20x slower). */
-  private def signatures(d: DataFrame): DataFrame = {
-    val mins = (0 until MinhashK).map(k =>
-      min(md5(concat_ws("#", col("shingle"), lit(k)))).as(s"m$k"))
-    shingles(d)
-      .groupBy(col("doc_id"))
-      .agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"), array((0 until MinhashK).map(k => col(s"m$k")): _*).as("sig"))
-  }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // exact dedup: hash-groupBy on full text
@@ -68,39 +42,16 @@ object DedupOps {
 
     // MinHash + LSH banding: candidates = pairs sharing a band bucket
     // (equi-join on (band, md5-of-band-slice)); est similarity =
-    // fraction of matching minhash components. The portable md5 hash
-    // family makes the whole pipeline — signatures, banding, candidate
-    // join, estimate — reproducible in DuckDB: EXACT driver gate, plus
-    // the recall spec vs the exact Jaccard oracle.
-    // round-7: the signature RIDES through the candidate join (one row
-    // per doc per band — the q30 embed-rides-along pattern) instead of
-    // being joined back onto the pair list twice, the similarity
-    // estimate is evaluated BEFORE the dedup so the distinct groups by
-    // (long, long, double) scalars — array grouping keys force an
-    // interpreted sort-based aggregate — and the component compare is a
-    // codegen'd element_at sum, not an interpreted zip_with/aggregate
-    // HOF. est_sim is a pure function of the pair, so distinct-then-
-    // filter is unchanged. Two sort-merge joins removed (plan diff in
-    // plans/r07/q26_*).
+    // fraction of matching minhash components (Graft's
+    // minhashCandidatePairs). The portable md5 hash family makes the
+    // whole pipeline — signatures, banding, candidate join, estimate —
+    // reproducible in DuckDB: EXACT oracle gate, plus the recall spec
+    // vs the exact Jaccard oracle.
     "q26_dedup_minhash_lsh" -> ((s, dir) => {
-      val sig = graft.Materialize(signatures(table(s, s"$dir/documents.parquet")))
-      val rowsPerBand = MinhashK / Bands
-      val banded = sig.select(col("doc_id"), col("sig"),
-        posexplode(transform(sequence(lit(0), lit(Bands - 1)), bnd =>
-          md5(concat_ws("|", slice(col("sig"), bnd * rowsPerBand + 1, lit(rowsPerBand)))))))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-      val a = banded.select(col("band"), col("bucket"), col("doc_id").as("doc_a"), col("sig").as("sig_a"))
-      val b = banded.select(col("band"), col("bucket"), col("doc_id").as("doc_b"), col("sig").as("sig_b"))
-      val matches = (0 until MinhashK).map(i =>
-        when(element_at(col("sig_a"), i + 1) === element_at(col("sig_b"), i + 1), 1)
-          .otherwise(0)).reduce(_ + _)
-      a.join(b, Seq("band", "bucket"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"),
-          round(matches.cast("double") / MinhashK.toDouble, 4).as("est_sim"))
-        .distinct()
-        .filter(col("est_sim") >= 0.25)
-        .select(col("doc_a"), col("doc_b"), col("est_sim"))
+      table(s, s"$dir/documents.parquet")
+        .minhashCandidatePairs("doc_id", "text", MinhashK, Bands, minSim = 0.25)
+        .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"),
+          round(col("est_sim"), 4).as("est_sim"))
     }),
 
     // near-dup CLUSTERS from exact-Jaccard pairs: distributed connected
@@ -117,27 +68,14 @@ object DedupOps {
         .select(col("node").as("doc_id"), col("component").as("cluster_id"))
     }),
 
-    // SimHash near-dup: 60-bit signature per doc, candidate pairs by
-    // identical 15-bit chunk (LSH on bit-chunks), keep hamming <= 6.
-    // The token hash is PORTABLE — the top 60 bits of md5(token)
-    // (15 hex chars) as an integer, identical in any engine — so the
-    // driver's DuckDB oracle reproduces signatures, chunk buckets and
-    // hamming distances exactly (was rows-only under xxhash64).
-    // Signature built with explode + 60 codegen'd sum aggregates (the
-    // HOF bit-vote loop runs interpreted and was ~10x slower).
+    // SimHash near-dup: 60-bit signature per doc (Graft's portable
+    // md5-token simhashSignatures, so the DuckDB oracle
+    // reproduces signatures, chunk buckets and hamming distances
+    // exactly), candidate pairs by identical 15-bit chunk (LSH on
+    // bit-chunks), keep hamming <= 6.
     "q27_dedup_simhash" -> ((s, dir) => {
-      val votes = (0 until SimhashBits).map(b => sum(
-        when(call_function("shiftright", col("h"), lit(b)).bitwiseAND(lit(1L)) === 1L, 1)
-          .otherwise(-1)).as(s"v$b"))
-      val assembled = (0 until SimhashBits).map(b =>
-        when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L))).reduce(_.bitwiseOR(_))
-      val sigd = graft.Materialize(graft.Graft.fanOut(table(s, s"$dir/documents.parquet"), col("doc_id"))
-        .select(col("doc_id"), explode(split(trim(lower(col("text"))), "\\s+")).as("tok"))
-        .select(col("doc_id"),
-          conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long").as("h"))
-        .groupBy(col("doc_id"))
-        .agg(votes.head, votes.tail: _*)
-        .select(col("doc_id"), assembled.as("sim")))
+      val sigd = graft.Materialize(
+        table(s, s"$dir/documents.parquet").simhashSignatures("doc_id", "text"))
       val chunked = sigd.select(col("doc_id"), col("sim"),
         posexplode(transform(sequence(lit(0), lit(3)), q =>
           call_function("shiftright", col("sim"), q * lit(15)).bitwiseAND(lit(0x7FFFL)))))

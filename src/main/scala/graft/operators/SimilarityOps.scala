@@ -189,13 +189,11 @@ object SimilarityOps {
     * sort-based partial agg lost to two hash-agg passes; 32-way, one
     * product pass + per-task sort beats two product passes AND drops
     * one O(n) join of the embeddings table (interleaved A/B in
-    * OPTIMIZATION_r07.md: 30-45% warm, 3x cold). Only corner vs the
-    * old `=== max` filter: a max-cosine tie between bitwise 0.0 and -0.0 (struct
-    * ordering is Double.compare, SQL equality treats them equal) —
-    * requires two exactly-zero cosines for the same vector, which the
-    * deterministic gate corpora never produce; QueriesSpec still
-    * asserts every corpus vector is assigned exactly once. */
-  private def assignToCentroids(e: DataFrame, centroids: DataFrame): DataFrame = {
+    * OPTIMIZATION_r07.md: 30-45% warm, 3x cold). A -0.0 and a 0.0
+    * cosine tie here as under the oracle's `= max`: Spark orders a
+    * struct's doubles with SQL semantics (SQLOrderingUtil, -0.0 =
+    * 0.0), so the tie falls through to min(cid). */
+  private[graft] def assignToCentroids(e: DataFrame, centroids: DataFrame): DataFrame = {
     val cids = e.crossJoin(broadcast(centroids))
       .groupBy(col("vec_id"))
       .agg(max(struct(

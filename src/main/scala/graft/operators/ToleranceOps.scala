@@ -82,6 +82,10 @@ object ToleranceOps {
     // their null-extended rows into a null struct, which min ignores, so
     // _b = null flags the fallback with no second probes join
     // (OPTIMIZATION_r07.md: 0.71-0.82 s vs 1.47-1.77 s warm).
+    // `matched` is candidate existence — the reference's
+    // find_time_index rule, a match is an index within TIME_DELTA — so
+    // a nearest event with a NULL value reads matched = 1 and
+    // near_value = NULL.
     "q47_interp_nearest" -> ((s, dir) => {
       val probes = Relational.probeGrid(s, dir)
         .withColumn("_pus", unix_micros(col("probe_ts").cast("timestamp")))
@@ -238,7 +242,7 @@ object ToleranceOps {
                AND abs(epoch_us(e.ts) - epoch_us(p.probe_ts)) <= 7200000000)
            WHERE rn = 1)
          SELECT p.user_id, p.probe_ts, round(b.value, 6) AS near_value,
-           CASE WHEN b.value IS NOT NULL THEN 1 ELSE 0 END AS matched
+           CASE WHEN b.user_id IS NOT NULL THEN 1 ELSE 0 END AS matched
          FROM probes p LEFT JOIN best b
            ON b.user_id = p.user_id AND b.probe_ts = p.probe_ts""",
     "q48_quick_nn" ->

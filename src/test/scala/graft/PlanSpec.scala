@@ -185,6 +185,23 @@ class PlanSpec extends AnyFunSuite {
       s"q52 assignment re-probe products returned:\n${p52.take(2000)}")
   }
 
+  test("minhashCandidatePairs plans one candidate join and no zip_with/aggregate HOF") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ZipWith}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import graft.Graft._
+    val s = spark
+    import s.implicits._
+    val docs = Seq((1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "the quick brown fox jumps over the lazy cat"),
+      (3L, "an entirely different sentence about something else")).toDF("doc_id", "text")
+    val plan = docs.minhashCandidatePairs("doc_id", "text").queryExecution.optimizedPlan
+    val joins = plan.collect { case j: Join => j }.size
+    val hofs = plan.flatMap(_.expressions.flatMap(_.collect {
+      case e @ (_: ZipWith | _: ArrayAggregate) => e.prettyName }))
+    assert(joins == 1, s"the signature must ride through the band join, got $joins joins:\n$plan")
+    assert(hofs.isEmpty, s"interpreted HOFs in the estimate: ${hofs.distinct}")
+  }
+
   test("q39 approx distinct within 5% of exact") {
     // the gated output asserts its own contract per group...
     val gated = SparkEntry.queries("q39_approx_distinct")(spark, sf)

@@ -71,6 +71,19 @@ class QueriesSpec extends AnyFunSuite {
     assert(recall >= 0.3, s"ANN recall@1 $recall")
   }
 
+  test("IVF assignment ties a -0.0 and a 0.0 cosine and takes the smaller cid") {
+    val s = spark
+    import s.implicits._
+    // cos(v, cid 1) = -MinPositiveValue / 3, which rounds to -0.0;
+    // cos(v, cid 2) = 0.0 — equal cosines, so min(cid) wins
+    val e = Seq((7L, Seq(1.0, 0.0))).toDF("vec_id", "v")
+    val centroids = Seq((1L, Seq(-Double.MinPositiveValue, 3.0)), (2L, Seq(0.0, 1.0)))
+      .toDF("cid", "cv")
+    val cids = graft.operators.SimilarityOps.assignToCentroids(e, centroids)
+      .select("cid").as[Long].collect()
+    assert(cids.toSeq == Seq(1L))
+  }
+
   test("IVF ANN recall vs brute-force top-1 + real pruning") {
     val brute = SparkEntry.queries("q28_knn_brute")(spark, sf)
       .filter(col("rk") === 1)

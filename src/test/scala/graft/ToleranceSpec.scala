@@ -101,6 +101,23 @@ class ToleranceSpec extends AnyFunSuite {
     assert(fb.forall(_.isNullAt(2)))
   }
 
+  test("q47 matches a NULL-valued event in tolerance: matched = 1, near_value NULL") {
+    val s = spark
+    import s.implicits._
+    val dir = TestSpark.tmpDir("graft-q47-null")
+    def at(t: String) = java.time.LocalDateTime.parse(s"2024-01-02T$t")
+    Seq((1L, at("00:30:00"), 1L, None), (2L, at("06:00:00"), 1L, Some(5.0)))
+      .toDF("event_id", "ts", "user_id", "value")
+      .coalesce(1).write.parquet(s"$dir/events.parquet")
+    val got = SparkEntry.queries("q47_interp_nearest")(spark, dir).collect()
+      .map(r => r.getAs[java.time.LocalDateTime]("probe_ts") ->
+        (Option(r.getAs[java.lang.Double]("near_value")).map(_.doubleValue),
+          r.getAs[Int]("matched"))).toMap
+    assert(got(at("00:00:00")) == ((None, 1)), "NULL-valued nearest event is still a match")
+    assert(got(at("06:00:00")) == ((Some(5.0), 1)))
+    assert(got(at("12:00:00")) == ((None, 0)))
+  }
+
   test("q51 affine raster map round-trips exactly (coord -> index -> coord)") {
     val rows = SparkEntry.queries("q51_affine_grid")(spark, sf).collect()
     assert(rows.nonEmpty)
