@@ -20,6 +20,9 @@ import graft.cdc._
   *   replay-dlq <dlqDir> <tableDir> [--max-driver-rows N]
   * }}}
   *
+  * `vacuum` keeps the newest `keep` snapshots; the audit lineage of the
+  * expired ones goes with them (it lives in their manifests).
+  *
   * `tail` runs the checkpointed Structured-Streaming binlog tail with
   * Trigger.AvailableNow: it drains every segment not yet applied and
   * exits — rerunning resumes from the checkpoint, so a cron cadence
@@ -38,7 +41,8 @@ object Submit {
       |       [--max-files-per-trigger N] [--layout sniff|json|typed]
       |       [--writer ID]
       |  compact <tableDir> [minDeltas] [--purge-tombstones-below LSN]
-      |  vacuum <tableDir> [keep] [graceMs]
+      |  vacuum <tableDir> [keep] [graceMs]   (expired snapshots take their
+      |       audit lineage with them)
       |  replay-dlq <dlqDir> <tableDir> [--max-driver-rows N]""".stripMargin
 
   def main(args: Array[String]): Unit = {

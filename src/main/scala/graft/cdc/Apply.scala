@@ -46,7 +46,7 @@ final class AdaptiveSalt(val threshold: Double = 256.0) {
 
 /** The per-epoch apply stage: raw delivered envelope rows -> dedup ->
   * per-key last-writer-wins reduction -> normalized payload -> lake
-  * upsert + audit rows.
+  * upsert, with the epoch's lineage record in its commit.
   *
   * Reference analogue: the reference's write loop sorts per-key series
   * by time, drops duplicate timestamps keep-first
@@ -131,8 +131,10 @@ object Apply {
     *  3. only when the poison count is above zero: the quarantine write,
     *     recomputed from the same reduced frame, after the data write
     *     and before the manifest commit (the upsert's `beforeCommit`);
-    *  4. per-bucket lineage on the audit thread, from the new group's
-    *     parquet footers (see [[Audit]]). */
+    *  4. with an `audit`: the epoch's [[Lineage]] record — per-bucket
+    *     ranges from the new group's parquet footers, plus the source
+    *     range of step 2's observe() — built before the manifest commit
+    *     and committed in the same manifest (see [[Audit]]). */
   def applyEpoch(
       spark: SparkSession,
       table: LakeTable,
@@ -224,10 +226,19 @@ object Apply {
     val normalized = normalize(reduced, batchVersion)
       .observe(keysObs, count(lit(1)).as("keys_in_batch"),
         max(col("lsn")).as("max_applied_lsn"))
+    // the lineage builder runs only on a written group, so the observed
+    // write job has run and `obs` is complete
+    audit.foreach(_.register(table))
+    val lineage = audit.map(_ => (g: FileGroup) => {
+      def stat(k: String): Long = obs.get.get(k).collect { case l: Long => l }.getOrElse(-1L)
+      val buckets = bucketLineage(spark, s"${table.root}/${g.dir}")
+      Lineage(epochId, stat("min_lsn"), stat("max_lsn"), stat("rows_in_batch"),
+        stat("late_events"), batchVersion, (System.nanoTime() - t0) / 1000000L, buckets)
+    })
     val commit = table.upsert(normalized, epochId, batchVersion,
       batchMaxLsn =
         keysObs.get.get("max_applied_lsn").collect { case l: Long => l }.getOrElse(-1L),
-      writer = writer, beforeCommit = quarantine)
+      writer = writer, beforeCommit = quarantine, lineage = lineage)
 
     val inputRows =
       if (commit.committed) obs.get.get("rows_in_batch").map(_.asInstanceOf[Long]).getOrElse(0L)
@@ -246,11 +257,21 @@ object Apply {
     }
 
     val wallMs = (System.nanoTime() - t0) / 1000000L
-    val stats = ApplyStats(epochId, inputRows, appliedKeys, batchVersion, commit.committed,
+    ApplyStats(epochId, inputRows, appliedKeys, batchVersion, commit.committed,
       wallMs, commit.snapshot)
-    if (commit.committed) audit.foreach(_.recordAsync(spark, table, commit.group, obs.get, stats))
-    stats
   }
+
+  /** (bucket, min lsn, max lsn, rows) per bucket of the group at
+    * `groupDir`, from its parquet footers — O(files) metadata, no Spark
+    * job. A group whose footers lack `lsn` statistics falls back to a
+    * column-pruned scan (lsn + the bucket partition column) of that
+    * group: O(applied keys), never a second pass over the raw batch. */
+  private def bucketLineage(spark: SparkSession, groupDir: String): Seq[(Int, Long, Long, Long)] =
+    ParquetStats.bucketRanges(spark, groupDir, "lsn").getOrElse(
+      spark.read.parquet(groupDir)
+        .groupBy(col("bucket"))
+        .agg(min(col("lsn")), max(col("lsn")), count(lit(1)))
+        .collect().toSeq.map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))))
 
   /** Before-image lost-update audit — the consumer of the envelope's
     * `before` slot (Schema.scala). For each key's FIRST event in the

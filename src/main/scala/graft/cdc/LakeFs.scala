@@ -11,7 +11,7 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 
 /** The lake filesystem: the Hadoop filesystem graft reads and writes its
-  * own files through (table groups, audit, dead letters, the tail's
+  * own files through (table groups, dead letters, the tail's
   * streaming checkpoint), under the `graftfs` scheme.
   *
   * It is Hadoop's local filesystem with its process-forking calls moved

@@ -76,12 +76,24 @@ final case class ChunkedChanges(
 final class CommitConflictException(version: Long)
   extends RuntimeException(s"snapshot v$version was committed concurrently")
 
+/** One epoch's lineage record, committed inside the manifest of the
+  * snapshot the epoch publishes (Iceberg's snapshot summary), so the
+  * record is exactly as durable as the epoch's data. `epochId` is the
+  * writer's own id — for a non-default writer it is not the manifest's
+  * top-level `epochId`. The source range, row count and late events
+  * come from the apply pass's observe() metrics; `buckets` holds
+  * (bucket, min lsn, max lsn, rows) per bucket the epoch's group wrote;
+  * `wallMs` is measured up to the commit. */
+final case class Lineage(epochId: Long, sourceMinLsn: Long, sourceMaxLsn: Long,
+    sourceRows: Long, lateEvents: Long, schemaVersion: Int, wallMs: Long,
+    buckets: Seq[(Int, Long, Long, Long)])
+
 /** Result of an upsert: whether the epoch committed (false = idempotent
   * replay skip), the file group it appended (None for an empty epoch
   * that only advanced the high-water mark) and the snapshot it
   * committed (None on a skip) — callers read the new head from here
-  * instead of parsing the manifest again. Auditing MUST use `group`
-  * rather than "the last group of the snapshot" — an empty epoch's
+  * instead of parsing the manifest again. Use `group`, not "the last
+  * group of the snapshot", for what the epoch wrote — an empty epoch's
   * snapshot still ends with the previous epoch's group. */
 final case class CommitResult(committed: Boolean, group: Option[FileGroup],
     snapshot: Option[Snapshot])
@@ -106,10 +118,11 @@ final case class CommitResult(committed: Boolean, group: Option[FileGroup],
   *    Iceberg v2 delete files: tombstones ride along as op='D' rows);
   *    no per-batch rewrite of the base — the batch-size-independent hot
   *    path the 10^10-event design point requires.
-  *  - Reads/compaction reconstruct last-writer-wins per key with a
-  *    single hash-aggregate (Graft's `lastWriterWins` on lsn), which Spark
-  *    executes with map-side partial aggregation — hot-repo skew
-  *    collapses before the shuffle.
+  *  - Reads/compaction reconstruct last-writer-wins per key with one
+  *    aggregate (Graft's `lastWriterWins` on lsn) with map-side partial
+  *    aggregation — hot-repo skew collapses before the shuffle. It
+  *    plans as Sort -> SortAggregate, not a hash aggregate: `max_by`'s
+  *    struct buffer holds strings, which HashAggregateExec cannot hold.
   *  - Reference analogue: the reference writes each rank's slab at
   *    disjoint global offsets into a shared file, idempotent by position
   *    (coverage/io/netcdf/DefaultWriter.py:41,230-240); here position =
@@ -260,8 +273,11 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
   def snapshotAt(v: Long): Option[Snapshot] =
     if (v > 0 && Files.exists(manifestPath(v))) Some(readManifest(v)) else None
 
+  private def manifestNode(version: Long) =
+    mapper.readTree(Files.readAllBytes(manifestPath(version)))
+
   private def readManifest(version: Long): Snapshot = {
-    val node = mapper.readTree(Files.readAllBytes(manifestPath(version)))
+    val node = manifestNode(version)
     val groups = node.get("groups").elements().asScala.map { g =>
       val excluded =
         if (g.has("excludedBuckets"))
@@ -285,6 +301,22 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
       })
   }
 
+  /** The lineage records of the retained snapshots, with the version
+    * that committed each: one per epoch commit that carried one. A
+    * manifest that a vacuum expires between the listing and its read
+    * is skipped. */
+  private[cdc] def lineage(): Seq[(Long, Lineage)] =
+    versions().flatMap { v =>
+      try Option(manifestNode(v).get("lineage")).map { l =>
+        Lineage(l.get("epochId").asLong(), l.get("sourceMinLsn").asLong(),
+          l.get("sourceMaxLsn").asLong(), l.get("sourceRows").asLong(),
+          l.get("lateEvents").asLong(), l.get("schemaVersion").asInt(), l.get("wallMs").asLong(),
+          l.get("buckets").elements().asScala.map(b =>
+            (b.get(0).asInt(), b.get(1).asLong(), b.get(2).asLong(), b.get(3).asLong())).toSeq)
+      }.map(v -> _)
+      catch { case _: java.nio.file.NoSuchFileException => None }
+    }
+
   /** Atomically commit a snapshot manifest: write tmp (fsync'd), then
     * PUBLISH via hard link — `link(2)` fails with EEXIST if the version
     * already exists, so exactly one of two racing committers wins (a
@@ -293,8 +325,10 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
     * catalog). A crash before the link leaves only unreferenced tmp/data
     * files, never a partially visible snapshot. The manifest directory
     * is fsync'd after publishing so the commit survives power loss.
-    * Returns `s`, now the head. */
-  private def commitManifest(s: Snapshot): Snapshot = {
+    * `lineage` is the committing epoch's record; it is a parameter, not
+    * part of [[Snapshot]], so no rewrite can carry an earlier epoch's
+    * record forward. Returns `s`, now the head. */
+  private def commitManifest(s: Snapshot, lineage: Option[Lineage] = None): Snapshot = {
     val obj: ObjectNode = mapper.createObjectNode()
     obj.put("version", s.version)
     obj.put("epochId", s.epochId)
@@ -313,6 +347,15 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
         val ex = gn.putArray("excludedBuckets")
         g.excludedBuckets.toSeq.sorted.foreach(ex.add)
       }
+    }
+    lineage.foreach { l =>
+      val ln = obj.putObject("lineage")
+      ln.put("epochId", l.epochId); ln.put("sourceMinLsn", l.sourceMinLsn)
+      ln.put("sourceMaxLsn", l.sourceMaxLsn); ln.put("sourceRows", l.sourceRows)
+      ln.put("lateEvents", l.lateEvents); ln.put("schemaVersion", l.schemaVersion)
+      ln.put("wallMs", l.wallMs)
+      val bs = ln.putArray("buckets")
+      l.buckets.foreach { case (b, lo, hi, n) => bs.addArray().add(b).add(lo).add(hi).add(n) }
     }
     val tmp = manifestDir.resolve(s".tmp-${UUID.randomUUID()}.json")
     Files.write(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(obj))
@@ -489,11 +532,16 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
     * `beforeCommit` runs once, after the data write and before the
     * manifest commit, and never on an already-committed epoch — the
     * slot for side outputs that must be durable before the epoch
-    * counts as applied (the apply stage's quarantine write). */
+    * counts as applied (the apply stage's quarantine write).
+    * `lineage` describes a written group; it runs after `beforeCommit`
+    * and again whenever a rebucket race rewrites the group, and its
+    * record is committed in the epoch's own manifest. An empty epoch
+    * (no group) records nothing. */
   def upsert(batch: DataFrame, epochId: Long, batchSchemaVersion: Int,
       batchMaxLsn: => Long = -1L,
       writer: String = LakeTable.DefaultWriter,
-      beforeCommit: () => Unit = () => ()): CommitResult = {
+      beforeCommit: () => Unit = () => (),
+      lineage: Option[FileGroup => Lineage] = None): CommitResult = {
     init()
     val prev = latest()
     if (prev.exists(_.watermark(writer) >= epochId)) return CommitResult(committed = false, None, None)
@@ -514,6 +562,8 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
     var written = writeGroup(nb)
     val maxLsn = batchMaxLsn // evaluate the by-name once, after the write
     beforeCommit()
+    def describe(g: Option[FileGroup]) = for (w <- g; f <- lineage) yield f(w)
+    var record = describe(written)
     LakeTable.failpoint("upsert.after-write")
 
     // optimistic commit: if another writer won the version CAS, re-read
@@ -541,7 +591,7 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
       try {
         val next = commitManifest(Snapshot(
           base.map(_.version).getOrElse(0L) + 1L, newEpochId, newSchemaVersion, groups,
-          math.max(base.map(_.maxLsn).getOrElse(-1L), maxLsn), nb, newWriterEpochs))
+          math.max(base.map(_.maxLsn).getOrElse(-1L), maxLsn), nb, newWriterEpochs), record)
         return CommitResult(committed = true, written, Some(next))
       } catch {
         case _: CommitConflictException =>
@@ -557,6 +607,7 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
           if (base.exists(_.numBuckets != nb)) {
             nb = base.get.numBuckets
             written = writeGroup(nb)
+            record = describe(written)
           }
       }
     }
@@ -914,7 +965,8 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
   /** Expire old snapshots (vacuum): keep the newest `keep` manifests,
     * drop older ones, and delete data file groups no kept snapshot
     * references — the Iceberg expire_snapshots / remove_orphan_files
-    * analogue. Time travel remains available for kept versions only.
+    * analogue. Time travel and lineage ([[Audit]]) remain available
+    * for kept versions only.
     *
     * `graceMs` shields in-flight commits from the sweep (Iceberg's
     * older-than cutoff): an unreferenced group or tmp manifest whose

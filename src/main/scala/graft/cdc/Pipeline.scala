@@ -87,35 +87,28 @@ object Pipeline {
       adaptive: Option[AdaptiveSalt] = None,
       dlq: Option[DeadLetterQueue] = None): Seq[ApplyStats] = {
     val table = new LakeTable(tableDir)
-    try {
-      (0 until epochs).map { e =>
-        val (idLo, idHi) = epochIdWindow(cfg, epochs, e)
-        val window = withEpoch(
-          ChangeLogGen.events(spark, cfg, Some((idLo, idHi))), cfg, epochs)
-        val batch = window.filter(col("epoch") === e.toLong).drop("delivery", "epoch")
-        val stats = Apply.applyEpoch(spark, table, batch, e.toLong, audit, salted,
-          adaptive = adaptive, dlq = dlq)
-        compactOnCadence(spark, table, stats, compactEvery, audit)
-        stats
-      }
-    } finally audit.foreach(_.flush())
-    // flush in a finally (like runStream): a failing later epoch must
-    // not drop the buffered async lineage of already-committed ones
+    (0 until epochs).map { e =>
+      val (idLo, idHi) = epochIdWindow(cfg, epochs, e)
+      val window = withEpoch(
+        ChangeLogGen.events(spark, cfg, Some((idLo, idHi))), cfg, epochs)
+      val batch = window.filter(col("epoch") === e.toLong).drop("delivery", "epoch")
+      val stats = Apply.applyEpoch(spark, table, batch, e.toLong, audit, salted,
+        adaptive = adaptive, dlq = dlq)
+      compactOnCadence(spark, table, stats, compactEvery)
+      stats
+    }
   }
 
   /** Compaction cadence after each epoch (`compactEvery` = 0: off).
     * Only buckets with >= compactEvery live delta groups rewrite; the
     * committed snapshot's delta-group count is a cheap necessary
     * condition (per-bucket counts never exceed it), taken from `st`
-    * rather than a second manifest read. The audit side table follows
-    * the same cadence, so its file count stays O(compactions). */
+    * rather than a second manifest read. */
   private def compactOnCadence(spark: SparkSession, table: LakeTable, st: ApplyStats,
-      compactEvery: Int, audit: Option[Audit]): Unit =
+      compactEvery: Int): Unit =
     if (compactEvery > 0 &&
-        st.snapshot.orElse(table.latest()).exists(_.totalDeltaGroups >= compactEvery)) {
+        st.snapshot.orElse(table.latest()).exists(_.totalDeltaGroups >= compactEvery))
       table.compactBuckets(spark, compactEvery)
-      audit.foreach(_.compactAsync(spark))
-    }
 
   /** Materialize the synthetic log as `segments` parquet directories in
     * delivery order — the on-disk binlog the streaming source tails.
@@ -137,7 +130,7 @@ object Pipeline {
 
   /** Replay pre-materialized log segments in batch mode — the bench hot
     * loop: a real binlog arrives as stored bytes, so the measured path
-    * is scan -> dedup/LWW reduce -> normalize -> lake upsert (+ audit),
+    * is scan -> dedup/LWW reduce -> normalize -> lake upsert (+ lineage),
     * with small per-epoch plans (no giant generator trees to re-plan
     * per job). */
   def replaySegments(
@@ -161,17 +154,13 @@ object Pipeline {
     val typed = typedLayout(spark, first).getOrElse(
       throw new java.io.FileNotFoundException(s"replaySegments: no segment file in $first"))
     val readSchema = if (typed) typedEnvelopeSchema else envelopeSchema
-    try {
-      (0 until segments).map { s =>
-        val segDir = f"$logDir/seg-$s%05d"
-        val batch = spark.read.schema(readSchema).parquet(segDir)
-        // era probe from footer stats: O(files) metadata, no data scan
-        val hint = ParquetStats.maxInt(spark, segDir, "schemaVersion")
-        Apply.applyEpoch(spark, table, batch, s.toLong, audit, versionHint = hint)
-      }
-    } finally audit.foreach(_.flush())
-    // flush in a finally (like runStream/runBatchEpochs): a failing
-    // later segment must not drop committed epochs' buffered lineage
+    (0 until segments).map { s =>
+      val segDir = f"$logDir/seg-$s%05d"
+      val batch = spark.read.schema(readSchema).parquet(segDir)
+      // era probe from footer stats: O(files) metadata, no data scan
+      val hint = ParquetStats.maxInt(spark, segDir, "schemaVersion")
+      Apply.applyEpoch(spark, table, batch, s.toLong, audit, versionHint = hint)
+    }
   }
 
   /** Whether the segments under `pattern` carry the typed payload (a
@@ -295,7 +284,7 @@ object Pipeline {
           sourceBatchFiles(batch.sparkSession, checkpointDir, epochId), "schemaVersion")
         val st = Apply.applyEpoch(batch.sparkSession, table, batch, epochId, audit,
           versionHint = hint, adaptive = adaptive, dlq = dlq, writer = writer)
-        compactOnCadence(batch.sparkSession, table, st, compactEvery, audit)
+        compactOnCadence(batch.sparkSession, table, st, compactEvery)
         failAfterEpoch.foreach { f =>
           if (epochId == f) throw new RuntimeException(s"injected failure after epoch $f commit")
         }
@@ -303,9 +292,6 @@ object Pipeline {
       }
       .start()
     try query.awaitTermination()
-    finally {
-      if (query.isActive) query.stop()
-      audit.foreach(_.flush())
-    }
+    finally if (query.isActive) query.stop()
   }
 }

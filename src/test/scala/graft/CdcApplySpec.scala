@@ -208,7 +208,6 @@ class CdcApplySpec extends AnyFunSuite {
     Seq(bs(0), bs(0).limit(0), bs(1), bs(2)).zipWithIndex.foreach { case (b, e) =>
       assert(Apply.applyEpoch(spark, table, b, e.toLong, Some(audit)).committed)
     }
-    audit.flush()
     val rows = audit.read(spark)
     assert(rows.schema.map(f => f.name -> f.dataType.simpleString) == Seq(
       "bucket" -> "int", "min_lsn" -> "bigint", "max_lsn" -> "bigint",

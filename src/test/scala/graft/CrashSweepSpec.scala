@@ -21,6 +21,11 @@ import scala.util.Using
   * visible state, and the surviving data directories must be exactly
   * the head snapshot's referenced groups.
   *
+  * The epoch replays also carry an [[Audit]], and before the vacuum
+  * its lineage must hold every epoch exactly once per bucket the
+  * epoch's committed group wrote: the record commits with the epoch,
+  * so no crash point can commit one without the other.
+  *
   * This exercises the exactly-once commit claim at EVERY stage
   * boundary, not just the two hand-picked crash sites the streaming
   * resume spec drives:
@@ -76,6 +81,24 @@ class CrashSweepSpec extends AnyFunSuite {
     }
   }
 
+  /** Lineage before any vacuum: `audit` holds epochs 0..epochs-1, each
+    * exactly once per bucket dir of the group its commit appended. */
+  private def assertFullLineage(audit: Audit, t: LakeTable): Unit = {
+    val written = (1L to t.latest().get.version).flatMap { v =>
+      val s = t.snapshotAt(v).get
+      val prev = t.snapshotAt(v - 1).map(_.groups.map(_.dir)).getOrElse(Nil)
+      s.groups.map(_.dir).filterNot(prev.contains).flatMap(d =>
+        Using.resource(Files.list(Paths.get(t.root, d)))(_.iterator().asScala
+          .map(_.getFileName.toString).filter(_.startsWith("bucket="))
+          .map(b => (s.epochId, b.stripPrefix("bucket=").toInt)).toSeq))
+    }
+    val got = audit.read(spark).select("epoch_id", "bucket").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSeq
+    assert(got.map(_._1).toSet == (0 until epochs).map(_.toLong).toSet,
+      s"epochs without lineage: ${(0 until epochs).map(_.toLong).toSet -- got.map(_._1)}")
+    assert(got.sorted == written.sorted, "lineage is not once per epoch and written bucket")
+  }
+
   /** Vacuum with grace 0 (cold maintenance), then assert: state digest
     * unchanged, no stale tmp manifests, and the data directories on
     * disk are exactly the head snapshot's referenced groups. */
@@ -93,19 +116,20 @@ class CrashSweepSpec extends AnyFunSuite {
     test(s"crash at $point mid-replay: resume reaches the oracle state") {
       val dir = TestSpark.tmpDir(s"crash-${point.replace('.', '-')}")
       val t = new LakeTable(s"$dir/t")
+      val audit = new Audit(s"$dir/audit")
       val bs = batches()
-      (0 until crashEpoch).foreach(e => Apply.applyEpoch(spark, t, bs(e), e.toLong))
+      def apply(e: Int) = Apply.applyEpoch(spark, t, bs(e), e.toLong, Some(audit))
+      (0 until crashEpoch).foreach(apply)
       arm(point)
-      try intercept[Injected] {
-        Apply.applyEpoch(spark, t, bs(crashEpoch), crashEpoch.toLong)
-      } finally disarm()
+      try intercept[Injected](apply(crashEpoch)) finally disarm()
       // resume: a restarted driver re-delivers the interrupted epoch and
       // continues — after-publish resumes into the idempotent-skip path,
       // the two earlier points re-apply the epoch for real
-      (crashEpoch until epochs).foreach(e => Apply.applyEpoch(spark, t, bs(e), e.toLong))
+      (crashEpoch until epochs).foreach(apply)
       assert(t.latest().get.epochId == epochs - 1L, "resume did not reach the last epoch")
       assert(Oracle.digest(t.read(spark), stateCols) == oracleDigest,
         s"state after crash at $point + resume diverged from the oracle")
+      assertFullLineage(audit, t)
       assertVacuumReclaims(s"$dir/t", t)
     }
 
@@ -228,24 +252,29 @@ class CrashSweepSpec extends AnyFunSuite {
     test(s"streaming: crash at $point in micro-batch 2 resumes exactly-once from checkpoint") {
       val dir = TestSpark.tmpDir(s"crash-stream-${point.replace('.', '-')}")
       val (logDir, tableDir, ckDir) = (s"$dir/log", s"$dir/table", s"$dir/ck")
+      // after publish, the resumed micro-batch 2 takes the
+      // idempotent-skip path: its lineage survives only if it committed
+      // with the epoch
+      val audit = new Audit(s"$dir/audit")
       Pipeline.writeLogSegments(spark, cfg, logDir, segments = epochs)
       val hits = new java.util.concurrent.atomic.AtomicInteger()
       LakeTable.failpoint =
         name => if (name == point && hits.incrementAndGet() == 3) throw Injected(point)
       val crashed =
-        try { Pipeline.runStream(spark, logDir, tableDir, ckDir); false }
+        try { Pipeline.runStream(spark, logDir, tableDir, ckDir, Some(audit)); false }
         catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => true }
         finally disarm()
       assert(crashed, "injected failure must surface through the streaming query")
       val t = new LakeTable(tableDir)
       assert(t.latest().get.epochId == committedAtCrash,
         s"commit visibility at the $point boundary is wrong: ${t.latest().get.epochId}")
-      Pipeline.runStream(spark, logDir, tableDir, ckDir)
+      Pipeline.runStream(spark, logDir, tableDir, ckDir, Some(audit))
       assert(t.latest().get.epochId == epochs - 1L, "restart did not drain the log")
       assert(t.latest().get.version == epochs.toLong,
         s"an epoch committed twice across the restart: version ${t.latest().get.version}")
       assert(Oracle.digest(t.read(spark), stateCols) == oracleDigest,
         s"stream state after crash at $point + restart diverged from the oracle")
+      assertFullLineage(audit, t)
     }
 
   test("crash at vacuum.after-manifest-expire: head intact, re-vacuum completes the sweep") {

@@ -107,8 +107,7 @@ class EndToEndSpec extends AnyFunSuite {
     assert(table.deltaGroupCount <= 2,
       s"compaction cadence failed to bound delta groups: ${table.deltaGroupCount}")
 
-    // audit coherent after the tail's flush: lineage for every epoch,
-    // applied rows accounted
+    // lineage for every epoch, applied rows accounted
     val a = audit.read(spark)
     assert(a.select("epoch_id").distinct().count() == segs.toLong)
     assert(a.agg(sum("rows_applied")).collect()(0).getLong(0) > 0L)

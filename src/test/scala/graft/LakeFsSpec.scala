@@ -68,18 +68,17 @@ class LakeFsSpec extends AnyFunSuite {
   test("lake files read back identically through file: paths; checksums written and verified") {
     val base = TestSpark.tmpDir("graft-lakefs-interop")
     Pipeline.writeLogSegments(spark, cfg, s"$base/log", segments = 2)
-    Pipeline.replaySegments(spark, s"$base/log", s"$base/t", 2, Some(new Audit(s"$base/audit")))
+    Pipeline.replaySegments(spark, s"$base/log", s"$base/t", 2)
     val groups = new LakeTable(s"$base/t").latest().get.groups
     assert(groups.size == 2)
-    (groups.map(g => s"$base/t/${g.dir}") :+ s"$base/audit").foreach { d =>
+    groups.map(g => s"$base/t/${g.dir}").foreach { d =>
       val viaLake = spark.read.parquet(LakeFs.path(spark, d))
       val viaFile = spark.read.parquet(s"file://$d")
       assert(viaLake.schema == viaFile.schema, d)
       assert(viaLake.count() > 0L, d)
       assert(viaLake.exceptAll(viaFile).isEmpty && viaFile.exceptAll(viaLake).isEmpty, d)
     }
-    val parquet = (walk(s"$base/t/data") ++ walk(s"$base/audit"))
-      .filter(_.getFileName.toString.endsWith(".parquet"))
+    val parquet = walk(s"$base/t/data").filter(_.getFileName.toString.endsWith(".parquet"))
     assert(parquet.nonEmpty)
     parquet.foreach(f => assert(Files.exists(f.resolveSibling(s".${f.getFileName}.crc")), f))
 

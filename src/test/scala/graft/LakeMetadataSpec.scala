@@ -16,8 +16,8 @@ import graft.cdc._
   *    empty for existing keys;
   *  - expireSnapshots under time travel: orphan data dirs really leave
   *    the disk while every KEPT version still reads exactly;
-  *  - the audit side table's file count stays O(compactions), not
-  *    O(epochs), over a long replay.
+  *  - audit lineage: one audit dir reads every table registered in it,
+  *    and a record expires with the snapshot that carries it.
   */
 class LakeMetadataSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -304,72 +304,46 @@ class LakeMetadataSpec extends AnyFunSuite {
     inputs.foreach(f => assert(!Files.exists(root.resolve(f)), s"$f not cleaned"))
   }
 
-  test("audit file count stays O(compactions) over a many-epoch replay") {
-    val dir = TestSpark.tmpDir("cdc-audit")
-    val auditDir = s"$dir/audit"
-    val audit = new Audit(auditDir)
-    val table = new LakeTable(s"$dir/t", numBuckets = 4)
-    val keys = (0 until 16).map(i => (s"r$i", "a"))
-    def envBatch(lsn0: Long): DataFrame =
-      keys.zipWithIndex.map { case ((r, p), i) =>
-        ("U", lsn0 + i, ts, 1, r, p, null: String,
-          s"""{"commit":"c$lsn0","lang":"scala","content":"x$lsn0-$i"}""")
-      }.toDF("op", "lsn", "ts", "schemaVersion", "repo", "path", "before", "after")
-    val epochs = 30
-    (0 until epochs).foreach { e =>
-      val st = Apply.applyEpoch(spark, table, envBatch(100L * e), e.toLong,
-        Some(audit), versionHint = Some(1))
-      assert(st.committed)
-      if (table.deltaGroupCount >= 8) {
-        table.compactBuckets(spark, minDeltas = 8)
-        audit.compactAsync(spark, maxFiles = 6)
-      }
-    }
-    audit.flush()
-    val files = scala.util.Using.resource(Files.list(Paths.get(auditDir))) { st =>
-      st.iterator().asScala.count(_.toString.endsWith(".parquet"))
-    }
-    assert(files < epochs / 2, s"audit dir grew O(epochs): $files files for $epochs epochs")
-    // compaction preserved every lineage row: one per (epoch, bucket)
-    // size-tiered: the earliest compacted segment was written once and
-    // never rewritten by later compactions (same path + mtime)
-    val segs = scala.util.Using.resource(Files.list(Paths.get(auditDir))) { st =>
-      st.iterator().asScala.filter(_.getFileName.toString.startsWith("compacted-"))
-        .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toSeq
-    }
-    assert(segs.size >= 2, s"expected multiple size-tiered segments, got ${segs.size}")
+  private def envBatch(keys: Seq[(String, String)], lsn0: Long): DataFrame =
+    keys.zipWithIndex.map { case ((r, p), i) =>
+      ("U", lsn0 + i, ts, 1, r, p, null: String,
+        s"""{"commit":"c$lsn0","lang":"scala","content":"x$lsn0-$i"}""")
+    }.toDF("op", "lsn", "ts", "schemaVersion", "repo", "path", "before", "after")
 
-    val rows = audit.read(spark)
-    assert(rows.select("epoch_id").distinct().count() == epochs.toLong)
-    // rows_applied is per (epoch, bucket); per-epoch sums must equal the
-    // batch key count — compaction must lose/duplicate no lineage row
-    val perEpoch = rows.groupBy("epoch_id")
-      .agg(sum("rows_applied").as("n")).select("n").distinct().collect()
-    assert(perEpoch.map(_.getLong(0)).toSeq == Seq(keys.size.toLong),
-      s"per-epoch lineage sums wrong: ${perEpoch.mkString(",")}")
+  test("two tables sharing one audit dir: read returns the lineage of both") {
+    val dir = TestSpark.tmpDir("cdc-audit-two")
+    val audit = new Audit(s"$dir/audit")
+    val tables = Seq((new LakeTable(s"$dir/a", numBuckets = 4), 16, 2),
+      (new LakeTable(s"$dir/b", numBuckets = 4), 8, 3))
+    tables.foreach { case (t, nKeys, epochs) =>
+      (0 until epochs).foreach(e => assert(Apply.applyEpoch(spark, t,
+        envBatch((0 until nKeys).map(i => (s"r$i", "a")), 100L * e), e.toLong,
+        Some(audit), versionHint = Some(1)).committed))
+    }
+    assert(scala.util.Using.resource(Files.list(Paths.get(dir, "audit")))(
+      _.iterator().asScala.count(_.getFileName.toString.startsWith("_table-"))) == 2)
+    // a fresh instance reads the registry the writers left
+    val perEpoch = new Audit(s"$dir/audit").read(spark).groupBy("epoch_id")
+      .agg(sum("rows_applied")).as[(Long, Long)].collect().toMap
+    assert(perEpoch == Map(0L -> 24L, 1L -> 24L, 2L -> 8L))
   }
 
-  test("audit read serializes with a queued compaction (coherent snapshot)") {
-    import org.apache.spark.sql.SaveMode
-    val dir = TestSpark.tmpDir("cdc-audit-serial")
+  test("lineage expires with its snapshot; legacy audit rows stay") {
+    val dir = TestSpark.tmpDir("cdc-audit-expire")
     val auditDir = s"$dir/audit"
-    (0 until 8).foreach { e =>
-      Seq((e.toLong, 0L, 10L)).toDF("epoch_id", "bucket", "rows_applied")
-        .coalesce(1).write.mode(SaveMode.Append).parquet(auditDir)
-    }
+    // a per-epoch file an earlier engine appended
+    Seq((100L, 0, 10L)).toDF("epoch_id", "bucket", "rows_applied").coalesce(1)
+      .write.parquet(auditDir)
+    val table = new LakeTable(s"$dir/t", numBuckets = 4)
     val audit = new Audit(auditDir)
-    // queue a compaction and read back-to-back: the read's recover+list
-    // runs ON the worker, behind the compaction — it must see each row
-    // exactly once, pinned to a coherent (all-pre or all-post) file set,
-    // never the segment AND its absorbed inputs together
-    audit.compactAsync(spark, maxFiles = 4)
-    val rows = audit.read(spark)
-    assert(rows.count() == 8L)
-    val names = rows.inputFiles.map(f => new java.io.File(f).getName).toSeq
-    assert(names.nonEmpty &&
-      (names.forall(_.startsWith("compacted-")) || names.forall(!_.startsWith("compacted-"))),
-      s"mixed pre/post-compaction listing: $names")
-    audit.flush()
+    val keys = (0 until 8).map(i => (s"r$i", "a"))
+    (0 until 5).foreach(e => Apply.applyEpoch(spark, table, envBatch(keys, 100L * e), e.toLong,
+      Some(audit), versionHint = Some(1)))
+    def lineage = audit.read(spark).select("epoch_id", "snapshot_version").distinct()
+      .as[(Long, Option[Long])].collect().toSet
+    assert(lineage == (0L to 4L).map(e => (e, Some(e + 1))).toSet + ((100L, None)))
+    table.expireSnapshots(keep = 2, graceMs = 0L)
+    assert(lineage == Set((3L, Some(4L)), (4L, Some(5L)), (100L, None)))
   }
 
   test("manifest HEAD hint: latest() survives stale, garbage, lost HEAD and vacuum") {

@@ -2,8 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, count, lit, max, min}
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.cdc.{Audit, GenConfig, ParquetStats, Pipeline}
+import graft.cdc.{Audit, GenConfig, LakeTable, ParquetStats, Pipeline}
 
 /** The table reader [[Graft.table]]: a table opened from its footer has
   * exactly the schema and rows Spark's inference read gives it, and
@@ -76,9 +79,10 @@ class TableReadSpec extends AnyFunSuite {
     assert(started.map(_._1).toSet == eager, s"query builds that started Spark jobs: $started")
   }
 
-  test("an audit dir reads the same rows and schema as a merged read, without its job") {
+  test("an audit dir reads the parent's rows and the manifests' records, without a job") {
     val base = TestSpark.tmpDir("table-read-audit")
-    // lineage files a parent engine wrote, then this engine's own
+    // lineage files a parent engine wrote, then this engine's records,
+    // committed in the manifests of a table registered in the same dir
     val fixture = Paths.get(sys.props("user.dir"), "src", "test", "fixtures", "parent-tail", "audit")
     val dir = Files.createDirectories(Paths.get(base, "audit"))
     scala.util.Using.resource(Files.list(fixture)) { st =>
@@ -88,20 +92,25 @@ class TableReadSpec extends AnyFunSuite {
       pathsPerRepo = 10L), s"$base/log", segments = 3)
     val audit = new Audit(dir.toString)
     Pipeline.replaySegments(spark, s"$base/log", s"$base/t", 3, Some(audit))
-    def merged = spark.read.option("mergeSchema", "true").parquet(dir.toString)
-    val before = rows(merged)
-    assert(before.size > rows(spark.read.parquet(fixture.toString)).size)
+    // per committed version: the epoch it applied and a scan of its group
+    val table = new LakeTable(s"$base/t")
+    val committed = (1L to 3L).flatMap { v =>
+      val g = table.snapshotAt(v).get.groups.last.dir
+      spark.read.parquet(s"$base/t/$g").groupBy("bucket")
+        .agg(min("lsn"), max("lsn"), count(lit(1))).collect()
+        .map(r => Row(r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), v - 1, v).toString)
+    }
     val (read, jobs) = TestSpark.jobsDuring(audit.read(spark))
     assert(jobs == 0)
-    assert(read.schema == merged.schema)
-    assert(rows(read) == before)
-    // compaction rewrites every per-epoch file, the parent's included,
-    // under the same footer-merged schema
-    audit.compactAsync(spark, maxFiles = 1)
-    audit.flush()
-    assert(scala.util.Using.resource(Files.list(dir))(
-      _.iterator().asScala.count(_.toString.endsWith(".parquet"))) == 1)
-    assert(audit.read(spark).schema == merged.schema)
-    assert(rows(audit.read(spark)) == before && rows(merged) == before)
+    assert(read.schema == StructType(Seq("bucket" -> IntegerType, "min_lsn" -> LongType,
+      "max_lsn" -> LongType, "rows_applied" -> LongType, "epoch_id" -> LongType,
+      "source_min_lsn" -> LongType, "source_max_lsn" -> LongType, "source_rows" -> LongType,
+      "late_events" -> LongType, "snapshot_version" -> LongType, "schema_version" -> IntegerType,
+      "wall_ms" -> LongType).map { case (n, t) => StructField(n, t) }))
+    val parent = spark.read.parquet(fixture.toString)
+    assert(rows(parent).diff(rows(read)).isEmpty, "a parent row was lost or changed")
+    val key = Seq("bucket", "min_lsn", "max_lsn", "rows_applied", "epoch_id", "snapshot_version")
+      .map(col)
+    assert(rows(read.select(key: _*)) == (rows(parent.select(key: _*)) ++ committed).sorted)
   }
 }
