@@ -37,24 +37,10 @@ object Bench {
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  /** Fast scratch space: tmpfs when available (the sandbox stand-in for
-    * cluster-local NVMe shuffle disks), else java.io.tmpdir. */
-  private val scratchRoot: String = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isWritable(shm)) "/dev/shm/graft-bench"
-    else sys.props("java.io.tmpdir") + "/graft-bench"
-  }
+  /** Bench's scratch root under the fast scratch base. */
+  private val scratchRoot: String = Scratch.base.resolve("graft-bench").toString
 
-  private def rmTree(dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(java.nio.file.Files.walk(p)) { st =>
-        st.iterator().asScala.toSeq.reverse
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      }
-    }
-  }
+  private def rmTree(dir: String): Unit = Scratch.rmTree(java.nio.file.Paths.get(dir))
 
   private def session(cores: Int, shufflePartitions: Int): SparkSession = {
     val s = SparkSession.builder()

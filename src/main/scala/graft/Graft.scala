@@ -71,9 +71,12 @@ object Graft {
       * its columns in input order after the keys. The engine's one
       * last-writer-wins reduce — the CDC apply's per-epoch reduce (both
       * stages of its salted form) and the lake table's merge-on-read
-      * reconstruction build through it. A single `max_by` hash
-      * aggregate: map-side partial aggregation collapses hot keys
-      * before the shuffle. */
+      * reconstruction build through it. A single `max_by` aggregate:
+      * map-side partial aggregation collapses hot keys before the
+      * shuffle. With a string value column (every CDC use) it plans
+      * as Sort -> SortAggregate, not a hash aggregate: `max_by`'s
+      * struct buffer then holds strings, which HashAggregateExec
+      * cannot hold. */
     def lastWriterWins(keyCols: Seq[String], orderCol: Column): DataFrame = {
       val valueCols = df.columns.filterNot(keyCols.contains).toSeq
       df.groupBy(keyCols.map(col): _*)

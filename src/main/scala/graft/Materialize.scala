@@ -29,10 +29,8 @@ import org.apache.spark.storage.StorageLevel
   *    checkpoint dir (must be set to HDFS/object storage on a real
   *    cluster) — survives executor loss WITHOUT recompute; the setting
   *    for multi-TB intermediates whose lineage is itself expensive.
-  *  - `local`: legacy `localCheckpoint(true)` — fastest, executor-pinned,
-  *    NO fault tolerance; single-node dev/bench only.
   *
-  * The one `localCheckpoint` retained outside this switch is the K-row
+  * The one `localCheckpoint` on a candidate path is the K-row
   * IVF centroid table ([[graft.operators.SimilarityOps.ivfIndex]]):
   * eagerly cutting the lineage of a 16-row table is the right call
   * there (losing it is free to recompute, and the cut stops every
@@ -41,7 +39,6 @@ import org.apache.spark.storage.StorageLevel
 object Materialize {
   def apply(df: DataFrame): DataFrame =
     df.sparkSession.conf.get("spark.graft.materialize", "persist") match {
-      case "local"      => df.localCheckpoint(eager = true)
       case "checkpoint" => df.checkpoint(eager = true)
       case _            => df.persist(StorageLevel.DISK_ONLY)
     }

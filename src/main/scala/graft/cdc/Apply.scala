@@ -23,7 +23,8 @@ final case class ApplyStats(
   * design put approx_count_distinct in the pre-reduce CollectMetrics
   * and paid an interpreted xxhash+HLL per input row, a measured 35%
   * throughput tax) — and engages the two-stage salted reduce for the
-  * NEXT epoch when the ratio crosses `threshold`. The steady-state CDC regime is O(10)
+  * NEXT epoch when the ratio crosses `threshold`; it is the only way
+  * an epoch takes `Apply.saltedReduce`. The steady-state CDC regime is O(10)
   * deliveries per key; an adversarial single-key flood drives the ratio
   * toward rows_in_batch, so the default threshold only ever trips on
   * genuine floods. Decision is one epoch behind by design — the
@@ -56,11 +57,14 @@ final class AdaptiveSalt(val threshold: Double = 256.0) {
   * MERGE into the bucketed lake table.
   *
   * Scale notes (10^10-event design point):
-  *  - the reduction is a hash aggregate with map-side partial
+  *  - the reduction is one aggregate with map-side partial
   *    aggregation — hot-repo keys (Zipf skew) collapse to one row per
   *    key per input partition BEFORE the shuffle, so the shuffle volume
-  *    per epoch is O(distinct keys in batch), not O(events);
-  *  - for adversarial single-key floods, `saltedReduce` pre-reduces on
+  *    per epoch is O(distinct keys in batch), not O(events). It plans
+  *    as Sort -> SortAggregate, not a hash aggregate: `max_by`'s struct
+  *    buffer holds strings, which HashAggregateExec cannot hold;
+  *  - for adversarial single-key floods, an [[AdaptiveSalt]] controller
+  *    switches the next epoch to `saltedReduce`, which pre-reduces on
   *    (key, salt) first — two smaller shuffles instead of one skewed
   *    one (north-rule salting; semantics-preserving because max_by is
   *    associative/commutative);
@@ -141,7 +145,6 @@ object Apply {
       rawEvents: DataFrame,
       epochId: Long,
       audit: Option[Audit] = None,
-      salted: Boolean = false,
       versionHint: Option[Int] = None,
       adaptive: Option[AdaptiveSalt] = None,
       dlq: Option[DeadLetterQueue] = None,
@@ -178,8 +181,8 @@ object Apply {
     val envelope = rawEvents
       .select("repo", "path", "op", "lsn", "ts", "after")
       .observe(obs, baseMetrics.head, baseMetrics.tail: _*)
-    val useSalt = salted || adaptive.exists(_.engaged)
-    val reducedAll = if (useSalt) saltedReduce(envelope) else reduce(envelope)
+    val reducedAll =
+      if (adaptive.exists(_.engaged)) saltedReduce(envelope) else reduce(envelope)
     // poison-pill quarantine (opt-in): classify POST-reduce — O(keys) —
     // inside the write pipeline. The poison rows are counted by an
     // observe() on the write job itself; only when that count is above

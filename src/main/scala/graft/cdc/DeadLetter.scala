@@ -1,7 +1,6 @@
 package graft.cdc
 
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -186,11 +185,7 @@ final class DeadLetterQueue(val root: String) {
         val keep = stillRows.filter(r => !r.isNullAt(epochIdx) && r.getLong(epochIdx) == e)
         val dir = Paths.get(root, s"epoch=$e")
         if (keep.isEmpty) {
-          if (Files.isDirectory(dir)) {
-            val files = java.nio.file.Files.walk(dir)
-            try files.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-            finally files.close()
-          }
+          graft.Scratch.rmTree(dir)
         } else {
           val rows = java.util.Arrays.asList(keep.map(r =>
             org.apache.spark.sql.Row.fromSeq(

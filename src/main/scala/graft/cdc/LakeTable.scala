@@ -105,7 +105,7 @@ final case class CommitResult(committed: Boolean, group: Option[FileGroup],
   * a real cluster).
   *
   * Layout:
-  *   root/manifests/v<00000000N>.json     (atomic-rename committed)
+  *   root/manifests/v<00000000N>.json     (hard-link CAS committed)
   *   root/data/<uuid>/bucket=NNN/ (parquet files, written and read
   *     through the lake filesystem, [[LakeFs]])
   *
@@ -129,21 +129,6 @@ final case class CommitResult(committed: Boolean, group: Option[FileGroup],
   *    key bucket, idempotence = epoch-keyed snapshot commit.
   */
 object LakeTable {
-  /** One warning per JVM when a mount forces the no-CAS commit path. */
-  private val linkFallbackWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  /** Opt-in for the DEGRADED commit path on filesystems without hard
-    * links (some FUSE/object-store mounts, exFAT): existence-probe +
-    * atomic rename is atomic-publish but NOT compare-and-swap, so two
-    * concurrent writers can both pass the probe and the second rename
-    * silently replaces the first's committed snapshot — a lost update.
-    * Default is therefore to FAIL the commit on such mounts; a
-    * known-single-writer deployment sets `-Dgraft.lake.allowNoCas=true`
-    * (or env GRAFT_LAKE_ALLOW_NOCAS=1) to accept the degradation. */
-  private[graft] def noCasAllowed: Boolean =
-    sys.props.get("graft.lake.allowNoCas").exists(_.equalsIgnoreCase("true")) ||
-      sys.env.get("GRAFT_LAKE_ALLOW_NOCAS").contains("1")
-
   /** Test seam: the atomic link(target, source) primitive the commit
     * CAS uses — overridden in specs to simulate a link-less mount. */
   private[graft] var linkImpl: (Path, Path) => Unit =
@@ -372,34 +357,16 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
       case _: java.nio.file.NoSuchFileException =>
         throw new CommitConflictException(s.version)
       // filesystems without hard links (some FUSE/object-store mounts,
-      // exFAT): existence-probe + atomic rename would be atomic-publish
-      // but NOT compare-and-swap — two concurrent writers (exactly the
-      // stream+compactor+vacuum triad Submit promotes) could both pass
-      // the probe and the second rename silently replaces the first's
-      // committed snapshot. FAIL the commit by default; the degradation
-      // is OPT-IN for known-single-writer deployments (see noCasAllowed)
+      // exFAT) offer no compare-and-swap: a probe + atomic rename would
+      // let two concurrent writers (the stream + compactor + vacuum
+      // triad Submit promotes) both pass the probe, and the second
+      // rename silently replaces the first's committed snapshot
       case e: UnsupportedOperationException =>
-        if (!LakeTable.noCasAllowed) {
-          Files.deleteIfExists(tmp)
-          throw new IllegalStateException(
-            "manifest commit: this filesystem does not support hard links, " +
-              "so the commit has no compare-and-swap primitive — refusing " +
-              "to commit (concurrent writers would silently lose updates). " +
-              "If, and only if, exactly ONE writer ever touches this table " +
-              "root, opt into the degraded atomic-rename path with " +
-              "-Dgraft.lake.allowNoCas=true or GRAFT_LAKE_ALLOW_NOCAS=1.", e)
-        }
-        if (!LakeTable.linkFallbackWarned.getAndSet(true))
-          System.err.println(
-            "[lake] WARN: filesystem does not support hard links; manifest " +
-              "commit degrades to atomic-rename WITHOUT compare-and-swap — " +
-              "do not run concurrent writers against this mount")
-        if (Files.exists(manifestPath(s.version))) {
-          Files.deleteIfExists(tmp)
-          throw new CommitConflictException(s.version)
-        }
-        Files.move(tmp, manifestPath(s.version),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        Files.deleteIfExists(tmp)
+        throw new IllegalStateException(
+          "manifest commit: this filesystem does not support hard links, " +
+            "so the commit has no compare-and-swap primitive — refusing " +
+            "to commit (concurrent writers would silently lose updates)", e)
     }
     LakeTable.failpoint("commit.after-publish")
     Files.deleteIfExists(tmp)
@@ -440,10 +407,6 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
     * JSON parse) per call — hot loops should resolve a snapshot once
     * and read `numBuckets` from it, as upsert does. */
   def bucketCount: Int = latest().map(_.numBuckets).getOrElse(numBuckets)
-
-  /** Hash bucket of the key — MUST match across writers and eras.
-    * Same caveat as [[bucketCount]]: resolves the manifest per call. */
-  def bucketCol: org.apache.spark.sql.Column = bucketColFor(bucketCount)
 
   /** Write `src` (already carrying a group's state columns) as one
     * bucketed parquet group; shared by the epoch upsert and the rewrite
@@ -999,10 +962,8 @@ final class LakeTable(val root: String, val numBuckets: Int = 32) {
     if (Files.isDirectory(dataDir)) {
       val dirs = Using.resource(Files.list(dataDir))(_.iterator().asScala.toSeq)
       dirs.foreach { d =>
-        if (!referenced.contains(s"data/${d.getFileName}") && olderThanGrace(d)) {
-          Using.resource(Files.walk(d))(_.iterator().asScala.toSeq)
-            .reverse.foreach(Files.deleteIfExists(_))
-        }
+        if (!referenced.contains(s"data/${d.getFileName}") && olderThanGrace(d))
+          graft.Scratch.rmTree(d)
       }
     }
   }

@@ -83,7 +83,6 @@ object Pipeline {
       epochs: Int,
       audit: Option[Audit] = None,
       compactEvery: Int = 0,
-      salted: Boolean = false,
       adaptive: Option[AdaptiveSalt] = None,
       dlq: Option[DeadLetterQueue] = None): Seq[ApplyStats] = {
     val table = new LakeTable(tableDir)
@@ -92,7 +91,7 @@ object Pipeline {
       val window = withEpoch(
         ChangeLogGen.events(spark, cfg, Some((idLo, idHi))), cfg, epochs)
       val batch = window.filter(col("epoch") === e.toLong).drop("delivery", "epoch")
-      val stats = Apply.applyEpoch(spark, table, batch, e.toLong, audit, salted,
+      val stats = Apply.applyEpoch(spark, table, batch, e.toLong, audit,
         adaptive = adaptive, dlq = dlq)
       compactOnCadence(spark, table, stats, compactEvery)
       stats
@@ -207,11 +206,11 @@ object Pipeline {
   }
 
   /** Tail `logDir` as a Structured-Streaming file source and apply each
-    * micro-batch exactly-once. `failAfterEpoch` injects a crash AFTER
-    * the lake commit of that epoch but BEFORE the streaming checkpoint
-    * advances — restart then redelivers the same batch id and the
-    * idempotent epoch guard must skip it (the kill-and-resume golden
-    * test). */
+    * micro-batch exactly-once: the streaming checkpoint advances only
+    * after the batch's lake commit, so a crash between the two
+    * redelivers the same batch id on restart and the idempotent epoch
+    * guard skips it (StreamingResumeSpec and CrashSweepSpec crash it
+    * through [[LakeTable.failpoint]]). */
   def runStream(
       spark: SparkSession,
       logDir: String,
@@ -219,8 +218,6 @@ object Pipeline {
       checkpointDir: String,
       audit: Option[Audit] = None,
       maxFilesPerTrigger: Int = 1,
-      failAfterEpoch: Option[Long] = None,
-      failBeforeEpoch: Option[Long] = None,
       compactEvery: Int = 0,
       dlq: Option[DeadLetterQueue] = None,
       adaptive: Option[AdaptiveSalt] = None,
@@ -262,17 +259,6 @@ object Pipeline {
       .option("checkpointLocation", LakeFs.path(spark, checkpointDir))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        // crash BEFORE the lake commit, first delivery only (marker file
-        // so the restart's redelivery proceeds): the batch must then be
-        // APPLIED on resume — the other half of exactly-once vs the
-        // already-committed replay that failAfterEpoch exercises
-        failBeforeEpoch.foreach { f =>
-          val marker = java.nio.file.Paths.get(tableDir, s".crash-before-$f")
-          if (epochId == f && !java.nio.file.Files.exists(marker)) {
-            java.nio.file.Files.createFile(marker)
-            throw new RuntimeException(s"injected failure before epoch $f commit")
-          }
-        }
         // era probe from the micro-batch's OWN parquet footers: the
         // file source's metadata log records exactly the files admitted
         // for this batch id, so the probe is O(batch files) footer
@@ -285,10 +271,6 @@ object Pipeline {
         val st = Apply.applyEpoch(batch.sparkSession, table, batch, epochId, audit,
           versionHint = hint, adaptive = adaptive, dlq = dlq, writer = writer)
         compactOnCadence(batch.sparkSession, table, st, compactEvery)
-        failAfterEpoch.foreach { f =>
-          if (epochId == f) throw new RuntimeException(s"injected failure after epoch $f commit")
-        }
-        ()
       }
       .start()
     try query.awaitTermination()

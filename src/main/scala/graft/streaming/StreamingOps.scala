@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
+import graft.Scratch
 
 /** Structured-Streaming re-expressions of the reference's implicit
   * streaming semantics (SURVEY.md §2.10): watermarked dedup (tolerant
@@ -62,17 +63,6 @@ object StreamingOps {
         })
   }
 
-  /** Fast scratch for `runToBatch`'s staged source and checkpoint:
-    * tmpfs when available (the same scratch policy graft.Bench uses for
-    * spark.local.dir; the default temporary checkpoint lands on the
-    * java.io.tmpdir disk, and its offset/commit/state fsync churn is
-    * pure overhead for a bounded drive-to-completion run). */
-  private[graft] val scratchBase: java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isWritable(shm)) shm
-    else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-  }
-
   /** Drive a streaming transform of a bounded parquet source to
     * completion and return the collected result (memory sink,
     * Trigger.AvailableNow, `maxFilesPerTrigger` to force multiple
@@ -92,12 +82,15 @@ object StreamingOps {
     // single-file source into a temp dir
     val staged =
       if (java.nio.file.Files.isRegularFile(source))
-        Some(java.nio.file.Files.createTempDirectory(scratchBase, "graft-stream-src"))
+        Some(java.nio.file.Files.createTempDirectory(Scratch.base, "graft-stream-src"))
       else None
-    // an EXPLICIT checkpoint is not auto-deleted on stop (temporary ones
-    // are): the finally reclaims it and the staged source, or repeated
-    // bounded runs leak tmpfs
-    val ckpt = java.nio.file.Files.createTempDirectory(scratchBase, "graft-stream-ckpt")
+    // an EXPLICIT checkpoint on fast scratch ([[graft.Scratch.base]]):
+    // the default temporary checkpoint lands on the java.io.tmpdir disk,
+    // and its offset/commit/state fsync churn is pure overhead for a
+    // bounded drive-to-completion run. It is not auto-deleted on stop
+    // (temporary ones are): the finally reclaims it and the staged
+    // source, or repeated bounded runs leak tmpfs
+    val ckpt = java.nio.file.Files.createTempDirectory(Scratch.base, "graft-stream-ckpt")
     try {
       staged.foreach(d => java.nio.file.Files.copy(source, d.resolve(source.getFileName)))
       val in = spark.readStream.schema(sourceSchema)
@@ -115,15 +108,6 @@ object StreamingOps {
       // The bounded query is done — shut the maintenance pool down.
       org.apache.spark.sql.execution.streaming.state.StateStore.stop()
       spark.table(name)
-    } finally (staged.toSeq :+ ckpt).foreach(rmTree)
+    } finally (staged.toSeq :+ ckpt).foreach(Scratch.rmTree)
   }
-
-  private def rmTree(root: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(java.nio.file.Files.walk(root)) { st =>
-        st.iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
-    }
 }

@@ -15,11 +15,15 @@ class CdcApplySpec extends AnyFunSuite {
 
   val cfg = GenConfig(numEvents = 20000L, numRepos = 40L, pathsPerRepo = 15L)
 
-  def finalState(epochs: Int, salted: Boolean = false): (DataFrame, String) = {
+  def finalState(epochs: Int, adaptive: Option[AdaptiveSalt] = None): (DataFrame, String) = {
     val dir = TestSpark.tmpDir("cdc-apply")
-    Pipeline.runBatchEpochs(spark, cfg, s"$dir/t", epochs, salted = salted)
+    Pipeline.runBatchEpochs(spark, cfg, s"$dir/t", epochs, adaptive = adaptive)
     (new LakeTable(s"$dir/t").read(spark), dir)
   }
+
+  /** A controller at threshold 0 engages after the first committed
+    * epoch, so every later epoch takes the salted reduce. */
+  def alwaysSalt(): AdaptiveSalt = new AdaptiveSalt(0.0)
 
   val stateCols = Seq("repo", "path", "lsn", "commit", "lang", "content", "stargazers")
 
@@ -64,7 +68,9 @@ class CdcApplySpec extends AnyFunSuite {
   }
 
   test("salted reduce is semantics-preserving") {
-    val (got, _) = finalState(epochs = 3, salted = true)
+    val ctl = alwaysSalt()
+    val (got, _) = finalState(epochs = 3, adaptive = Some(ctl))
+    assert(ctl.engaged, s"epochs 1 and 2 must run salted (ratio=${ctl.lastRatio})")
     val want = Oracle.fold(spark, ChangeLogGen.events(spark, cfg).drop("delivery"))
     assertSameState(got, want)
   }
@@ -75,7 +81,9 @@ class CdcApplySpec extends AnyFunSuite {
     val hot = GenConfig(numEvents = 30000L, numRepos = 1L, pathsPerRepo = 1L)
     def state(salted: Boolean) = {
       val dir = TestSpark.tmpDir("cdc-hot")
-      Pipeline.runBatchEpochs(spark, hot, s"$dir/t", 3, salted = salted)
+      val ctl = if (salted) Some(alwaysSalt()) else None
+      Pipeline.runBatchEpochs(spark, hot, s"$dir/t", 3, adaptive = ctl)
+      assert(ctl.forall(_.engaged), "salted run: the controller must engage")
       new LakeTable(s"$dir/t").read(spark).select(stateCols.map(col): _*)
     }
     val want = Oracle.fold(spark, ChangeLogGen.events(spark, hot).drop("delivery"))

@@ -60,7 +60,10 @@ class CdcPropertySpec extends AnyFunSuite {
       val epochs = 1 + rnd.nextInt(5)
       val salted = rnd.nextBoolean()
       val dir = TestSpark.tmpDir("cdc-prop")
-      Pipeline.runBatchEpochs(spark, cfg, s"$dir/t", epochs, salted = salted)
+      // threshold 0: every epoch after the first takes the salted reduce
+      val ctl = if (salted) Some(new AdaptiveSalt(0.0)) else None
+      Pipeline.runBatchEpochs(spark, cfg, s"$dir/t", epochs, adaptive = ctl)
+      assert(ctl.forall(_.engaged), s"case $i: the salting controller must engage")
       val got = new LakeTable(s"$dir/t").read(spark).select(cols.map(col): _*)
       val want = Oracle.fold(spark, ChangeLogGen.events(spark, cfg).drop("delivery"))
         .select(cols.map(col): _*)

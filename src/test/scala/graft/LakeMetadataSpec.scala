@@ -374,7 +374,7 @@ class LakeMetadataSpec extends AnyFunSuite {
     assert(stateMap(table.read(spark)).size == keys.size)
   }
 
-  test("link-less mount: commit FAILS by default (no silent no-CAS degradation)") {
+  test("link-less mount: commit FAILS (no silent no-CAS degradation)") {
     val dir = TestSpark.tmpDir("cdc-nocas") + "/t"
     val table = new LakeTable(dir, numBuckets = 4)
     val keys = (0 until 8).map(i => (s"r$i", s"p$i"))
@@ -386,19 +386,15 @@ class LakeMetadataSpec extends AnyFunSuite {
       val ex = intercept[IllegalStateException] {
         table.upsert(mkBatch(keys, 100L), 1L, 1)
       }
-      assert(ex.getMessage.contains("allowNoCas"),
-        s"refusal must name the opt-in knob: ${ex.getMessage}")
-      // the refused commit left no partial snapshot: state is epoch 0's
+      assert(ex.getMessage.contains("does not support hard links"),
+        s"refusal must name the missing hard links: ${ex.getMessage}")
+      // the refused commit left no partial snapshot and no tmp
+      // manifest: state is epoch 0's
+      assert(scala.util.Using.resource(Files.list(Paths.get(dir, "manifests"))) { st =>
+        st.iterator().asScala.forall(!_.getFileName.toString.startsWith(".tmp-"))
+      })
       assert(table.latest().get.epochId == 0L)
       assert(stateMap(table.read(spark)).forall(_._2._2.endsWith("-0")))
-
-      // single-writer deployments OPT IN and get the degraded rename path
-      sys.props("graft.lake.allowNoCas") = "true"
-      try {
-        table.upsert(mkBatch(keys, 100L), 1L, 1)
-        assert(table.latest().get.epochId == 1L)
-        assert(stateMap(table.read(spark)).forall(_._2._2.endsWith("-100")))
-      } finally sys.props.remove("graft.lake.allowNoCas")
     } finally LakeTable.linkImpl = realLink
   }
 }

@@ -60,12 +60,4 @@ class MaterializeSpec extends AnyFunSuite {
     assert(df.count() > 0)
     spark.catalog.clearCache()
   }
-
-  test("spark.graft.materialize=local restores the single-node fast path") {
-    spark.conf.set("spark.graft.materialize", "local")
-    try {
-      val df = graft.operators.DedupOps.all("q26_dedup_minhash_lsh")(spark, sf)
-      assert(rddLeaves(df).nonEmpty, "local mode must localCheckpoint (LogicalRDD leaf)")
-    } finally spark.conf.unset("spark.graft.materialize")
-  }
 }

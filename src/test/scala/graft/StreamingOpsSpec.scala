@@ -72,7 +72,7 @@ class StreamingOpsSpec extends AnyFunSuite {
 
   test("a single-file source is staged and reclaimed: result == batch agg, no scratch left") {
     def scratch(): Set[String] = {
-      val ls = java.nio.file.Files.list(StreamingOps.scratchBase)
+      val ls = java.nio.file.Files.list(Scratch.base)
       try {
         import scala.jdk.CollectionConverters._
         ls.iterator().asScala.map(_.getFileName.toString)

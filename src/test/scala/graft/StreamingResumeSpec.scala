@@ -9,7 +9,9 @@ import graft.cdc._
   * segments as a Structured-Streaming file source, crash AFTER the lake
   * commit of an epoch but BEFORE its streaming checkpoint, restart, and
   * require (a) the replayed epoch is skipped by the idempotent guard and
-  * (b) the final state matches the oracle fold exactly.
+  * (b) the final state matches the oracle fold exactly. Crashes go
+  * through the lake's one crash seam, [[LakeTable.failpoint]], armed on
+  * micro-batch 2's manifest commit (the third commit of the stream).
   */
 class StreamingResumeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -17,18 +19,27 @@ class StreamingResumeSpec extends AnyFunSuite {
   val cfg = GenConfig(numEvents = 8000L, numRepos = 25L, pathsPerRepo = 8L)
   val stateCols = Seq("repo", "path", "lsn", "commit", "lang", "content", "stargazers")
 
+  /** Run the stream with `point` armed to throw at its third hit, and
+    * report whether the injected failure surfaced. */
+  private def crashInBatch2(point: String, logDir: String, tableDir: String,
+      ckDir: String): Boolean = {
+    val hits = new java.util.concurrent.atomic.AtomicInteger()
+    LakeTable.failpoint = name =>
+      if (name == point && hits.incrementAndGet() == 3)
+        throw new RuntimeException(s"injected crash at $point")
+    try { Pipeline.runStream(spark, logDir, tableDir, ckDir); false }
+    catch { case _: StreamingQueryException => true }
+    finally LakeTable.failpoint = _ => ()
+  }
+
   test("stream apply with injected crash resumes exactly-once") {
     val dir = TestSpark.tmpDir("cdc-stream")
     val (logDir, tableDir, ckDir) = (s"$dir/log", s"$dir/table", s"$dir/ck")
     Pipeline.writeLogSegments(spark, cfg, logDir, segments = 6)
 
-    // first run: crash after epoch 2's lake commit
-    val crashed =
-      try {
-        Pipeline.runStream(spark, logDir, tableDir, ckDir, failAfterEpoch = Some(2L))
-        false
-      } catch { case _: StreamingQueryException => true }
-    assert(crashed, "injected failure must surface")
+    // first run: crash after epoch 2's manifest is published
+    assert(crashInBatch2("commit.after-publish", logDir, tableDir, ckDir),
+      "injected failure must surface")
     val table = new LakeTable(tableDir)
     val committedAtCrash = table.latest().get.epochId
     assert(committedAtCrash == 2L, s"epoch 2 must be committed before the crash, got $committedAtCrash")
@@ -65,17 +76,13 @@ class StreamingResumeSpec extends AnyFunSuite {
     val dir = TestSpark.tmpDir("cdc-stream3")
     val (logDir, tableDir, ckDir) = (s"$dir/log", s"$dir/table", s"$dir/ck")
     Pipeline.writeLogSegments(spark, cfg, logDir, segments = 5)
-    val crashed =
-      try {
-        Pipeline.runStream(spark, logDir, tableDir, ckDir, failBeforeEpoch = Some(2L))
-        false
-      } catch { case _: StreamingQueryException => true }
-    assert(crashed)
+    // crash with epoch 2's manifest written but not yet published
+    assert(crashInBatch2("commit.after-tmp", logDir, tableDir, ckDir))
     val table = new LakeTable(tableDir)
     // epoch 2 was NOT committed before the crash
     assert(table.latest().get.epochId == 1L)
     // resume: epoch 2 redelivers and must be applied this time
-    Pipeline.runStream(spark, logDir, tableDir, ckDir, failBeforeEpoch = Some(2L))
+    Pipeline.runStream(spark, logDir, tableDir, ckDir)
     assert(table.latest().get.epochId == 4L)
     val got = table.read(spark)
     val want = Oracle.fold(spark, ChangeLogGen.events(spark, cfg).drop("delivery"))
