@@ -11,7 +11,6 @@ final case class ApplyStats(
     epochId: Long,
     inputRows: Long,
     appliedKeys: Long,
-    batchSchemaVersion: Int,
     committed: Boolean,
     wallMs: Long,
     snapshot: Option[Snapshot] = None)
@@ -74,32 +73,27 @@ final class AdaptiveSalt(val threshold: Double = 256.0) {
   */
 object Apply {
 
-  /** Per-table count of era probes answered by a full (column-pruned)
-    * batch scan rather than a caller hint / footer statistics — the
-    * 10^10-design "extra pass per epoch" this engine works to keep at
-    * zero on both the replay and streaming paths. Keyed by table root
-    * so concurrent pipelines observe their own counters (tests, ops). */
-  private val scanProbeCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  def scanProbes(tableRoot: String): Long =
-    Option(scanProbeCounts.get(tableRoot)).map(_.longValue).getOrElse(0L)
+  /** Scans an epoch spent probing its batch's schema era: always 0,
+    * since every epoch writes at [[SchemaRegistry.maxVersion]] and no
+    * epoch probes. Kept for callers that still report the counter. */
+  def scanProbes(tableRoot: String): Long = 0L
 
-  /** Normalize raw envelope rows (op, lsn, ts, schemaVersion, repo,
-    * path, after) to era-physical payload columns at `version`.
+  /** Normalize raw envelope rows (op, lsn, ts, repo, path, after) to the
+    * current payload columns ([[SchemaRegistry.normalized]]).
     *
     * A STRING `after` is JSON, parsed exactly once into a struct column
     * in its own projection (see SchemaRegistry.parsePayload). A STRUCT
     * `after` (typed binlog segments — Pipeline.writeLogSegments with
     * typedPayload) is used directly: NO row ever JSON-parses, the
     * per-field projection is plain codegen'd GetStructField. */
-  def normalize(events: DataFrame, version: Int): DataFrame = {
-    val typed = events.schema("after").dataType.isInstanceOf[StructType]
-    val parsed =
-      if (typed) events.withColumn("_parsed", col("after"))
-      else events.withColumn("_parsed", SchemaRegistry.parsePayload(col("after")))
-    parsed.select(
+  def normalize(events: DataFrame): DataFrame = {
+    val (parsed, payload) = events.schema("after").dataType match {
+      case st: StructType => (col("after"), st)
+      case _ => (SchemaRegistry.parsePayload(col("after")), SchemaRegistry.readSchema)
+    }
+    events.withColumn("_parsed", parsed).select(
       Seq(col("repo"), col("path"), col("op"), col("lsn"), col("ts")) ++
-        SchemaRegistry.normalizedTo(version, col("_parsed")): _*)
+        SchemaRegistry.normalized(col("_parsed"), payload): _*)
   }
 
   /** One row per key: the event with the highest LSN wins; payload and
@@ -121,23 +115,25 @@ object Apply {
     * `max_by(lsn)` reconstruction, so no per-key lsn guard join is
     * needed at write time.
     *
+    * Every epoch writes its delta group at the current schema,
+    * [[SchemaRegistry.maxVersion]]: `normalize` reads each row's payload
+    * under every historical field name, so the batch's own era never
+    * has to be known. Groups written at older eras by earlier engines
+    * stay readable through their per-group schema version.
+    *
     * Job structure per epoch (hot path = ONE data pipeline over the
     * batch, no cache):
-    *  1. era probe: the caller's hint (parquet footer statistics, no
-    *     job); without one, `agg(max(schemaVersion))` — column-pruned to
-    *     a single cheap envelope column (needed up front to pick the
-    *     era-physical write schema);
-    *  2. scan -> reduce -> DLQ classify -> normalize (JSON parse only on
+    *  1. scan -> reduce -> DLQ classify -> normalize (JSON parse only on
     *     the one-row-per-key survivors) -> bucketed delta write, one
     *     pipeline whose `observe()` side-channels collect the global
     *     source LSN range + row count, the poison-row count and the
     *     applied key count / max LSN at zero extra passes;
-    *  3. only when the poison count is above zero: the quarantine write,
+    *  2. only when the poison count is above zero: the quarantine write,
     *     recomputed from the same reduced frame, after the data write
     *     and before the manifest commit (the upsert's `beforeCommit`);
-    *  4. with an `audit`: the epoch's [[Lineage]] record — per-bucket
+    *  3. with an `audit`: the epoch's [[Lineage]] record — per-bucket
     *     ranges from the new group's parquet footers, plus the source
-    *     range of step 2's observe() — built before the manifest commit
+    *     range of step 1's observe() — built before the manifest commit
     *     and committed in the same manifest (see [[Audit]]). */
   def applyEpoch(
       spark: SparkSession,
@@ -145,7 +141,6 @@ object Apply {
       rawEvents: DataFrame,
       epochId: Long,
       audit: Option[Audit] = None,
-      versionHint: Option[Int] = None,
       adaptive: Option[AdaptiveSalt] = None,
       dlq: Option[DeadLetterQueue] = None,
       // idempotence namespace: epoch ids are monotone PER WRITER (see
@@ -155,14 +150,6 @@ object Apply {
       writer: String = LakeTable.DefaultWriter): ApplyStats = {
     val t0 = System.nanoTime()
 
-    // era probe: prefer the caller-provided hint (parquet footer stats —
-    // see ParquetStats.maxInt, zero data scanned); fall back to a
-    // column-pruned scan for sources without footer metadata
-    val batchVersion = versionHint.getOrElse {
-      scanProbeCounts.merge(table.root, 1L, (a, b) => a + b)
-      rawEvents.agg(coalesce(max(col("schemaVersion")), lit(1))).collect()(0).getInt(0)
-    }
-
     // high-water mark BEFORE this batch: events at or below it arrived
     // after something newer was already applied — the late-arrival
     // count the reference logs as out-of-range/fallback diagnostics
@@ -170,9 +157,9 @@ object Apply {
     // makes them visible
     val prevMaxLsn = table.latest().map(_.maxLsn).getOrElse(-1L)
     val obs = org.apache.spark.sql.Observation(s"graft-epoch-$epochId-${System.nanoTime()}")
-    // per-row schemaVersion is dead weight past this point (the batch
-    // normalizes at the scalar batchVersion) — drop it BEFORE the
-    // reduce so it never rides the shuffle or the max_by struct buffer
+    // per-row schemaVersion is dead weight (normalize reads every
+    // historical name) — drop it BEFORE the reduce so it never rides
+    // the shuffle or the max_by struct buffer
     val baseMetrics = Seq(
       min(col("lsn")).as("min_lsn"),
       max(col("lsn")).as("max_lsn"),
@@ -207,7 +194,7 @@ object Apply {
             case Some(n: Long) => n > 0L
             case _ => !bad.isEmpty
           }
-          if (poisoned) q.write(epochId, bad, batchVersion)
+          if (poisoned) q.write(epochId, bad)
         }
         (clean, writePoison)
       case None => (reducedAll, () => ())
@@ -226,7 +213,7 @@ object Apply {
     // and a tombstone purge at `maxLsn - bound` can run while the
     // never-applied row still waits in the DLQ). The envelope-level
     // max_lsn stays in the lineage record as the SOURCE range scanned.
-    val normalized = normalize(reduced, batchVersion)
+    val normalized = normalize(reduced)
       .observe(keysObs, count(lit(1)).as("keys_in_batch"),
         max(col("lsn")).as("max_applied_lsn"))
     // the lineage builder runs only on a written group, so the observed
@@ -236,9 +223,9 @@ object Apply {
       def stat(k: String): Long = obs.get.get(k).collect { case l: Long => l }.getOrElse(-1L)
       val buckets = bucketLineage(spark, s"${table.root}/${g.dir}")
       Lineage(epochId, stat("min_lsn"), stat("max_lsn"), stat("rows_in_batch"),
-        stat("late_events"), batchVersion, (System.nanoTime() - t0) / 1000000L, buckets)
+        stat("late_events"), SchemaRegistry.maxVersion, (System.nanoTime() - t0) / 1000000L, buckets)
     })
-    val commit = table.upsert(normalized, epochId, batchVersion,
+    val commit = table.upsert(normalized, epochId, SchemaRegistry.maxVersion,
       batchMaxLsn =
         keysObs.get.get("max_applied_lsn").collect { case l: Long => l }.getOrElse(-1L),
       writer = writer, beforeCommit = quarantine, lineage = lineage)
@@ -260,8 +247,7 @@ object Apply {
     }
 
     val wallMs = (System.nanoTime() - t0) / 1000000L
-    ApplyStats(epochId, inputRows, appliedKeys, batchVersion, commit.committed,
-      wallMs, commit.snapshot)
+    ApplyStats(epochId, inputRows, appliedKeys, commit.committed, wallMs, commit.snapshot)
   }
 
   /** (bucket, min lsn, max lsn, rows) per bucket of the group at

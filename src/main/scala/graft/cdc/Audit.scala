@@ -17,7 +17,8 @@ import org.apache.spark.sql.types._
   * range and row count that bucket applied, plus the global source LSN
   * range of the raw batch (from the apply pass's observe() metrics) and
   * the committed snapshot version — enough to trace any state row back
-  * to its log range.
+  * to its log range. `schema_version` is the payload schema the epoch's
+  * group was written at ([[Lineage]]).
   *
   * Storage: each epoch's record ([[Lineage]]) is committed inside the
   * manifest of the snapshot the epoch publishes, in the same CAS that

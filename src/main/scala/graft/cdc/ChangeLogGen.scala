@@ -132,8 +132,8 @@ object ChangeLogGen {
     val afterV34 = to_json(struct(col("commit"), col("lang"), col("content"),
       col("stars_l").as("stargazers")))
     // (v3 writes int-valued stargazers, v4 long — JSON is identical on the
-    // wire for in-range values; the WIDEN shows up in the parquet files the
-    // lake writes per era, see LakeTable.)
+    // wire for in-range values; the apply stage casts every era's value
+    // to the current type, see SchemaRegistry.normalized.)
 
     // typed variant: ONE struct at the union read schema; era-absent
     // fields are null (parquet stores all-null columns as ~free

@@ -66,17 +66,16 @@ final class DeadLetterQueue(val root: String) {
   /** Overwrite epoch `epochId`'s quarantine set. `bad` must carry the
     * envelope columns plus `_dlq_reason`. Rare rows by contract —
     * coalesce(1) keeps the side table one small file per epoch.
-    * `schemaVersion` rides along so a later replay can re-apply the
-    * row under its era: the apply hot path prunes the column before
-    * the reduce, so rows missing it are stamped with the epoch's
-    * probed `batchVersion` (the era the epoch would have written). */
-  private[cdc] def write(epochId: Long, bad: DataFrame, batchVersion: Int): Unit = {
+    * The apply hot path prunes `schemaVersion` before the reduce, so
+    * rows missing it are stamped with [[SchemaRegistry.maxVersion]],
+    * the schema the epoch would have written. */
+  private[cdc] def write(epochId: Long, bad: DataFrame): Unit = {
     val afterJson =
       if (bad.schema("after").dataType.isInstanceOf[StructType]) to_json(col("after"))
       else col("after")
     val sv =
       if (bad.columns.contains("schemaVersion")) col("schemaVersion")
-      else lit(batchVersion)
+      else lit(SchemaRegistry.maxVersion)
     bad.select(col("repo"), col("path"), col("op"), col("lsn"), col("ts"),
         sv.as("schemaVersion"), afterJson.as("after"), col("_dlq_reason").as("reason"))
       .coalesce(1)

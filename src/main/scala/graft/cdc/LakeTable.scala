@@ -83,7 +83,10 @@ final class CommitConflictException(version: Long)
   * top-level `epochId`. The source range, row count and late events
   * come from the apply pass's observe() metrics; `buckets` holds
   * (bucket, min lsn, max lsn, rows) per bucket the epoch's group wrote;
-  * `wallMs` is measured up to the commit. */
+  * `schemaVersion` is the payload schema that group was written at (the
+  * current schema for every epoch the apply stage writes; an older era
+  * only in records an earlier engine committed); `wallMs` is measured up
+  * to the commit. */
 final case class Lineage(epochId: Long, sourceMinLsn: Long, sourceMaxLsn: Long,
     sourceRows: Long, lateEvents: Long, schemaVersion: Int, wallMs: Long,
     buckets: Seq[(Int, Long, Long, Long)])

@@ -2,9 +2,8 @@ package graft.cdc
 
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.{NO_FILTER, SKIP_ROW_GROUPS}
+import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
@@ -14,13 +13,10 @@ import org.apache.spark.sql.types.StructType
 
 /** Footer probes over parquet files: schemas and statistics, no Spark job.
   *
-  * The apply stage needs the batch's max `schemaVersion` BEFORE writing
-  * (it picks the era-physical write schema), which naively costs one
-  * extra column-pruned pass over every batch — a full per-epoch scan at
-  * the 10^10-event design point. Binlog segments are parquet, and
-  * parquet row groups already carry min/max statistics per column, so
-  * the probe can be answered from file footers alone: O(files) metadata
-  * reads, zero data scanned. (The same trick Spark's
+  * Parquet footers carry each file's schema and per-row-group row
+  * counts and min/max statistics, so table opens (the schema) and the
+  * apply stage's lineage (per-bucket lsn ranges) are answered from
+  * O(files) metadata reads, zero data scanned. (The same trick Spark's
   * `spark.sql.parquet.aggregatePushDown` applies for DSv2 scans.)
   */
 object ParquetStats {
@@ -55,33 +51,6 @@ object ParquetStats {
       ParquetFileFormat.readSchemaFromFooter(
         new Footer(in.getPath, ParquetFooterReader.readFooter(in, SKIP_ROW_GROUPS)), converter)
     }.reduceOption(Bridge.merge(_, _, conf.caseSensitiveAnalysis))
-  }
-
-  /** Max value of an INT32 column across all row groups of all parquet
-    * files under `dir`, from footer statistics only. None when the
-    * directory has no parquet files or a footer lacks stats for the
-    * column (caller falls back to a scan). */
-  def maxInt(spark: SparkSession, dir: String, column: String): Option[Int] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new Path(dir)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return None
-    maxIntOfFiles(spark,
-      fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString).toSeq,
-      column)
-  }
-
-  /** Same probe over an EXPLICIT file list — the streaming path's form:
-    * a file-source micro-batch exposes its backing files via
-    * `DataFrame.inputFiles`, so the era probe costs O(batch files)
-    * footer reads instead of one column-pruned pass over the batch.
-    * None on an empty list or any missing per-column stats. */
-  def maxIntOfFiles(spark: SparkSession, files: Seq[String], column: String): Option[Int] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val footers = files.filter(_.endsWith(".parquet")).map(f => footerRange(conf, f, column))
-    if (footers.isEmpty || footers.exists(_.isEmpty)) None
-    else union(footers.flatMap(_.get._2)).map(_._2.toInt)
   }
 
   /** Per `bucket=N` partition of the group directory `dir`: (bucket,
@@ -121,14 +90,10 @@ object ParquetStats {
     * into a hard failure, the caller scans instead. */
   private def footerRange(conf: org.apache.hadoop.conf.Configuration, file: String,
       column: String): Option[(Long, Option[(Long, Long)])] =
-    scala.util.Try {
-      // options from `conf`: the no-conf overload parses a fresh Hadoop
-      // Configuration (core-default.xml) for every footer
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf),
-        HadoopReadOptions.builder(conf).build())
-      try reader.getFooter.getBlocks.asScala.toSeq.filter(_.getRowCount > 0)
-      finally reader.close()
-    }.toOption.flatMap { blocks =>
+    scala.util.Try(
+      ParquetFooterReader.readFooter(HadoopInputFile.fromPath(new Path(file), conf), NO_FILTER)
+        .getBlocks.asScala.toSeq.filter(_.getRowCount > 0)
+    ).toOption.flatMap { blocks =>
       val stats = blocks.map(_.getColumns.asScala.find(_.getPath.toDotString == column)
         .map(_.getStatistics).filter(st => st != null && st.hasNonNullValue))
       if (stats.exists(_.isEmpty)) None

@@ -154,11 +154,8 @@ object Pipeline {
       throw new java.io.FileNotFoundException(s"replaySegments: no segment file in $first"))
     val readSchema = if (typed) typedEnvelopeSchema else envelopeSchema
     (0 until segments).map { s =>
-      val segDir = f"$logDir/seg-$s%05d"
-      val batch = spark.read.schema(readSchema).parquet(segDir)
-      // era probe from footer stats: O(files) metadata, no data scan
-      val hint = ParquetStats.maxInt(spark, segDir, "schemaVersion")
-      Apply.applyEpoch(spark, table, batch, s.toLong, audit, versionHint = hint)
+      val batch = spark.read.schema(readSchema).parquet(f"$logDir/seg-$s%05d")
+      Apply.applyEpoch(spark, table, batch, s.toLong, audit)
     }
   }
 
@@ -166,44 +163,6 @@ object Pipeline {
     * struct `after`), from the first segment file's footer; None if none. */
   private[graft] def typedLayout(spark: SparkSession, pattern: String): Option[Boolean] =
     ParquetStats.schema(spark, pattern).map(_("after").dataType.isInstanceOf[StructType])
-
-  /** Files the file source admitted for micro-batch `batchId`, from the
-    * source's metadata log at `<checkpoint>/sources/0/<batchId>` (one
-    * JSON entry per line after the "v1" header; compacted logs land in
-    * `<batchId>.compact` with per-entry batchId tags). Needed because
-    * foreachBatch hands the batch as an opaque LogicalRDD —
-    * `batch.inputFiles` is empty — while the source log knows exactly
-    * which files this trigger admitted. Empty on any miss/parse issue;
-    * the caller then falls back to the scan probe. */
-  private[cdc] def sourceBatchFiles(spark: SparkSession, checkpointDir: String,
-      batchId: Long): Seq[String] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val conf = spark.sessionState.newHadoopConf()
-    def parse(p: org.apache.hadoop.fs.Path, filterBatch: Boolean): Option[Seq[String]] = {
-      scala.util.Try {
-        val fs = p.getFileSystem(conf)
-        if (!fs.exists(p)) None
-        else {
-          val in = fs.open(p)
-          val txt =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          Some(txt.linesIterator.filter(_.startsWith("{")).flatMap { l =>
-            val n = mapper.readTree(l)
-            val ok = !filterBatch ||
-              (n.has("batchId") && n.get("batchId").asLong() == batchId)
-            if (ok && n.has("path")) Some(n.get("path").asText()) else None
-          }.toSeq)
-        }
-      }.toOption.flatten
-    }
-    parse(new org.apache.hadoop.fs.Path(s"$checkpointDir/sources/0/$batchId"),
-        filterBatch = false)
-      .orElse(parse(
-        new org.apache.hadoop.fs.Path(s"$checkpointDir/sources/0/$batchId.compact"),
-        filterBatch = true))
-      .getOrElse(Nil)
-  }
 
   /** Tail `logDir` as a Structured-Streaming file source and apply each
     * micro-batch exactly-once: the streaming checkpoint advances only
@@ -259,17 +218,8 @@ object Pipeline {
       .option("checkpointLocation", LakeFs.path(spark, checkpointDir))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        // era probe from the micro-batch's OWN parquet footers: the
-        // file source's metadata log records exactly the files admitted
-        // for this batch id, so the probe is O(batch files) footer
-        // reads, no extra pass over the batch — the same elision
-        // replaySegments gets from its segment dirs. Falls back to the
-        // column-pruned scan probe for non-parquet files or footers
-        // without stats.
-        val hint = ParquetStats.maxIntOfFiles(batch.sparkSession,
-          sourceBatchFiles(batch.sparkSession, checkpointDir, epochId), "schemaVersion")
         val st = Apply.applyEpoch(batch.sparkSession, table, batch, epochId, audit,
-          versionHint = hint, adaptive = adaptive, dlq = dlq, writer = writer)
+          adaptive = adaptive, dlq = dlq, writer = writer)
         compactOnCadence(batch.sparkSession, table, st, compactEvery)
       }
       .start()

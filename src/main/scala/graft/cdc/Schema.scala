@@ -87,38 +87,31 @@ object SchemaRegistry {
   def currentPayloadNames: Seq[String] = fields.map(_.current.name)
 
   /** Project a PRE-PARSED payload struct column (see [[parsePayload]])
-    * to the CURRENT schema: for each logical field, coalesce across its
-    * historical names (newest first) and cast to the current type.
-    * Handles add (missing -> null), rename (old name coalesced in) and
-    * widen (upcast) in one projection, entirely as Catalyst expressions.
+    * of type `payload` to the CURRENT schema — the one schema the apply
+    * stage writes: for each logical field, coalesce across the
+    * historical names `payload` has (newest first) and cast to the
+    * current type. Handles add (missing -> null), rename (old name
+    * coalesced in) and widen (upcast) in one projection, entirely as
+    * Catalyst expressions, whatever era a row was labelled with.
     *
     * IMPORTANT: callers must materialize `parsePayload` in its own
     * projection first — `from_json` is CodegenFallback and referencing
     * it per-field would re-parse the JSON once per field (measured ~4x
     * slowdown of the whole apply path). */
-  def normalized(parsed: Column): Seq[Column] =
+  def normalized(parsed: Column, payload: StructType): Seq[Column] =
     fields.map { f =>
-      val cands = f.allNames.reverse.map(n => parsed.getField(n).cast(f.current.dataType))
-      (if (cands.sizeIs == 1) cands.head else coalesce(cands: _*)).as(f.current.name)
+      val cands = f.allNames.reverse.filter(payload.fieldNames.contains)
+        .map(n => parsed.getField(n).cast(f.current.dataType))
+      (cands match {
+        case Seq() => lit(null).cast(f.current.dataType)
+        case Seq(c) => c
+        case _ => coalesce(cands: _*)
+      }).as(f.current.name)
     }
 
   /** One-shot JSON parse of the `after` payload at the lenient read
     * schema; keep it in a dedicated projection so it is evaluated once. */
   def parsePayload(afterJson: Column): Column = from_json(afterJson, readSchema)
-
-  /** Like [[normalized]] but projecting to the physical schema of a
-    * specific era — used by the apply path so files the lake writes for
-    * a v2-era batch really contain `stars:int`, not the current
-    * `stargazers:long` (storage-level evolution is exercised, not
-    * simulated). */
-  def normalizedTo(version: Int, parsed: Column): Seq[Column] =
-    fields.flatMap { f =>
-      f.revAt(version).map { rev =>
-        val upTo = f.revs.takeWhile(_.since <= version).map(_.name).distinct.reverse
-        val cands = upTo.map(n => parsed.getField(n).cast(rev.dataType))
-        (if (cands.sizeIs == 1) cands.head else coalesce(cands: _*)).as(rev.name)
-      }
-    }
 
   /** Align a DataFrame written under an older physical schema to the
     * current one: resolve renames via the history chain, widen via cast,

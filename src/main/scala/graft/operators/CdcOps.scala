@@ -13,12 +13,12 @@ import graft.Graft._
 object CdcOps {
 
   /** Deterministically fold the events table into a scratch lake table
-    * as three LWW epochs (epoch = lsn % 3, applied in order, footer-
-    * stats version hint) — the shared fixture behind the incremental-
-    * read (q61) and time-travel (q62) gates. Built ONCE per JVM per
-    * input dir and shared by both gates (the fold is half of each
-    * gate's cost); rebuilt on first use of every process, so a stale
-    * table from an older code version can never leak into a gate. */
+    * as three LWW epochs (epoch = lsn % 3, applied in order) — the
+    * shared fixture behind the incremental-read (q61) and time-travel
+    * (q62) gates. Built ONCE per JVM per input dir and shared by both
+    * gates (the fold is half of each gate's cost); rebuilt on first use
+    * of every process, so a stale table from an older code version can
+    * never leak into a gate. */
   private val foldCache =
     new java.util.concurrent.ConcurrentHashMap[String, graft.cdc.LakeTable]()
 
@@ -69,8 +69,7 @@ object CdcOps {
     // semantics are bucket-count-independent.
     val lake = new LakeTable(scratch, numBuckets = 8)
     (0 until 3).foreach(e =>
-      Apply.applyEpoch(s, lake, env.filter(pmod(col("lsn"), lit(3)) === e),
-        e.toLong, versionHint = Some(1)))
+      Apply.applyEpoch(s, lake, env.filter(pmod(col("lsn"), lit(3)) === e), e.toLong))
     lake
   }
 

@@ -112,6 +112,20 @@ class CdcApplySpec extends AnyFunSuite {
     assert(Oracle.digest(table.read(spark), stateCols) == before)
   }
 
+  test("one epoch starts only its write pipeline's jobs: no schema-era probe") {
+    import spark.implicits._
+    val table = new LakeTable(TestSpark.tmpDir("cdc-epoch-jobs"), numBuckets = 4)
+    val ts = new java.sql.Timestamp(1700000000000L)
+    // labels from every era: the write schema does not depend on them
+    val batch = (0 until 24).map(i => ("U", i.toLong, ts, 1 + i % 4, s"r${i % 3}", s"p${i % 12}",
+      null: String, s"""{"commit":"c$i","lang":"en","content":"b$i"}"""))
+      .toDF("op", "lsn", "ts", "schemaVersion", "repo", "path", "before", "after")
+    val (st, jobs) = TestSpark.jobsDuring(Apply.applyEpoch(spark, table, batch, 0L))
+    assert(st.committed && st.inputRows == 24L && st.appliedKeys == 12L)
+    assert(table.latest().get.groups.map(_.schemaVersion) == Seq(SchemaRegistry.maxVersion))
+    assert(jobs == 3, s"$jobs jobs for one epoch: scan -> reduce -> bucketed write")
+  }
+
   test("deletes remove keys from final state") {
     val (got, _) = finalState(epochs = 2)
     // any key whose max-lsn event is D must be absent
@@ -242,6 +256,11 @@ class CdcApplySpec extends AnyFunSuite {
         case more => fail(s"one epoch appended ${more.size} groups")
       }
     }
+    // an unreadable footer answers None, so the lineage scans instead
+    val garbage = java.nio.file.Paths.get(dir, "garbage", "bucket=0", "part-0.parquet")
+    java.nio.file.Files.createDirectories(garbage.getParent)
+    java.nio.file.Files.write(garbage, "not parquet".getBytes("UTF-8"))
+    assert(ParquetStats.bucketRanges(spark, s"$dir/garbage", "lsn").isEmpty)
   }
 
   test("late arrivals are counted per epoch (and absent when in order)") {
@@ -296,8 +315,7 @@ class CdcApplySpec extends AnyFunSuite {
     assert(seg.schema("after").dataType ==
       graft.cdc.SchemaRegistry.readSchema)
     // the typed normalize plan contains no JsonToStructs anywhere
-    val typedPlan = Apply.normalize(
-      seg.select("repo", "path", "op", "lsn", "ts", "after"), 4)
+    val typedPlan = Apply.normalize(seg.select("repo", "path", "op", "lsn", "ts", "after"))
       .queryExecution.optimizedPlan.toString
     assert(!typedPlan.contains("from_json"), s"typed path must not parse JSON:\n$typedPlan")
     // end-to-end: identical final state either way (digest equality)

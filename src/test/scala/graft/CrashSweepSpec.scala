@@ -151,9 +151,9 @@ class CrashSweepSpec extends AnyFunSuite {
     // overwrite of the same epoch directory
     arm("upsert.after-write")
     try intercept[Injected] {
-      Apply.applyEpoch(spark, t, env, 0L, versionHint = Some(1), dlq = Some(dlq))
+      Apply.applyEpoch(spark, t, env, 0L, dlq = Some(dlq))
     } finally disarm()
-    val st = Apply.applyEpoch(spark, t, env, 0L, versionHint = Some(1), dlq = Some(dlq))
+    val st = Apply.applyEpoch(spark, t, env, 0L, dlq = Some(dlq))
     assert(st.committed)
     val q = dlq.read(spark).select("path", "lsn", "reason").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2)))

@@ -36,7 +36,7 @@ class DlqSpec extends AnyFunSuite {
       ("U", 7L, ts(7), 1, "r1", null: String, null: String, json(7)))
     val env = rows.toDF("op", "lsn", "ts", "schemaVersion", "repo", "path", "before", "after")
 
-    val st = Apply.applyEpoch(spark, table, env, 0L, versionHint = Some(1), dlq = Some(dlq))
+    val st = Apply.applyEpoch(spark, table, env, 0L, dlq = Some(dlq))
     assert(st.committed)
 
     val state = table.read(spark).select("path", "lsn", "content").collect()
@@ -61,7 +61,7 @@ class DlqSpec extends AnyFunSuite {
 
     // idempotent replay of the committed epoch: no table change, no dup
     // quarantine rows, and the skip happens before any quarantine write
-    val st2 = Apply.applyEpoch(spark, table, env, 0L, versionHint = Some(1), dlq = Some(dlq))
+    val st2 = Apply.applyEpoch(spark, table, env, 0L, dlq = Some(dlq))
     assert(!st2.committed)
     assert(dlq.read(spark).count() == 3)
     assert(table.read(spark).count() == 2)
@@ -81,7 +81,7 @@ class DlqSpec extends AnyFunSuite {
         col("payload._3").as("content")))
       .drop("payload")
 
-    val st = Apply.applyEpoch(spark, table, env, 0L, versionHint = Some(1), dlq = Some(dlq))
+    val st = Apply.applyEpoch(spark, table, env, 0L, dlq = Some(dlq))
     assert(st.committed)
     assert(table.read(spark).count() == 1)
     val q = dlq.read(spark).select("path", "after", "reason").collect()
@@ -103,8 +103,8 @@ class DlqSpec extends AnyFunSuite {
     var duringWrite = Set.empty[Int]
     LakeTable.failpoint = name => if (name == "upsert.after-write") duringWrite = persisted().toSet
     val (st, empty) =
-      try (Apply.applyEpoch(spark, table, env, 0L, versionHint = Some(1), dlq = Some(dlq)),
-        Apply.applyEpoch(spark, table, env.limit(0), 1L, versionHint = Some(1), dlq = Some(dlq)))
+      try (Apply.applyEpoch(spark, table, env, 0L, dlq = Some(dlq)),
+        Apply.applyEpoch(spark, table, env.limit(0), 1L, dlq = Some(dlq)))
       finally LakeTable.failpoint = _ => ()
     assert(st.committed && st.appliedKeys == 20L)
     assert(empty.committed && empty.appliedKeys == 0L)
@@ -125,7 +125,7 @@ class DlqSpec extends AnyFunSuite {
     val table = new LakeTable(s"$base/table")
     val env = Seq(("U", 1L, ts(1), 1, "r1", "pA", null: String, json(1)))
       .toDF("op", "lsn", "ts", "schemaVersion", "repo", "path", "before", "after")
-    Apply.applyEpoch(spark, table, env, 0L, versionHint = Some(1))
+    Apply.applyEpoch(spark, table, env, 0L)
     assert(table.read(spark).count() == 1)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/dlq")))
   }
@@ -155,7 +155,7 @@ class DlqSpec extends AnyFunSuite {
     val e2 = Seq(("U", 9L, ts(9), 1, "r1", "pC", null: String, json(9)))
       .toDF("op", "lsn", "ts", "schemaVersion", "repo", "path", "before", "after")
     Seq(e0, e1, e2).zipWithIndex.foreach { case (env, e) =>
-      Apply.applyEpoch(spark, table, env, e.toLong, versionHint = Some(1), dlq = Some(dlq))
+      Apply.applyEpoch(spark, table, env, e.toLong, dlq = Some(dlq))
     }
     assert(dlq.read(spark).count() == 3)
     assert(table.latest().get.epochId == 2L)
@@ -208,7 +208,7 @@ class DlqSpec extends AnyFunSuite {
     // (the collision this namespace exists to prevent)
     val e3 = Seq(("U", 12L, ts(12), 1, "r1", "pD", null: String, json(12)))
       .toDF("op", "lsn", "ts", "schemaVersion", "repo", "path", "before", "after")
-    val st3 = Apply.applyEpoch(spark, table, e3, 3L, versionHint = Some(1), dlq = Some(dlq))
+    val st3 = Apply.applyEpoch(spark, table, e3, 3L, dlq = Some(dlq))
     assert(st3.committed, "stream batch 3 must not be skipped after a replay commit")
     assert(table.read(spark).count() == 4)
 
@@ -227,7 +227,7 @@ class DlqSpec extends AnyFunSuite {
     val flood = (0 until 500).map(i =>
       ("Z", i.toLong, ts(i), 1, "r1", s"p$i", null: String, json(i)))
       .toDF("op", "lsn", "ts", "schemaVersion", "repo", "path", "before", "after")
-    Apply.applyEpoch(spark, table, flood, 0L, versionHint = Some(1), dlq = Some(dlq))
+    Apply.applyEpoch(spark, table, flood, 0L, dlq = Some(dlq))
     assert(dlq.read(spark).count() == 500)
     // still-poisoned count exceeds the bound -> refuse BEFORE collecting
     val ex = intercept[IllegalStateException] {
@@ -250,21 +250,18 @@ class DlqSpec extends AnyFunSuite {
     val env = Seq(("U", 1L, ts(1), 1, "r1", "pA", null: String, json(1)))
       .toDF("op", "lsn", "ts", "schemaVersion", "repo", "path", "before", "after")
     // default-writer epochs 0..1
-    Apply.applyEpoch(spark, table, env, 0L, versionHint = Some(1))
-    Apply.applyEpoch(spark, table, env, 1L, versionHint = Some(1))
+    Apply.applyEpoch(spark, table, env, 0L)
+    Apply.applyEpoch(spark, table, env, 1L)
     // a side-channel writer commits ITS epoch 0 and 1; replays of both
     // skip idempotently; the default writer's mark is untouched
-    assert(Apply.applyEpoch(spark, table, env, 0L, versionHint = Some(1),
-      writer = "side").committed)
-    assert(!Apply.applyEpoch(spark, table, env, 0L, versionHint = Some(1),
-      writer = "side").committed)
-    assert(Apply.applyEpoch(spark, table, env, 1L, versionHint = Some(1),
-      writer = "side").committed)
+    assert(Apply.applyEpoch(spark, table, env, 0L, writer = "side").committed)
+    assert(!Apply.applyEpoch(spark, table, env, 0L, writer = "side").committed)
+    assert(Apply.applyEpoch(spark, table, env, 1L, writer = "side").committed)
     val s = table.latest().get
     assert(s.epochId == 1L && s.watermark("side") == 1L)
     // the default writer's next batch still applies, and the side
     // writer's watermark survives it AND a compaction
-    assert(Apply.applyEpoch(spark, table, env, 2L, versionHint = Some(1)).committed)
+    assert(Apply.applyEpoch(spark, table, env, 2L).committed)
     table.compactBuckets(spark, minDeltas = 1)
     val s2 = table.latest().get
     assert(s2.epochId == 2L && s2.watermark("side") == 1L,

@@ -26,8 +26,7 @@ class IncrementalReadSpec extends AnyFunSuite {
     val env = rows.toDF("op", "lsn", "ts", "schemaVersion", "repo", "path", "before", "after")
     val table = new LakeTable(dir)
     (0 until 3).foreach(e =>
-      Apply.applyEpoch(spark, table, env.filter(col("lsn") % 3 === e),
-        e.toLong, versionHint = Some(1)))
+      Apply.applyEpoch(spark, table, env.filter(col("lsn") % 3 === e), e.toLong))
 
     // tombstones must be visible in the change feed
     val feed3 = table.readChanges(spark, 2, 3)
@@ -56,11 +55,11 @@ class IncrementalReadSpec extends AnyFunSuite {
         s"""{"commit":"c${lsn0 + i}","lang":"en","content":"v${lsn0 + i}"}""")
     }.toDF("op", "lsn", "ts", "schemaVersion", "repo", "path", "before", "after")
     val table = new LakeTable(dir)
-    Apply.applyEpoch(spark, table, env(0L), 0L, versionHint = Some(1)) // v1
-    Apply.applyEpoch(spark, table, env(100L), 1L, versionHint = Some(1)) // v2
+    Apply.applyEpoch(spark, table, env(0L), 0L) // v1
+    Apply.applyEpoch(spark, table, env(100L), 1L) // v2
     table.compact(spark) // v3 — the rewrite boundary
-    Apply.applyEpoch(spark, table, env(200L), 2L, versionHint = Some(1)) // v4
-    Apply.applyEpoch(spark, table, env(300L), 3L, versionHint = Some(1)) // v5
+    Apply.applyEpoch(spark, table, env(200L), 2L) // v4
+    Apply.applyEpoch(spark, table, env(300L), 3L) // v5
 
     // the flat read refuses the compaction-crossing range...
     intercept[IllegalStateException] { table.readChanges(spark, 0, 5).collect() }
@@ -98,11 +97,11 @@ class IncrementalReadSpec extends AnyFunSuite {
         s"""{"commit":"c${lsn0 + i}","lang":"en","content":"v${lsn0 + i}"}""")
     }.toDF("op", "lsn", "ts", "schemaVersion", "repo", "path", "before", "after")
     val table = new LakeTable(dir)
-    Apply.applyEpoch(spark, table, env(0L), 0L, versionHint = Some(1)) // v1
-    Apply.applyEpoch(spark, table, env(100L), 1L, versionHint = Some(1)) // v2
+    Apply.applyEpoch(spark, table, env(0L), 0L) // v1
+    Apply.applyEpoch(spark, table, env(100L), 1L) // v2
     table.compact(spark) // v3 — rewrite boundary
-    Apply.applyEpoch(spark, table, env(200L), 2L, versionHint = Some(1)) // v4
-    Apply.applyEpoch(spark, table, env(300L), 3L, versionHint = Some(1)) // v5
+    Apply.applyEpoch(spark, table, env(200L), 2L) // v4
+    Apply.applyEpoch(spark, table, env(300L), 3L) // v5
     // vacuum the pre-compaction history: versions 1-2 expire, 3-5 retained
     table.expireSnapshots(keep = 3, graceMs = 0L)
 

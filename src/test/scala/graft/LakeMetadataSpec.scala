@@ -317,8 +317,7 @@ class LakeMetadataSpec extends AnyFunSuite {
       (new LakeTable(s"$dir/b", numBuckets = 4), 8, 3))
     tables.foreach { case (t, nKeys, epochs) =>
       (0 until epochs).foreach(e => assert(Apply.applyEpoch(spark, t,
-        envBatch((0 until nKeys).map(i => (s"r$i", "a")), 100L * e), e.toLong,
-        Some(audit), versionHint = Some(1)).committed))
+        envBatch((0 until nKeys).map(i => (s"r$i", "a")), 100L * e), e.toLong, Some(audit)).committed))
     }
     assert(scala.util.Using.resource(Files.list(Paths.get(dir, "audit")))(
       _.iterator().asScala.count(_.getFileName.toString.startsWith("_table-"))) == 2)
@@ -337,8 +336,8 @@ class LakeMetadataSpec extends AnyFunSuite {
     val table = new LakeTable(s"$dir/t", numBuckets = 4)
     val audit = new Audit(auditDir)
     val keys = (0 until 8).map(i => (s"r$i", "a"))
-    (0 until 5).foreach(e => Apply.applyEpoch(spark, table, envBatch(keys, 100L * e), e.toLong,
-      Some(audit), versionHint = Some(1)))
+    (0 until 5).foreach(e =>
+      Apply.applyEpoch(spark, table, envBatch(keys, 100L * e), e.toLong, Some(audit)))
     def lineage = audit.read(spark).select("epoch_id", "snapshot_version").distinct()
       .as[(Long, Option[Long])].collect().toSet
     assert(lineage == (0L to 4L).map(e => (e, Some(e + 1))).toSet + ((100L, None)))

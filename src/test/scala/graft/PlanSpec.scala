@@ -60,7 +60,7 @@ class PlanSpec extends AnyFunSuite {
     try {
       val events = ChangeLogGen.events(spark, GenConfig(numEvents = 1000L)).drop("delivery")
       val reduced = Apply.reduce(events.select("repo", "path", "op", "lsn", "ts", "schemaVersion", "after"))
-      val plan = planOf(Apply.normalize(reduced, 4))
+      val plan = planOf(Apply.normalize(reduced))
       // codegen stages render as "*(n) Operator" in plan text
       assert(plan.contains("*("), s"no codegen spans in apply path:\n${plan.take(1500)}")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -25,8 +25,7 @@ class PointLookupSpec extends AnyFunSuite {
     val env = rows.toDF("op", "lsn", "ts", "schemaVersion", "repo", "path", "before", "after")
     val table = new LakeTable(dir)
     (0 until groups).foreach { e =>
-      Apply.applyEpoch(spark, table, env.filter(floor(col("lsn") * groups / 200) === e), e.toLong,
-        versionHint = Some(1))
+      Apply.applyEpoch(spark, table, env.filter(floor(col("lsn") * groups / 200) === e), e.toLong)
     }
     (table, keys)
   }

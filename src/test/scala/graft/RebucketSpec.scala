@@ -30,7 +30,7 @@ class RebucketSpec extends AnyFunSuite {
   test("rebucket preserves state exactly and switches the manifest count") {
     val dir = TestSpark.tmpDir("graft-rbk")
     val table = new LakeTable(dir)
-    Apply.applyEpoch(spark, table, env(0, 150), 0L, versionHint = Some(1))
+    Apply.applyEpoch(spark, table, env(0, 150), 0L)
     val before = stateMap(table)
     assert(table.bucketCount == 32)
 
@@ -46,10 +46,10 @@ class RebucketSpec extends AnyFunSuite {
   test("writers after a rebucket land in the new bucketing; point lookup prunes to it") {
     val dir = TestSpark.tmpDir("graft-rbk2")
     val table = new LakeTable(dir)
-    Apply.applyEpoch(spark, table, env(0, 100), 0L, versionHint = Some(1))
+    Apply.applyEpoch(spark, table, env(0, 100), 0L)
     assert(table.rebucket(spark, 8))
     // an upsert AFTER the migration must hash with the manifest's count
-    Apply.applyEpoch(spark, table, env(100, 160), 1L, versionHint = Some(1))
+    Apply.applyEpoch(spark, table, env(100, 160), 1L)
     val all = stateMap(table)
     assert(all.size == 160)
 
@@ -74,12 +74,12 @@ class RebucketSpec extends AnyFunSuite {
   test("time travel across the boundary; incremental reads resync at it") {
     val dir = TestSpark.tmpDir("graft-rbk3")
     val table = new LakeTable(dir)
-    Apply.applyEpoch(spark, table, env(0, 80), 0L, versionHint = Some(1))
+    Apply.applyEpoch(spark, table, env(0, 80), 0L)
     val v1 = table.latest().get.version
     val before = stateMap(table)
     assert(table.rebucket(spark, 64))
     val v2 = table.latest().get.version
-    Apply.applyEpoch(spark, table, env(80, 120), 1L, versionHint = Some(1))
+    Apply.applyEpoch(spark, table, env(80, 120), 1L)
     val v3 = table.latest().get.version
 
     // pre-rebucket snapshot reads exactly the old state
@@ -109,8 +109,7 @@ class RebucketSpec extends AnyFunSuite {
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val writerThread = new Thread(() => {
       try (0 until epochs).foreach { e =>
-        Apply.applyEpoch(spark, table,
-          env(e * perEpoch, (e + 1) * perEpoch), e.toLong, versionHint = Some(1))
+        Apply.applyEpoch(spark, table, env(e * perEpoch, (e + 1) * perEpoch), e.toLong)
       } catch { case t: Throwable => failures.add(t) }
     }, "live-writer")
     writerThread.start()
@@ -139,8 +138,7 @@ class RebucketSpec extends AnyFunSuite {
       (s"r${i % 17}", s"p$i") -> (i.toLong, s"body$i")).toMap
     assert(stateMap(table) == want, "state diverged across the online migration")
     // and new writers + point lookups operate under the new count
-    Apply.applyEpoch(spark, table, env(epochs * perEpoch, epochs * perEpoch + 10),
-      epochs.toLong, versionHint = Some(1))
+    Apply.applyEpoch(spark, table, env(epochs * perEpoch, epochs * perEpoch + 10), epochs.toLong)
     val probe = table.readKey(spark, "r0", "p0")
     assert(probe.count() == 1)
   }

@@ -6,9 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc._
 
 /** Mid-stream schema evolution: the log ramps v1 -> v2 (add stars) ->
-  * v3 (rename to stargazers) -> v4 (widen to long) across epochs; the
-  * lake's delta files must physically carry the era schemas, and the
-  * aligned final state must match the oracle fold.
+  * v3 (rename to stargazers) -> v4 (widen to long) across epochs; every
+  * epoch is written at the current schema, groups an earlier engine
+  * wrote at an older era still read through their per-group version,
+  * and the aligned final state must match the oracle fold.
   */
 class SchemaEvolutionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -26,24 +27,18 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     assert(SchemaRegistry.physicalSchema(4)("stargazers").dataType.typeName == "long")
   }
 
-  test("evolving replay matches oracle; files carry era schemas") {
+  test("evolving replay matches oracle; groups at the current schema") {
     val dir = TestSpark.tmpDir("cdc-evolve")
     // epochs aligned with the ramp so early epochs are pure v1
     Pipeline.runBatchEpochs(spark, cfg, s"$dir/t", epochs = 8)
     val table = new LakeTable(s"$dir/t")
 
-    // physical era check: at least one delta group written WITHOUT any
-    // stars/stargazers column, at least one WITH stars (int, v2 era),
-    // and at least one WITH stargazers
+    // pure-v1 epochs included: the apply stage writes one schema
     val snap = table.latest().get
-    assert(snap.schemaVersion == 4)
-    val groupSchemas = snap.groups.map { g =>
-      spark.read.parquet(s"${table.root}/${g.dir}").schema.fieldNames.toSet
-    }
-    assert(groupSchemas.exists(s => !s.contains("stars") && !s.contains("stargazers")),
-      "expected a pure-v1 delta group")
-    assert(groupSchemas.exists(_.contains("stars")), "expected a v2-era delta group")
-    assert(groupSchemas.exists(_.contains("stargazers")), "expected a v3+/era delta group")
+    assert(snap.schemaVersion == SchemaRegistry.maxVersion)
+    assert(snap.groups.size == 8)
+    assert(snap.groups.forall(_.schemaVersion == SchemaRegistry.maxVersion),
+      snap.groups.map(_.schemaVersion))
 
     // logical check: aligned final state equals oracle
     val got = table.read(spark)
@@ -68,24 +63,28 @@ class SchemaEvolutionSpec extends AnyFunSuite {
   test("group reads with the manifest's schema equal schema-inferred reads, row for row") {
     import spark.implicits._
     val table = new LakeTable(TestSpark.tmpDir("cdc-group-schema"))
-    def apply(epoch: Long, version: Int, rows: Seq[(String, Long, String)]): Unit = {
-      val env = rows.map { case (op, lsn, after) =>
+    def env(version: Int, rows: Seq[(String, Long, String)]): DataFrame =
+      rows.map { case (op, lsn, after) =>
         (op, lsn, new java.sql.Timestamp(1700000000000L + lsn), version, "r", s"p${lsn % 10}",
           null: String, after)
       }.toDF("op", "lsn", "ts", "schemaVersion", "repo", "path", "before", "after")
-      Apply.applyEpoch(spark, table, env, epoch, versionHint = Some(version))
-    }
+    def apply(epoch: Long, version: Int, rows: Seq[(String, Long, String)]): Unit =
+      Apply.applyEpoch(spark, table, env(version, rows), epoch)
     def v1(lsn: Long) = s"""{"commit":"c$lsn","lang":"en","content":"b$lsn"}"""
-    // a base group (v1 rows compacted at the current schema), then a v1
-    // delta group with a delete and a v4 delta group with longs past 2^31
+    // a base group (v1 rows compacted at the current schema); a v1 delta
+    // group with a delete, written at its own era as an earlier engine
+    // wrote it; a v4 delta group with longs past 2^31; then a v1-labelled
+    // epoch after the v4 one, over two of its keys
     apply(0L, 1, (0L until 10L).map(l => ("I", l, v1(l))))
     table.compact(spark)
-    apply(1L, 1, (10L until 15L).map(l => ("U", l, v1(l))) :+ (("D", 15L, null: String)))
+    table.upsert(Apply.normalize(
+      env(1, (10L until 15L).map(l => ("U", l, v1(l))) :+ (("D", 15L, null: String)))), 1L, 1)
     apply(2L, 4, (13L until 18L).map(l =>
       ("U", l + 10L, s"""{"commit":"c$l","lang":"de","content":"v4","stargazers":${5000000000L + l}}""")))
+    apply(3L, 1, Seq(("U", 36L, v1(36L)), ("U", 37L, v1(37L))))
     val snap = table.latest().get
     assert(snap.groups.map(g => (g.kind, g.schemaVersion)) ==
-      Seq(("base", 4), ("delta", 1), ("delta", 4)))
+      Seq(("base", 4), ("delta", 1), ("delta", 4), ("delta", 4)))
 
     val inferred = snap.groups.map(g =>
       SchemaRegistry.alignToCurrent(spark.read.parquet(s"${table.root}/${g.dir}")))
@@ -102,7 +101,12 @@ class SchemaEvolutionSpec extends AnyFunSuite {
       assert(rows(got) == rows(want))
     }
     sameRows(table.read(spark), inferredState)
-    sameRows(table.readChanges(spark, snap.version - 2L, snap.version), inferredChanges)
-    assert(table.read(spark).filter(col("stargazers") > Int.MaxValue).count() == 5L)
+    sameRows(table.readChanges(spark, snap.version - 3L, snap.version), inferredChanges)
+    assert(table.read(spark).filter(col("stargazers") > Int.MaxValue).count() == 3L)
+    // the v1-labelled epoch's keys read its payload, with null stargazers
+    val late = table.read(spark).filter(col("path").isin("p6", "p7"))
+      .select("lsn", "content", "stargazers").orderBy("lsn").collect().toSeq
+    assert(late.map(r => (r.getLong(0), r.getString(1), r.isNullAt(2))) ==
+      Seq((36L, "b36", true), (37L, "b37", true)))
   }
 }
